@@ -4435,7 +4435,7 @@ object SparkEntry {
       ops.Hnsw.buildGraph(base, numSegments = 4).write.mode("overwrite").parquet(path)
       ops.Hnsw.buildGraph(delta, numSegments = 2, segOffset = 4)
         .write.mode("append").parquet(path)
-      Similarity.recallGate(ops.Hnsw.probeGraph(s.read.parquet(path), q, k = 10),
+      Similarity.recallGate(ops.Hnsw.probeGraph(ops.Hnsw.readGraph(s, path), q, k = 10),
         Similarity.bruteTopK(q, emb, k = 10), k = 10, floor = 0.9)
     }),
     // ---- HNSW segment compaction (the Lucene merge policy): three
@@ -4468,7 +4468,7 @@ object SparkEntry {
           p
         })
       }
-      val merged = ops.Hnsw.compactSegments(s.read.parquet(path),
+      val merged = ops.Hnsw.compactSegments(ops.Hnsw.readGraph(s, path),
         maxRows = emb.count() / 8, numSegments = 2, segOffset = 100)
       val cmpPath = java.nio.file.Files.createTempDirectory("graft-hnsw-cmp2").toString
       merged.write.mode("overwrite").parquet(cmpPath)
@@ -4497,7 +4497,7 @@ object SparkEntry {
           } finally s.conf.unset("spark.graft.hnsw.mergeAt")
         })
       }
-      Similarity.recallGate(ops.Hnsw.probeGraph(s.read.parquet(cmpPath), q, k = 10),
+      Similarity.recallGate(ops.Hnsw.probeGraph(ops.Hnsw.readGraph(s, cmpPath), q, k = 10),
           Similarity.bruteTopK(q, emb, k = 10), k = 10, floor = 0.9)
         .withColumn("auto_bounded_ok", lit(if (autoOk) 1 else 0))
     }),

@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Result, VectorSchema}
 import graft.embed.{EmbedOps, Embedder, Embedders}
 import graft.filters.Filters
-import graft.functions.{JsonUuid5, VectorFunctions}
+import graft.functions.{JsonUuid5, RoundPortableExpr, VectorFunctions}
 import graft.table.VectorTable
 
 /** The engine facade — same capabilities as the reference's
@@ -87,7 +87,11 @@ class VectorDB(
     // tombstone-widened probe width, CAPPED at WidenCap·k: None past
     // the cap routes the query down the exact path (see probeWidth)
     val widened = if (useIndex && filters.isEmpty) probeWidth(k) else None
-    table.hnswGraph match {
+    // the graph is opened only for a route that can probe it: an exact
+    // query never touches the index sidecar or lists the .hnsw files
+    val hnsw =
+      if (widened.isDefined || (useIndex && indexFilteredProbe)) table.hnswGraph else None
+    hnsw match {
       case Some(graph) if widened.isDefined => indexedKnn(graph, vec, k, widened.get)
       // OPT-IN extension past the reference contract: route a FILTERED
       // query through the selectivity-adaptive graph probe
@@ -157,7 +161,7 @@ class VectorDB(
     def liveSurrogates = table.df.select(
       xxhash64(col(VectorSchema.ID)).as("vec_id"),
       col(VectorSchema.EMBEDDING).as("embedding"))
-    val hits = table.hnswGraph match {
+    val hits = (if (widened.isDefined) table.hnswGraph else None) match {
       case Some(graph) if widened.isDefined =>
         val meta = table.hnswIndexMeta.get
         ops.Hnsw.probeGraphBulk(graph, qdf, widened.get, m = meta.m, excludeSelf = false)
@@ -226,32 +230,49 @@ class VectorDB(
     queryByVectors(embedded, k, filters, useVariant, useIndex)
   }
 
-  /** The persisted-index probe: beam-search every graph segment for the
-    * query (map-only over the graph table — index and vectors
-    * co-reside, so no corpus distance pass and no embedding-column
-    * scan), then join the k surfaced surrogate ids back to the table
-    * for metadata. The metadata fetch is a broadcast of k ids against
-    * an id+metadata column-pruned scan; distances come from the probe's
-    * exact-kernel rerank (portable-rounded to 4 decimals — the engine's
-    * cross-engine distance contract). A surrogate collision merely adds
-    * a spurious candidate that the final distance-ordered limit drops;
-    * tombstoned rows drop at the metadata join (their ids left the
-    * table view). */
+  /** The shared tail of every single-query index route: the probe's
+    * surfaced surrogate ids (`neighbor_id`) broadcast into a join with
+    * an id+metadata column-pruned scan of `view`, then the reference's
+    * DISTINCT … ORDER BY distance, id LIMIT k (duckvdb.py:111-120).
+    * `distance` is the probe's exact column or a kernel recomputation
+    * over the view's embedding. Tombstoned or filtered-out rows drop at
+    * the join (their ids left the view); a surrogate collision merely
+    * adds a spurious candidate that the limit drops. */
+  private def withMetadata(view: DataFrame, hits: DataFrame, distance: Column,
+      k: Int): Dataset[Result] = {
+    import spark.implicits._
+    view
+      .withColumn("__h", xxhash64(col(VectorSchema.ID)))
+      .join(broadcast(hits.withColumnRenamed("neighbor_id", "__h")), Seq("__h"))
+      .select(col(VectorSchema.ID), col(VectorSchema.METADATA), distance.as("distance"))
+      .dropDuplicates()
+      .orderBy(col("distance").asc, col(VectorSchema.ID).asc)
+      .limit(k)
+      .as[Result]
+  }
+
+  /** Exact distance to `vec` over the view's embedding column — the
+    * distance of the routes whose probe keeps no exact score. */
+  private def kernelDistance(vec: Array[Float]): Column =
+    RoundPortableExpr.r(
+      VectorFunctions.cosineDistance(col(VectorSchema.EMBEDDING), typedlit(vec)), 4)
+
+  /** The persisted-index probe, lazy end to end: nothing runs until the
+    * returned Dataset does. [[graft.ops.Hnsw.probeSegments]] is one
+    * map-only pass over the graph table (index and vectors co-reside):
+    * each partition beam-searches its segments and scores the surfaced
+    * ids exactly (portable-rounded to 4 decimals — the engine's
+    * cross-engine distance contract), keeping its own top-kProbe. Those
+    * candidates broadcast straight into the metadata join, whose final
+    * distance-ordered limit is the only global trim, so the route needs
+    * no shuffle of its own and never scans the corpus embeddings. */
   private def indexedKnn(
       graph: DataFrame, vec: Array[Float], k: Int, kProbe: Int): Dataset[Result] = {
     import spark.implicits._
     val meta = table.hnswIndexMeta.get
     val q = Seq((0L, vec)).toDF("vec_id", "embedding")
-    val hits = ops.Hnsw.probeGraph(graph, q, kProbe, m = meta.m, excludeSelf = false)
-      .select(col("neighbor_id").as("__h"), col("distance"))
-    table.df
-      .withColumn("__h", xxhash64(col(VectorSchema.ID)))
-      .join(broadcast(hits), Seq("__h"))
-      .select(col(VectorSchema.ID), col(VectorSchema.METADATA), col("distance"))
-      .dropDuplicates()
-      .orderBy(col("distance").asc, col(VectorSchema.ID).asc)
-      .limit(k)
-      .as[Result]
+    val hits = ops.Hnsw.probeSegments(graph, q, kProbe, m = meta.m, excludeSelf = false)
+    withMetadata(table.df, hits, col("distance"), k)
   }
 
   /** The persisted IVF-PQ probe: [[graft.ops.IvfPq.search]] prunes the
@@ -282,18 +303,7 @@ class VectorDB(
     val hits = ops.IvfPq.search(q, ix, codes, corpus, kProbe,
         nProbe = meta.nProbe, shortlistFactor = meta.shortlistFactor,
         nProbeMax = math.min(ix.nCells, 2 * meta.nProbe), adaptRatio = 1.5)
-      .select(col("neighbor_id").as("__h"))
-    live
-      .withColumn("__h", xxhash64(col(VectorSchema.ID)))
-      .join(broadcast(hits), Seq("__h"))
-      .select(col(VectorSchema.ID), col(VectorSchema.METADATA),
-        graft.functions.RoundPortableExpr.r(
-          VectorFunctions.cosineDistance(col(VectorSchema.EMBEDDING), typedlit(vec)), 4)
-          .as("distance"))
-      .dropDuplicates()
-      .orderBy(col("distance").asc, col(VectorSchema.ID).asc)
-      .limit(k)
-      .as[Result]
+    withMetadata(live, hits, kernelDistance(vec), k)
   }
 
   /** The persisted BQ probe: the Hamming → sign-asymmetric → exact
@@ -314,15 +324,7 @@ class VectorDB(
     val hits = ops.Similarity.bqTopKFromCodes(codes, q, corpus, kProbe,
         coarseFactor = meta.coarseFactor, fineFactor = meta.fineFactor,
         center = Some(meta.mean).filter(_.nonEmpty))
-      .select(col("neighbor_id").as("__h"), col("distance"))
-    live
-      .withColumn("__h", xxhash64(col(VectorSchema.ID)))
-      .join(broadcast(hits), Seq("__h"))
-      .select(col(VectorSchema.ID), col(VectorSchema.METADATA), col("distance"))
-      .dropDuplicates()
-      .orderBy(col("distance").asc, col(VectorSchema.ID).asc)
-      .limit(k)
-      .as[Result]
+    withMetadata(live, hits, col("distance"), k)
   }
 
   /** Filtered probe through the persisted IVF-PQ tier
@@ -349,18 +351,7 @@ class VectorDB(
     val hits = ops.IvfPq.searchFiltered(q, ix, codes, corpus, k,
         eligible = corpus.select(col("vec_id")),
         nProbe = meta.nProbe, shortlistFactor = meta.shortlistFactor)
-      .select(col("neighbor_id").as("__h"))
-    filteredView
-      .withColumn("__h", xxhash64(col(VectorSchema.ID)))
-      .join(broadcast(hits), Seq("__h"))
-      .select(col(VectorSchema.ID), col(VectorSchema.METADATA),
-        graft.functions.RoundPortableExpr.r(
-          VectorFunctions.cosineDistance(col(VectorSchema.EMBEDDING), typedlit(vec)), 4)
-          .as("distance"))
-      .dropDuplicates()
-      .orderBy(col("distance").asc, col(VectorSchema.ID).asc)
-      .limit(k)
-      .as[Result]
+    withMetadata(filteredView, hits, kernelDistance(vec), k)
   }
 
   /** Filtered probe through the persisted BQ tier: a CODE-SIDE
@@ -389,15 +380,7 @@ class VectorDB(
     val hits = ops.Similarity.bqTopKFromCodes(eligCodes, q, corpus, k,
         coarseFactor = meta.coarseFactor, fineFactor = meta.fineFactor,
         center = Some(meta.mean).filter(_.nonEmpty))
-      .select(col("neighbor_id").as("__h"), col("distance"))
-    filteredView
-      .withColumn("__h", xxhash64(col(VectorSchema.ID)))
-      .join(broadcast(hits), Seq("__h"))
-      .select(col(VectorSchema.ID), col(VectorSchema.METADATA), col("distance"))
-      .dropDuplicates()
-      .orderBy(col("distance").asc, col(VectorSchema.ID).asc)
-      .limit(k)
-      .as[Result]
+    withMetadata(filteredView, hits, col("distance"), k)
   }
 
   /** Filtered probe through the persisted graph: the predicate compiles
@@ -426,15 +409,7 @@ class VectorDB(
     // count instead of two graph-sized jobs per query
     val hits = ops.Hnsw.probeGraphFiltered(graph, q, k, eligible,
         m = meta.m, excludeSelf = false, totalHint = meta.rows)
-      .select(col("neighbor_id").as("__h"), col("distance"))
-    filteredView
-      .withColumn("__h", xxhash64(col(VectorSchema.ID)))
-      .join(broadcast(hits), Seq("__h"))
-      .select(col(VectorSchema.ID), col(VectorSchema.METADATA), col("distance"))
-      .dropDuplicates()
-      .orderBy(col("distance").asc, col(VectorSchema.ID).asc)
-      .limit(k)
-      .as[Result]
+    withMetadata(filteredView, hits, col("distance"), k)
   }
 
   /** Tombstone-widened probe width, CAPPED at [[VectorDB.WidenCap]]·k.

@@ -2,11 +2,14 @@ package graft.ops
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.functions.{RoundPortableExpr, VectorFunctions}
+import graft.functions.{PortableRounding, VectorKernels}
 
 /** Segment-local HNSW (Malkov & Yashunin 2018, arXiv:1603.09320) — the
   * graph index the reference builds on bulk load
@@ -29,11 +32,11 @@ import graft.functions.{RoundPortableExpr, VectorFunctions}
   * membership is hash-partitioning on the id column; insertion order is
   * ids ascending within a segment; a node's level comes from splitmix64
   * of its id (not an RNG stream, so it is independent of row order);
-  * all heap orderings tie-break on node id. The global merge re-scores
-  * every surfaced candidate through the SAME codegen cosine kernel +
-  * portable rounding as [[Similarity.bruteTopK]], so the HNSW layer
-  * only decides WHICH ≤ segments·k candidates survive — the returned
-  * distances and ordering are engine-reproducible.
+  * all heap orderings tie-break on node id. Every surfaced candidate is
+  * scored inside its segment by the SAME cosine kernel + portable
+  * rounding as [[Similarity.bruteTopK]], so the HNSW layer only decides
+  * WHICH ≤ segments·k candidates survive — the returned distances and
+  * ordering are engine-reproducible.
   */
 object Hnsw {
 
@@ -48,6 +51,23 @@ object Hnsw {
 
   def autoSegments(nRows: Long): Int =
     math.max(1L, (nRows + RowsPerSegment - 1) / RowsPerSegment).toInt
+
+  /** On-disk schema of a persisted graph ([[buildGraph]]'s rows). Every
+    * graph read passes it ([[readGraph]]): opening the graph then only
+    * lists its files. Without it every open runs Spark's parquet
+    * schema-inference job — on the serving path, one job per query. */
+  val GraphSchema: StructType =
+    StructType.fromDDL("seg INT, id BIGINT, adj ARRAY<ARRAY<BIGINT>>, emb ARRAY<FLOAT>")
+
+  def readGraph(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(GraphSchema).parquet(path)
+
+  /** The engine's distance contract — bit-identical to the
+    * `round_portable(cosine_distance(c_emb, q_emb), 4)` column of
+    * [[Similarity.bruteTopK]]: the same kernel, the same rounding. */
+  private def exactDistance(candidate: Array[Float], q: ArrayData): Double =
+    PortableRounding.round(
+      VectorKernels.cosineDistance(UnsafeArrayData.fromPrimitiveArray(candidate), q), 4)
 
   /** splitmix64 finalizer — the repo's standard deterministic hash
     * (same family as [[graft.functions.LshBucketsExpr]]). */
@@ -229,36 +249,61 @@ object Hnsw {
       if (l > topLevel) { entry = node; topLevel = l }
     }
 
-    /** Top-k node ids for query `q` with beam `efSearch` (≥ k). */
-    def search(q: Array[Float], k: Int, efSearch: Int): Array[Long] = {
+    /** Top-k (id, distance) for query `q` with beam `efSearch` (≥ k):
+      * the beam picks the nodes, [[exactDistance]] scores them against
+      * the segment's own vectors. */
+    def search(q: Array[Float], k: Int, efSearch: Int): Array[(Long, Double)] = {
       if (entry < 0) return Array.empty
       var ep = entry
       var lev = topLevel
       while (lev > 0) { ep = greedy(q, ep, lev); lev -= 1 }
+      val qa = UnsafeArrayData.fromPrimitiveArray(q)
       searchLayer(q, ep, math.max(efSearch, k), 0)
-        .take(k).map { case (_, n) => ids(n) }.toArray
+        .take(k).map { case (_, n) => (ids(n), exactDistance(vecs(n), qa)) }.toArray
     }
   }
 
-  /** Build the per-partition index over an iterator of (id, vec) and
-    * surface each broadcast query's local top-k ids. */
-  private def segmentSearch(
-      rows: Iterator[(Long, Array[Float])], panel: Array[(Long, Array[Float])],
-      k: Int, m: Int, efConstruction: Int, efSearch: Int): Iterator[(Long, Long)] = {
-    val seg = rows.toArray.sortBy(_._1)
-    if (seg.isEmpty) Iterator.empty
-    else {
-      val idx = new SegmentIndex(seg.map(_._1), seg.map(_._2), m, efConstruction)
-      var i = 0
-      while (i < seg.length) { idx.insert(i); i += 1 }
-      panel.iterator.flatMap { case (qid, qv) =>
-        idx.search(qv, k, efSearch).iterator.map(nid => (qid, nid))
+  private type GraphRow = (Int, Long, Array[Array[Long]], Array[Float])
+
+  private val byDistance: Ordering[(Double, Long)] =
+    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+
+  /** One persisted segment's rows → its searchable graph (no rebuild). */
+  private def restoreSegment(rows: Array[GraphRow], m: Int): SegmentIndex = {
+    val sorted = rows.sortBy(_._2)
+    val idx = new SegmentIndex(sorted.map(_._2), sorted.map(_._4), m, efConstruction = m)
+    idx.restore(sorted.map(_._3))
+    idx
+  }
+
+  /** The one scoring path of every probe: beam-search each query against
+    * one segment and emit the scored (query_id, neighbor_id, distance)
+    * hits. Self-exclusion searches one extra slot, so the query's own
+    * segment still contributes k real neighbors once its self hit drops
+    * (with few segments the lost slot is not masked by other segments). */
+  private def scoreSegment(
+      idx: SegmentIndex, panel: Iterator[(Long, Array[Float])],
+      k: Int, efSearch: Int, excludeSelf: Boolean): Iterator[(Long, Long, Double)] =
+    panel.flatMap { case (qid, qv) =>
+      idx.search(qv, k + (if (excludeSelf) 1 else 0), efSearch).iterator.collect {
+        case (nid, d) if !excludeSelf || nid != qid => (qid, nid, d)
       }
     }
+
+  /** Per-query top-k over scored hits from many segments, ties on the
+    * smaller neighbor id. */
+  private def topKPerQuery(hits: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("distance").asc, col("neighbor_id").asc)
+    hits.withColumn("rank", row_number().over(w)).where(col("rank") <= k).drop("rank")
   }
 
-  /** Segmented HNSW top-k with exact kernel rerank of the surfaced
-    * candidates. Same (query_id, neighbor_id, distance) contract as
+  private def collectPanel(queries: DataFrame, idCol: String, embCol: String)
+      : Array[(Long, Array[Float])] =
+    queries.select(col(idCol), col(embCol)).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
+
+  /** Segmented HNSW top-k, every surfaced candidate scored in its
+    * segment. Same (query_id, neighbor_id, distance) contract as
     * [[Similarity.bruteTopK]].
     *
     * `queries` must be a bounded serving panel (it is collected and
@@ -274,20 +319,21 @@ object Hnsw {
     val spark = candidates.sparkSession
     import spark.implicits._
     val segs = if (numSegments > 0) numSegments else autoSegments(candidates.count())
-    val panel = queries.select(col(idCol), col(embCol)).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(panel)
-    // self-exclusion happens in the rerank, AFTER the per-segment top-k —
-    // surface one extra candidate so the query's own segment still
-    // contributes k real neighbors (with few segments the lost slot is
-    // not masked by the cross-segment candidate union)
-    val segK = k + (if (excludeSelf) 1 else 0)
-    val pairs = candidates.select(col(idCol).as("_1"), col(embCol).as("_2"))
+    val bc = spark.sparkContext.broadcast(collectPanel(queries, idCol, embCol))
+    val hits = candidates.select(col(idCol).as("_1"), col(embCol).as("_2"))
       .repartition(segs, col("_1"))
       .as[(Long, Array[Float])]
-      .mapPartitions(it => segmentSearch(it, bc.value, segK, m, efConstruction, efSearch))
-      .toDF("query_id", "neighbor_id")
-    rerank(pairs, queries, candidates, k, idCol, embCol, excludeSelf)
+      .mapPartitions { it =>
+        val seg = it.toArray.sortBy(_._1)
+        if (seg.isEmpty) Iterator.empty
+        else {
+          val idx = new SegmentIndex(seg.map(_._1), seg.map(_._2), m, efConstruction)
+          var i = 0
+          while (i < seg.length) { idx.insert(i); i += 1 }
+          scoreSegment(idx, bc.value.iterator, k, efSearch, excludeSelf)
+        }
+      }.toDF("query_id", "neighbor_id", "distance")
+    topKPerQuery(hits, k)
   }
 
   /** Segment-append (the Lucene pattern, and the reference's own
@@ -338,43 +384,51 @@ object Hnsw {
       }.toDF("seg", "id", "adj", "emb")
   }
 
-  /** Probe a persisted graph. The segment rows carry their vectors
-    * (the Lucene segment layout — index and data co-reside), so the
-    * probe is MAP-ONLY over the graph table: one shuffle-free pass
-    * restores each segment's adjacency and beam-searches the broadcast
-    * panel; the only join is the O(queries · segments · k) kernel
-    * rerank against the surfaced candidate ids. `m` must match the
-    * build. */
+  /** Probe a persisted graph: [[probeSegments]]'s map-only pass plus
+    * the per-query window that trims its partition-local top-k lists to
+    * the global top-k. `m` must match the build. */
   def probeGraph(
+      graph: DataFrame, queries: DataFrame, k: Int,
+      m: Int = 16, efSearch: Int = 96,
+      idCol: String = "vec_id", embCol: String = "embedding",
+      excludeSelf: Boolean = true): DataFrame =
+    topKPerQuery(probeSegments(graph, queries, k, m, efSearch, idCol, embCol, excludeSelf), k)
+
+  /** The serving probe's single MAP-ONLY pass over the graph table. The
+    * segment rows carry their vectors (the Lucene segment layout — index
+    * and data co-reside), so each graph partition restores its
+    * segments, beam-searches the broadcast panel and scores every
+    * surfaced id against the segment's own `emb` — no shuffle, no join.
+    * Each partition keeps its own top-k per query (distance, then id),
+    * so the output is a superset of the global top-k with exact
+    * distances: a caller that ranks again (the facade's
+    * `ORDER BY distance, id LIMIT k`) needs no window. `queries` must be
+    * a bounded serving panel (collected and broadcast); bulk batches go
+    * through [[probeGraphBulk]]. */
+  private[graft] def probeSegments(
       graph: DataFrame, queries: DataFrame, k: Int,
       m: Int = 16, efSearch: Int = 96,
       idCol: String = "vec_id", embCol: String = "embedding",
       excludeSelf: Boolean = true): DataFrame = {
     val spark = graph.sparkSession
     import spark.implicits._
-    val panel = queries.select(col(idCol), col(embCol)).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(panel)
-    val segRows = graph
-      .select(col("seg").as("_1"), col("id").as("_2"), col("adj").as("_3"), col("emb").as("_4"))
-      .as[(Int, Long, Array[Array[Long]], Array[Float])]
-    val pairs = segRows.mapPartitions { it =>
+    val bc = spark.sparkContext.broadcast(collectPanel(queries, idCol, embCol))
+    graphRows(graph).mapPartitions { it =>
       // parquet preserves the build's file-per-segment layout, but a
       // reader may coalesce files — group by seg so each graph
       // restores whole regardless of the read partitioning
-      it.toArray.groupBy(_._1).iterator.flatMap { case (_, rows) =>
-        val sorted = rows.sortBy(_._2)
-        val idx = new SegmentIndex(sorted.map(_._2), sorted.map(_._4), m, efConstruction = m)
-        idx.restore(sorted.map(_._3))
-        bc.value.iterator.flatMap { case (qid, qv) =>
-          // +1 under self-exclusion: see searchTopK
-          idx.search(qv, k + (if (excludeSelf) 1 else 0), efSearch)
-            .iterator.map(nid => (qid, nid))
-        }
-      }
-    }.toDF("query_id", "neighbor_id")
-    val vectors = graph.select(col("id").as(idCol), col("emb").as(embCol))
-    rerank(pairs, queries, vectors, k, idCol, embCol, excludeSelf)
+      it.toArray.groupBy(_._1).valuesIterator
+        .flatMap(rows => scoreSegment(restoreSegment(rows, m), bc.value.iterator,
+          k, efSearch, excludeSelf))
+        .toArray.groupBy(_._1).valuesIterator
+        .flatMap(_.sortBy(h => (h._3, h._2))(byDistance).take(k))
+    }.toDF("query_id", "neighbor_id", "distance")
+  }
+
+  private def graphRows(graph: DataFrame) = {
+    import graph.sparkSession.implicits._
+    graph.select(col("seg").as("_1"), col("id").as("_2"), col("adj").as("_3"), col("emb").as("_4"))
+      .as[GraphRow]
   }
 
   /** Metadata-FILTERED probe with selectivity-adaptive oversampling —
@@ -418,17 +472,15 @@ object Hnsw {
       Similarity.bruteTopK(queries, vecs, k, idCol, embCol, excludeSelf)
     } else {
       val kEff = math.min(total, math.ceil(oversample * k / sel).toLong).toInt
-      val cands = probeGraph(graph, queries, kEff, m,
+      // the partition-local candidate lists need no global trim of
+      // their own: the rank after the eligibility join trims to k
+      val cands = probeSegments(graph, queries, kEff, m,
         math.max(efSearch, 2 * kEff), idCol, embCol, excludeSelf)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(col("distance").asc, col("neighbor_id").asc)
       // explicit select: the Seq-key join reorders columns (key first)
       // and both branches must present the same (query, neighbor,
       // distance) contract
-      cands.join(elig.select(col("id").as("neighbor_id")), Seq("neighbor_id"))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("distance"))
+      topKPerQuery(cands.join(elig.select(col("id").as("neighbor_id")), Seq("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"), col("distance")), k)
     }
   }
 
@@ -443,14 +495,14 @@ object Hnsw {
     * queries are exploded map-side to one probe row per (query,
     * segment) — the distinct segment ids are a bounded int list, one
     * tiny job — and CO-GROUPED with the graph rows on the segment id.
-    * Each group restores its segment's adjacency once and beam-searches
-    * its co-located probe rows; only (query_id, neighbor_id) pairs
-    * leave the group. Shuffle cost: graph rows once (zero when the
-    * graph table is already seg-partitioned) + queries × segments probe
-    * rows; per-query work is O(segments · log segRows) exactly like the
-    * serving path, so wall clock is linear in batch size. The rerank
-    * tail joins without a broadcast hint — Spark broadcasts a small
-    * query side on its own and shuffle-joins a bulk one. */
+    * Each group restores its segment's adjacency once, beam-searches
+    * its co-located probe rows and scores their hits against the
+    * segment's own vectors; only scored (query_id, neighbor_id,
+    * distance) triples leave the group, and a per-query window merges
+    * them. Shuffle cost: graph rows once (zero when the graph table is
+    * already seg-partitioned) + queries × segments probe rows;
+    * per-query work is O(segments · log segRows) exactly like the
+    * serving path, so wall clock is linear in batch size. */
   def probeGraphBulk(
       graph: DataFrame, queries: DataFrame, k: Int,
       m: Int = 16, efSearch: Int = 96,
@@ -462,27 +514,14 @@ object Hnsw {
     val fan = queries
       .select(explode(lit(segIds)).as("seg"), col(idCol).as("qid"), col(embCol).as("qv"))
       .as[(Int, Long, Array[Float])]
-    val segRows = graph
-      .select(col("seg"), col("id"), col("adj"), col("emb"))
-      .as[(Int, Long, Array[Array[Long]], Array[Float])]
-    val pairs = segRows.groupByKey(_._1).cogroup(fan.groupByKey(_._1)) {
+    val hits = graphRows(graph).groupByKey(_._1).cogroup(fan.groupByKey(_._1)) {
       (_, rowIt, qIt) =>
         val rows = rowIt.toArray
         if (rows.isEmpty) Iterator.empty
-        else {
-          val sorted = rows.sortBy(_._2)
-          val idx = new SegmentIndex(sorted.map(_._2), sorted.map(_._4), m, efConstruction = m)
-          idx.restore(sorted.map(_._3))
-          qIt.flatMap { case (_, qid, qv) =>
-            // +1 under self-exclusion: see searchTopK
-            idx.search(qv, k + (if (excludeSelf) 1 else 0), efSearch)
-              .iterator.map(nid => (qid, nid))
-          }
-        }
-    }.toDF("query_id", "neighbor_id")
-    val vectors = graph.select(col("id").as(idCol), col("emb").as(embCol))
-    rerank(pairs, queries, vectors, k, idCol, embCol, excludeSelf,
-      hintBroadcastQueries = false)
+        else scoreSegment(restoreSegment(rows, m), qIt.map { case (_, qid, qv) => (qid, qv) },
+          k, efSearch, excludeSelf)
+    }.toDF("query_id", "neighbor_id", "distance")
+    topKPerQuery(hits, k)
   }
 
   /** Lucene-style segment merge policy: HNSW graphs don't merge
@@ -519,11 +558,12 @@ object Hnsw {
     * silently merge two graphs at restore time and degrade recall).
     * Swap is delete-then-rename — the single-writer contract of the
     * table layer (SURVEY.md §7.4); readers mid-swap belong to the same
-    * job. Returns whether a compaction ran. */
+    * job. A failed rename throws rather than leave the graph deleted
+    * behind a live sidecar. Returns whether a compaction ran. */
   def compactIfNeeded(spark: org.apache.spark.sql.SparkSession, graphPath: String,
       maxRows: Long, mergeAt: Int,
       m: Int = 16, efConstruction: Int = 128): Boolean = {
-    val graph = spark.read.parquet(graphPath)
+    val graph = readGraph(spark, graphPath)
     val sizes = graph.groupBy(col("seg")).agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getInt(0), r.getLong(1)))
     val small = sizes.filter(_._2 <= maxRows)
@@ -539,30 +579,9 @@ object Hnsw {
       val tmp = new org.apache.hadoop.fs.Path(graphPath + "__compacting")
       merged.write.mode("overwrite").parquet(tmp.toString)
       fs.delete(p, true)
-      fs.rename(tmp, p)
+      if (!fs.rename(tmp, p))
+        throw new java.io.IOException(s"HNSW compaction: rename $tmp -> $p failed")
       true
     }
-  }
-
-  /** Exact rerank of surfaced (query_id, neighbor_id) pairs through the
-    * codegen cosine kernel + portable rounding — identical scoring path
-    * to [[Similarity.bruteTopK]], over O(queries · segments · k) rows. */
-  private def rerank(
-      pairs: DataFrame, queries: DataFrame, candidates: DataFrame, k: Int,
-      idCol: String, embCol: String, excludeSelf: Boolean,
-      hintBroadcastQueries: Boolean = true): DataFrame = {
-    val qDf = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"))
-    val w = Window.partitionBy("query_id").orderBy(col("distance").asc, col("neighbor_id").asc)
-    pairs
-      .where(if (excludeSelf) col("neighbor_id") =!= col("query_id") else lit(true))
-      .join(candidates.select(col(idCol).as("neighbor_id"), col(embCol).as("c_emb")),
-        Seq("neighbor_id"))
-      .join(if (hintBroadcastQueries) broadcast(qDf) else qDf, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        RoundPortableExpr.r(VectorFunctions.cosineDistance(col("c_emb"), col("q_emb")), 4)
-          .as("distance"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .drop("rank")
   }
 }

@@ -258,9 +258,12 @@ class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       val hits = scala.util.Try {
         hnswM(root) match {
           case Some(m) =>
-            val graph = spark.read.parquet(root + ".hnsw")
+            val graph = graft.ops.Hnsw.readGraph(spark, root + ".hnsw")
             val qg = Seq((0L, qvec.toFloatArray)).toDF("vec_id", "embedding")
-            graft.ops.Hnsw.probeGraph(graph, qg, kProbe, m = m, excludeSelf = false)
+            // the map-only pass's partition-local lists are a superset of
+            // the global top-kProbe; the exact scoring above the IN-filter
+            // ranks them, so no window is needed here
+            graft.ops.Hnsw.probeSegments(graph, qg, kProbe, m = m, excludeSelf = false)
               .select("neighbor_id").collect().map(_.getLong(0))
           case None => ivfpqParams(root) match {
             case Some((nProbe, slf)) =>

@@ -215,7 +215,7 @@ object AnnIngest {
     q.awaitTermination()
     val queries = emb.where(col("vec_id") < 10)
     Similarity.recallGate(
-      Hnsw.probeGraph(spark.read.parquet(s"$root/graph"), queries, k = 10),
+      Hnsw.probeGraph(Hnsw.readGraph(spark, s"$root/graph"), queries, k = 10),
       Similarity.bruteTopK(queries, emb, k = 10), k = 10, floor = 0.9)
   }
 }

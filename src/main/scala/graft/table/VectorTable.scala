@@ -144,17 +144,19 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
   }
 
   /** The persisted graph rows (seg, id, adj, emb), if an HNSW index has
-    * been built. Node ids are xxhash64 surrogates of the string id
-    * column (the graph kernel is Long-keyed); the query path joins the
-    * k surfaced surrogates back to the table, where a surrogate
-    * collision only costs a spurious candidate row that the final
-    * distance-ordered limit drops. */
+    * been built — read with the fixed [[graft.ops.Hnsw.GraphSchema]], so
+    * opening the graph costs a file listing, never a Spark job. Node ids
+    * are xxhash64 surrogates of the string id column (the graph kernel
+    * is Long-keyed); the query path joins the k surfaced surrogates
+    * back to the table, where a surrogate collision only costs a
+    * spurious candidate row that the final distance-ordered limit
+    * drops. */
   def hnswGraph: Option[DataFrame] =
     // existence-checked, not just meta-checked: a sidecar whose .hnsw
     // directory was lost must degrade the route to brute force, not
     // fail every query (indexed or not) at plan time
     if (hnswIndexMeta.isEmpty || !fs.exists(hnswGraphPath)) None
-    else Some(spark.read.parquet(hnswGraphPath.toString))
+    else Some(graft.ops.Hnsw.readGraph(spark, hnswGraphPath.toString))
 
   /** Long surrogate keys for the vector-index kernels (all three tiers
     * are Long-keyed): xxhash64 of the string id. The query path joins
@@ -188,10 +190,13 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     * ([[graft.ops.Hnsw.compactSegments]]): segments at or below
     * `maxRows` rebuild into fresh auto-sized graphs, larger survivors
     * pass through untouched. Run when inserts have accumulated enough
-    * delta segments to bloat the probe fan-out. */
+    * delta segments to bloat the probe fan-out. The graph swap is
+    * delete-then-rename; a failed rename throws before the sidecar
+    * advances — the graph is gone, and the caller must hear it rather
+    * than have queries fall back to the exact path in silence. */
   def compactHnswIndex(maxRows: Long = graft.ops.Hnsw.RowsPerSegment / 2): this.type = {
     hnswIndexMeta.foreach { meta =>
-      val graph = spark.read.parquet(hnswGraphPath.toString)
+      val graph = graft.ops.Hnsw.readGraph(spark, hnswGraphPath.toString)
       val smallRows = graph.groupBy(col("seg")).agg(count(lit(1)).as("n"))
         .where(col("n") <= maxRows).agg(sum(col("n"))).head.get(0)
       val nRebuild = Option(smallRows).map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -202,7 +207,8 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
         val tmp = new Path(root + ".hnsw__compacting")
         merged.write.mode("overwrite").parquet(tmp.toString)
         fs.delete(hnswGraphPath, true)
-        fs.rename(tmp, hnswGraphPath)
+        if (!fs.rename(tmp, hnswGraphPath))
+          throw new java.io.IOException(s"HNSW compaction: rename $tmp -> $hnswGraphPath failed")
         writeHnswMeta(meta.copy(
           segments = meta.segments + graft.ops.Hnsw.autoSegments(nRebuild)))
       }
@@ -227,7 +233,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
   private def autoCompactHnsw(): Unit = hnswIndexMeta.foreach { _ =>
     val mergeAt = spark.conf.get("spark.graft.hnsw.mergeAt", "8").toInt
     val maxRows = graft.ops.Hnsw.RowsPerSegment / 2
-    val nSmall = spark.read.parquet(hnswGraphPath.toString)
+    val nSmall = graft.ops.Hnsw.readGraph(spark, hnswGraphPath.toString)
       .groupBy(col("seg")).agg(count(lit(1)).as("n"))
       .where(col("n") <= maxRows).count()
     if (nSmall >= mergeAt) compactHnswIndex(maxRows)

@@ -72,6 +72,22 @@ class HnswSpec extends SparkSpec with Matchers {
     plan should include ("SerializeFromObject")
   }
 
+  test("probe distances are the exact brute-force distances, pair for pair") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-hnsw-dist").toString
+    ops.Hnsw.buildGraph(emb, numSegments = 4).write.mode("overwrite").parquet(path)
+    val g = Hnsw.readGraph(spark, path)
+    g.select("seg").distinct().count() should be >= 3L
+    val q = emb.where($"vec_id" < 10)
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+    val probed = triples(Hnsw.probeGraph(g, q, k = 10))
+    probed.length shouldBe 100
+    // every pair of the corpus, scored by the brute-force kernel path
+    val exact = triples(Similarity.bruteTopK(q, emb, k = emb.count().toInt)).toMap
+    probed.foreach { case (pair, d) => withClue(s"$pair:") { d shouldBe exact(pair) } }
+  }
+
   test("bulk probe equals the serving probe pair-for-pair, and auto-sizing is ~8k/segment") {
     import spark.implicits._
     Hnsw.autoSegments(1L) shouldBe 1
@@ -214,6 +230,20 @@ class HnswSpec extends SparkSpec with Matchers {
       Similarity.bruteTopK(q, corpus, k = 10), k = 10)
       .agg(min($"recall")).head.getDouble(0)
     recall should be >= 0.9
+  }
+
+  test("a failed graph-swap rename throws instead of silently dropping the graph") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-hnsw-swap").toString
+    (0 until 4).foreach { b =>
+      Hnsw.buildGraph(emb.where($"vec_id" % 4 === b), numSegments = 1, segOffset = b)
+        .write.mode("append").parquet(s"$dir/graph")
+    }
+    // four small segments at mergeAt = 4: the compaction runs, and its
+    // swap rename fails
+    val e = intercept[java.io.IOException](Hnsw.compactIfNeeded(spark,
+      SwapRenameFailingFs.on(spark, s"$dir/graph"), maxRows = 1000, mergeAt = 4))
+    e.getMessage should include ("rename")
   }
 
   test("streaming append: micro-batch delta segments are searchable, recall gate green") {

@@ -1,0 +1,26 @@
+package graft
+
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.spark.sql.SparkSession
+
+/** A local filesystem under its own scheme whose rename of a
+  * `*__compacting` directory — the HNSW graph swap — returns false.
+  * Every other rename (the parquet committer's) succeeds, so writes
+  * through it land normally and only the swap fails. */
+class SwapRenameFailingFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${SwapRenameFailingFs.Scheme}:///")
+  override def getScheme: String = SwapRenameFailingFs.Scheme
+  override def rename(src: Path, dst: Path): Boolean =
+    !src.getName.endsWith("__compacting") && super.rename(src, dst)
+}
+
+object SwapRenameFailingFs {
+  val Scheme = "failswap"
+
+  /** `path` (an absolute local path) through the failing filesystem. */
+  def on(spark: SparkSession, path: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.$Scheme.impl", classOf[SwapRenameFailingFs].getName)
+    s"$Scheme://$path"
+  }
+}

@@ -140,6 +140,57 @@ class VectorDBSpec extends SparkSpec with Matchers {
     db.table.hnswGraph shouldBe None
   }
 
+  test("unfiltered indexed query: no job while the Dataset is built, at most 3 to answer") {
+    val db = newDb("t6jobs")
+    db.insert(docs(40), embedField = Some("text"))
+    db.table.buildHnswIndex()
+    val qv = db.embedder.embed("spark joins")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      // the graph read (fixed schema) and the probe stay inside the
+      // returned lazy plan: building the Dataset runs nothing
+      val ds = db.queryByVector(qv, k = 5)
+      org.apache.spark.ListenerBusDrain(sc)
+      val atBuild = jobs.get
+      val rows = ds.collect()
+      org.apache.spark.ListenerBusDrain(sc)
+      atBuild shouldBe 0
+      rows.length shouldBe 5
+      jobs.get should be <= 3
+      // and the route really probed the index: the executed plan scans
+      // the graph directory (walked through the adaptive query stages —
+      // the plan string abbreviates long scan locations)
+      val scanned = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(ds.queryExecution.executedPlan) {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location.rootPaths
+        }.flatten.map(_.getName)
+      scanned should contain ("t6jobs.hnsw")
+    } finally sc.removeSparkListener(listener)
+    db.table.drop()
+  }
+
+  test("a failed HNSW graph-swap rename throws and leaves the sidecar unadvanced") {
+    val db = newDb("t6swap")
+    db.insert(docs(40), embedField = Some("text"))
+    db.table.buildHnswIndex()
+    db.insert(docs(50), embedField = Some("text")) // one small delta segment
+    val before = db.table.hnswIndexMeta.get
+    val failing = new graft.table.VectorTable(spark,
+      SwapRenameFailingFs.on(spark, db.table.root), db.dim)
+    val e = intercept[java.io.IOException](failing.compactHnswIndex(maxRows = 100))
+    e.getMessage should include ("rename")
+    db.table.hnswIndexMeta.get shouldBe before
+    db.table.drop()
+  }
+
   test("indexed query under merge-on-read deletes still returns k live rows") {
     val db = newDb("t6d")
     db.insert(docs(40), embedField = Some("text"))
