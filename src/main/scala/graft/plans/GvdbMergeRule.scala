@@ -202,6 +202,178 @@ private[graft] object GvdbRowLevel {
     }
   }
 
+  /** The keys of a touched-first commit, collected to the driver ONCE
+    * from the command's pinned frame ([[collectKeys]]): `preImage` =
+    * target ids the command rewrites or deletes, `postImage` = ids it
+    * writes, `matched` = one target id per (target, source) MERGE
+    * match. Every later step of the commit — the cardinality gate, the
+    * footer-range and Bloom probes, the victim scan, the ride-along
+    * anti-join — reads these arrays instead of running its own Spark
+    * action over the pinned frame. */
+  private[graft] final case class TouchedKeys(preImage: Array[String],
+      postImage: Array[String], matched: Array[String]) {
+    def touched: Array[String] = (preImage ++ postImage).distinct
+
+    /** The MERGE cardinality contract (MergeRowsExec / Delta): a target
+      * row matched by several source rows would be updated or deleted
+      * more than once — under the rewrite, emitted more than once. */
+    def requireSingleMatch(): Unit =
+      if (matched.length != matched.distinct.length) throw cardinalityViolation
+  }
+
+  private[graft] def cardinalityViolation = new IllegalStateException(
+    "MERGE_CARDINALITY_VIOLATION: the ON search condition matched a single " +
+      "row of the target table with multiple rows of the source; a matched " +
+      "row may be updated or deleted at most once")
+
+  /** One bounded collect of a touched-first command's key projection:
+    * three nullable string columns (pre-image id, post-image id,
+    * matched id), taken right after the command's eager checkpoint.
+    * None when the projection has more than `cap` rows — the commit
+    * then keeps its distributed gate, probe and scan. */
+  private[graft] def collectKeys(keys: org.apache.spark.sql.DataFrame,
+      cap: Int = graft.sources.IdBlooms.MaxProbeIds): Option[TouchedKeys] = {
+    val named = Seq("__gvdb_pre", "__gvdb_post", "__gvdb_matched")
+    // coalesce(1): ONE task pulls rows until the limit, where a plain
+    // limit-collect scans one partition first and then re-runs a job
+    // over the rest
+    val rows = keys.toDF(named: _*).where(named.map(col(_).isNotNull).reduce(_ || _))
+      .coalesce(1).limit(cap + 1).collect()
+    if (rows.length > cap) None
+    else {
+      def at(i: Int) = rows.flatMap(r => Option(r.getString(i)))
+      Some(TouchedKeys(at(0), at(1), at(2)))
+    }
+  }
+
+  /** Whether any id of `sorted` (ascending in Spark's binary string
+    * order) lies in [lo, hi] — the footer-range probe on the driver.
+    * Parquet min/max statistics and Spark's string comparison are both
+    * unsigned-byte UTF-8 order, which `String.compareTo` (UTF-16 code
+    * units) is not past the BMP. */
+  private def anyInRange(sorted: Array[org.apache.spark.unsafe.types.UTF8String],
+      lo: String, hi: String): Boolean = {
+    val l = org.apache.spark.unsafe.types.UTF8String.fromString(lo)
+    val i = java.util.Arrays.binarySearch(sorted.asInstanceOf[Array[AnyRef]], l)
+    val at = if (i >= 0) i else -i - 1
+    at < sorted.length &&
+      sorted(at).compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(hi)) <= 0
+  }
+
+  /** Which part files hold any touched id (the CoW victims), and a
+    * lazy frame of the ids those files carry (read from the victim
+    * files themselves, so the caller must consume it BEFORE it deletes
+    * them — the append and the tombstone fold both do). Pruned by
+    * parquet FOOTER id statistics: only the files whose id [min,max]
+    * overlaps a touched id (plus any stat-less file) have their id
+    * column READ — a CDC batch against a 100 TB table scans the
+    * candidate files, not the table. File ranges are
+    * insert-batch-scoped (the dedup insert hash-shuffles within a
+    * batch, so each batch's files span that batch's ids only), which
+    * is exactly the locality CDC touches have; a false positive only
+    * costs a ride-along rewrite, never correctness.
+    *
+    * `touchedIds` is collected under [[graft.sources.IdBlooms.MaxProbeIds]]
+    * (no Spark job when it is a local frame of ids the caller already
+    * holds). A set under that cap drives the range probe, the Bloom
+    * probe and the victim scan (`id IN`) from the driver. Above it the
+    * range probe is a broadcast join of the per-file stats against
+    * `touchedIds` and the victim scan a semi-join — the caller pins
+    * `touchedIds` (localCheckpoint), since both read it. */
+  private[graft] def victimLookup(spark: SparkSession, root: String,
+      touchedIds: org.apache.spark.sql.DataFrame)
+      : (Array[String], org.apache.spark.sql.DataFrame) = {
+    val FileCol = "__gvdb_file"
+    import spark.implicits._
+    val stats = graft.sources.GvdbFooters.idStats(spark, root)
+    val (known, unknown) = stats.partition(_._3.isDefined)
+    val touchedArr: Option[Array[String]] = {
+      val capped = touchedIds.limit(graft.sources.IdBlooms.MaxProbeIds + 1)
+        .collect().map(_.getString(0))
+      if (capped.length > graft.sources.IdBlooms.MaxProbeIds) None else Some(capped)
+    }
+    val candKnown = touchedArr match {
+      case Some(ids) =>
+        val sorted = ids.map(org.apache.spark.unsafe.types.UTF8String.fromString).sorted
+        known.collect { case (f, _, Some((lo, hi))) if anyInRange(sorted, lo, hi) => f }
+      case None if known.nonEmpty =>
+        val statsDf = known.map { case (f, _, r) => (f, r.get._1, r.get._2) }
+          .toDF(FileCol, "__gvdb_lo", "__gvdb_hi")
+        touchedIds.join(broadcast(statsDf),
+            col(VectorSchema.ID) >= col("__gvdb_lo") &&
+              col(VectorSchema.ID) <= col("__gvdb_hi"), "inner")
+          .select(FileCol).distinct().collect().map(_.getString(0)).toSeq
+      case None => Seq.empty
+    }
+    var candidates = candKnown ++ unknown.map(_._1)
+    // Bloom pruning on top of the range probe: under content-hash ids
+    // (UUIDv5) every file's range spans the keyspace and min/max keeps
+    // the whole table candidate — the per-file id blooms
+    // ([[graft.sources.IdBlooms]]) answer membership regardless of
+    // layout. Only a set under the probe cap is probed (a bigger merge
+    // brushes most files anyway); files with a valid bloom entry and no
+    // maybe-hit drop out, files without an entry stay conservative
+    // candidates.
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // one manifest pass yields validity, hits AND the GC signal;
+    // `bloomValid` is reused below for the lazy build's missing-set
+    val (bloomValid, bloomHits, bloomTotal) = touchedArr match {
+      case Some(ids) if graft.sources.IdBlooms.enabled(fs, root) =>
+        graft.sources.IdBlooms.probeValid(spark, fs, root, ids)
+      case _ => (Set.empty[String], Set.empty[String], 0L)
+    }
+    def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
+    if (bloomValid.nonEmpty)
+      candidates = candidates.filter(p => !bloomValid(name(p)) || bloomHits(name(p)))
+    // RAW id→file rows OVER THE CANDIDATES (dead rows included: a
+    // victim file's tombstoned ids must leave the tombstone table when
+    // the file goes). Cached only when the lazy bloom build below will
+    // aggregate it: some candidate under a probed set has no bloom.
+    val bloomBuild = touchedArr.isDefined && candidates.exists(p => !bloomValid(name(p)))
+    val idToFile =
+      if (candidates.isEmpty) None
+      else {
+        val scan = spark.read.schema(VectorSchema.schema).parquet(candidates: _*)
+          .select(col(VectorSchema.ID), input_file_name().as(FileCol))
+        Some(if (bloomBuild)
+          scan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else scan)
+      }
+    val victims = (idToFile, touchedArr) match {
+      case (None, _) => Array.empty[String]
+      case (Some(scan), Some(ids)) =>
+        scan.where(col(VectorSchema.ID).isin(ids.toSeq: _*)).select(FileCol)
+          .collect().map(_.getString(0)).distinct
+      case (Some(scan), None) =>
+        scan.join(touchedIds, Seq(VectorSchema.ID), "left_semi")
+          .select(FileCol).distinct().collect().map(_.getString(0))
+    }
+    // LAZILY extend the bloom manifest from the candidate pass the
+    // lookup just paid: bloom the NON-VICTIM candidates that lack an
+    // entry (victims are deleted by the caller moments later — a
+    // bloom for them is waste and instant GC pressure). The
+    // aggregation reads the persisted (id, file) frame, never the
+    // data files again; files written later stay
+    // unbloomed-conservative until the next lookup reads them anyway.
+    if (touchedArr.isDefined && candidates.nonEmpty) {
+      val victimNames = victims.iterator.map(name).toSet
+      val candNames = candidates.iterator.map(name).toSet
+      val rowsByName = stats.iterator
+        .map { case (p, n, _) => name(p) -> n }
+        .filter { case (n, _) => !bloomValid(n) && candNames(n) && !victimNames(n) }
+        .toMap // empty unless bloomBuild
+      graft.sources.IdBlooms.buildFrom(spark, fs, root, idToFile.get, rowsByName)
+      graft.sources.IdBlooms.gcIfBloated(spark, fs, root,
+        bloomTotal + rowsByName.size, bloomValid.size.toLong + rowsByName.size)
+    }
+    if (bloomBuild) idToFile.get.unpersist()
+    val victimIds =
+      if (victims.isEmpty) Seq.empty[String].toDF(VectorSchema.ID)
+      else spark.read.schema(VectorSchema.schema).parquet(victims.toSeq: _*)
+        .select(VectorSchema.ID)
+    (victims, victimIds)
+  }
+
   /** File-group copy-on-write: victims = the part files holding any
     * `touched` id; the replacement (victim-origin result rows + the
     * inserts) appends FIRST — its plan still reads the victims — then
@@ -215,112 +387,6 @@ private[graft] object GvdbRowLevel {
     * and the victim deletion a reader could see a touched row twice —
     * the same single-writer, non-transactional contract as the rest
     * of the format's rewrite points. */
-  /** Which part files hold any of `touchedIds` (the CoW victims), and
-    * the pinned id set those files carry. Pruned by parquet FOOTER id
-    * statistics: only the files whose id [min,max] overlaps a touched
-    * id (plus any stat-less file) have their id column READ — a CDC
-    * batch against a 100 TB table scans the candidate files, not the
-    * table. File ranges are insert-batch-scoped (the dedup insert
-    * hash-shuffles within a batch, so each batch's files span that
-    * batch's ids only), which is exactly the locality CDC touches
-    * have. The range probe is a broadcast of the per-file stats
-    * (#files rows, driver metadata — no data read) against the touched
-    * keys; a false positive only costs a ride-along rewrite, never
-    * correctness. `touchedIds` must be pinned (localCheckpoint) — the
-    * returned victimIds frame is consumed AFTER the victims are
-    * deleted. */
-  private[graft] def victimLookup(spark: SparkSession, root: String,
-      touchedIds: org.apache.spark.sql.DataFrame)
-      : (Array[String], org.apache.spark.sql.DataFrame) = {
-    val FileCol = "__gvdb_file"
-    import spark.implicits._
-    val stats = graft.sources.GvdbFooters.idStats(spark, root)
-    val (known, unknown) = stats.partition(_._3.isDefined)
-    val candKnown =
-      if (known.isEmpty) Array.empty[String]
-      else {
-        val statsDf = known.map { case (f, _, r) => (f, r.get._1, r.get._2) }
-          .toDF(FileCol, "__gvdb_lo", "__gvdb_hi")
-        touchedIds.join(broadcast(statsDf),
-            col(VectorSchema.ID) >= col("__gvdb_lo") &&
-              col(VectorSchema.ID) <= col("__gvdb_hi"), "inner")
-          .select(FileCol).distinct().collect().map(_.getString(0))
-      }
-    var candidates = (candKnown ++ unknown.map(_._1)).toSeq
-    // Bloom pruning on top of the range probe: under content-hash ids
-    // (UUIDv5) every file's range spans the keyspace and min/max keeps
-    // the whole table candidate — the per-file id blooms
-    // ([[graft.sources.IdBlooms]]) answer membership regardless of
-    // layout. Touched ids are collected only under the probe cap (a
-    // bigger merge brushes most files anyway); files with a valid
-    // bloom entry and no maybe-hit drop out, files without an entry
-    // stay conservative candidates.
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val touchedArr: Option[Array[String]] = {
-      val capped = touchedIds.limit(graft.sources.IdBlooms.MaxProbeIds + 1)
-        .collect().map(_.getString(0))
-      if (capped.length > graft.sources.IdBlooms.MaxProbeIds) None else Some(capped)
-    }
-    // one manifest pass yields validity, hits AND the GC signal;
-    // `bloomValid` is reused below for the lazy build's missing-set
-    val (bloomValid, bloomHits, bloomTotal) = touchedArr match {
-      case Some(ids) if graft.sources.IdBlooms.enabled(fs, root) =>
-        graft.sources.IdBlooms.probeValid(spark, fs, root, ids)
-      case _ => (Set.empty[String], Set.empty[String], 0L)
-    }
-    if (bloomValid.nonEmpty)
-      candidates = candidates.filter { p =>
-        val n = new org.apache.hadoop.fs.Path(p).getName
-        !bloomValid(n) || bloomHits(n)
-      }
-    // RAW id→file map OVER THE CANDIDATES (dead rows included: a
-    // victim file's tombstoned ids must leave the tombstone table when
-    // the file goes)
-    val idToFile =
-      if (candidates.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(VectorSchema.ID,
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField(FileCol,
-              org.apache.spark.sql.types.StringType))))
-      else spark.read.schema(VectorSchema.schema).parquet(candidates: _*)
-        .select(col(VectorSchema.ID), input_file_name().as(FileCol))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val victims = idToFile
-      .join(touchedIds, Seq(VectorSchema.ID), "left_semi")
-      .select(FileCol).distinct().collect().map(_.getString(0))
-    // LAZILY extend the bloom manifest from the candidate pass the
-    // lookup just paid: bloom the NON-VICTIM candidates that lack an
-    // entry (victims are deleted by the caller moments later — a
-    // bloom for them is waste and instant GC pressure). The
-    // aggregation reads the persisted (id, file) frame, never the
-    // data files again; files written later stay
-    // unbloomed-conservative until the next lookup reads them anyway.
-    if (touchedArr.isDefined && candidates.nonEmpty) {
-      val victimNames = victims.iterator
-        .map(new org.apache.hadoop.fs.Path(_).getName).toSet
-      val candNames = candidates.iterator
-        .map(new org.apache.hadoop.fs.Path(_).getName).toSet
-      val rowsByName = stats.iterator
-        .map { case (p, n, _) => new org.apache.hadoop.fs.Path(p).getName -> n }
-        .filter { case (n, _) => !bloomValid(n) && candNames(n) && !victimNames(n) }
-        .toMap
-      graft.sources.IdBlooms.buildFrom(spark, fs, root, idToFile, rowsByName)
-      graft.sources.IdBlooms.gcIfBloated(spark, fs, root,
-        bloomTotal + rowsByName.size, bloomValid.size.toLong + rowsByName.size)
-    }
-    val victimIds =
-      if (victims.isEmpty) idToFile.select(VectorSchema.ID).limit(0).localCheckpoint(true)
-      else idToFile
-        .join(broadcast(victims.toSeq.toDF(FileCol)), Seq(FileCol), "left_semi")
-        .select(VectorSchema.ID)
-        .localCheckpoint(true) // pinned: consumed after the victims are gone
-    idToFile.unpersist()
-    (victims, victimIds)
-  }
-
   private def groupCopyOnWrite(spark: SparkSession, root: String,
       result: org.apache.spark.sql.DataFrame,
       touched: org.apache.spark.sql.DataFrame): Unit = {
@@ -328,7 +394,7 @@ private[graft] object GvdbRowLevel {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val touchedIds = touched
       .select(col(touched.columns.head).as(VectorSchema.ID)).distinct()
-      .localCheckpoint(true) // reused: candidate pruning + victim-id pin
+      .localCheckpoint(true) // read by the capped collect and, above the cap, the joins
     val (victims, victimIds) = victimLookup(spark, root, touchedIds)
     val replacement = result.where(col(Origin).isNull)
       .unionByName(result.join(
@@ -343,25 +409,38 @@ private[graft] object GvdbRowLevel {
     * post-assignment + deduped inserts — never the whole-table copy
     * rows the legacy path projected and then semi-joined away), and the
     * untouched rows of victim files ride along by reading the victim
-    * files DIRECTLY (raw rows minus tombstoned ids minus `preImage`,
-    * the pre-assignment ids of mutated/deleted target rows). Same
-    * replacement set as [[groupCopyOnWrite]] — every updated row's
-    * pre-image file is a victim by construction (its id is in
-    * `touched`), so "mutated ∪ victim-ride-alongs" ≡ "inserts ∪ result
-    * ⋉ victimIds" — with the full-table copy projection never built.
-    * Caller contract: the consuming command verified the table is
-    * UNINDEXED (an index tier forces the whole-table CoW, which needs
-    * every surviving row). */
+    * files DIRECTLY (raw rows minus tombstoned ids minus the pre-image
+    * ids of mutated/deleted target rows). Same replacement set as
+    * [[groupCopyOnWrite]] — every updated row's pre-image file is a
+    * victim by construction (its id is touched), so "mutated ∪
+    * victim-ride-alongs" ≡ "inserts ∪ result ⋉ victimIds" — with the
+    * full-table copy projection never built.
+    *
+    * `keys` is the driver-side key set the caller collected from its
+    * pinned frame ([[collectKeys]]); with it the lookup and the
+    * ride-along anti-join run no Spark action over that frame. Without
+    * it (a key projection above the probe cap) the touched ids are
+    * pinned here from `touched` and the ride-along anti-joins
+    * `preImage`, both frames over the caller's pinned frame. The caller
+    * holds the writer lock from before that frame was read (a
+    * snapshot read outside the writer turn can commit stale rows).
+    * Caller contract: the table is UNINDEXED (an index tier forces the
+    * whole-table CoW, which needs every surviving row). */
   private[graft] def groupCopyOnWriteMutated(spark: SparkSession, root: String,
       mutated: org.apache.spark.sql.DataFrame,
       touched: org.apache.spark.sql.DataFrame,
-      preImage: org.apache.spark.sql.DataFrame): Unit = {
+      preImage: org.apache.spark.sql.DataFrame,
+      keys: Option[TouchedKeys]): Unit = {
     val hfs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.core.WriterLock.withLock(hfs, root) {
-      val touchedIds = touched
-        .select(col(touched.columns.head).as(VectorSchema.ID)).distinct()
-        .localCheckpoint(true) // reused: candidate pruning + victim-id pin
+      import spark.implicits._
+      val touchedIds = keys match {
+        case Some(k) => k.touched.toSeq.toDF(VectorSchema.ID) // local: collected without a job
+        case None => touched
+          .select(col(touched.columns.head).as(VectorSchema.ID)).distinct()
+          .localCheckpoint(true) // read by the range join and the victim scan
+      }
       val (victims, victimIds) = victimLookup(spark, root, touchedIds)
       val replacement =
         if (victims.isEmpty) mutated
@@ -372,10 +451,13 @@ private[graft] object GvdbRowLevel {
             if (!hfs.exists(tombPath)) raw
             else raw.join(broadcast(spark.read.schema(tombSchema)
               .parquet(tombPath.toString)), Seq(VectorSchema.ID), "left_anti")
-          val rideAlong = live.join(
-            preImage.select(col(preImage.columns.head).cast("string")
-              .as(VectorSchema.ID)).distinct(),
-            Seq(VectorSchema.ID), "left_anti")
+          val rideAlong = keys match {
+            case Some(k) => live.where(!col(VectorSchema.ID).isin(k.preImage.toSeq: _*))
+            case None => live.join(
+              preImage.select(col(preImage.columns.head).cast("string")
+                .as(VectorSchema.ID)).distinct(),
+              Seq(VectorSchema.ID), "left_anti")
+          }
           mutated.unionByName(rideAlong)
         }
       appendAndRetire(spark, root, hfs, replacement, victims, victimIds)
@@ -419,12 +501,17 @@ private[graft] object GvdbRowLevel {
         // write-then-RENAME (the vacuum() pattern): the old
         // write-scratch → read-scratch → overwrite sequence paid a
         // second full write + read of the tombstone table per rewrite.
+        // `victimIds` reads the victim files, which are deleted below.
         val scratch = new org.apache.hadoop.fs.Path(root + ".tombstones__rewrite")
         spark.read.schema(tombSchema).parquet(tombPath.toString)
           .join(victimIds, Seq(VectorSchema.ID), "left_anti")
           .write.mode("overwrite").parquet(scratch.toString)
         hfs.delete(tombPath, true)
-        hfs.rename(scratch, tombPath)
+        // a false rename would leave NO tombstone table: every
+        // tombstoned row would resurrect on the next read
+        if (!hfs.rename(scratch, tombPath))
+          throw new java.io.IOException(
+            s"gvdb: tombstone fold could not rename $scratch to $tombPath")
       }
       victims.foreach(f => hfs.delete(new org.apache.hadoop.fs.Path(f), false))
       // data files deleted: ONLY the snapshot manifests referencing a
@@ -551,7 +638,15 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     } catch { case _: Throwable => None } // unresolvable shape: stay legacy
   }
 
-  override def run(spark: SparkSession): Seq[Row] = {
+  /** One writer turn from the snapshot read through the commit: a
+    * MERGE that classified its rows before taking the lock could commit
+    * from a stale snapshot — a lost update, or an insert the dedup
+    * anti-join never saw collide. The inner mutators reenter. */
+  override def run(spark: SparkSession): Seq[Row] =
+    graft.core.WriterLock.withLock(new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), root)(merge(spark))
+
+  private def merge(spark: SparkSession): Seq[Row] = {
     val targetFields = targetPlan.output
     val idField = targetFields.find(_.name == VectorSchema.ID).get
     val tDf = GraftBridge.ofRows(spark, targetPlan)
@@ -563,10 +658,10 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
       .exists { case _: DeleteAction => false; case _ => true }
 
     // Touched-first fast path: the target side of the classification
-    // join is SEMI-JOINED down to rows whose id appears among the
-    // source keys (at 100 TB: one broadcast-pruned scan instead of a
-    // full-table full-outer join), the source and the classified join
-    // are persisted and evaluated ONCE (the legacy path re-evaluated
+    // join is pruned down to rows whose id appears among the source
+    // keys (at 100 TB: one key-filtered scan instead of a full-table
+    // full-outer join), the classified join is pinned and evaluated
+    // ONCE (the legacy path re-evaluated
     // the full join for the cardinality gate, the touched-id pin, and
     // twice inside the replacement union), and the rewrite receives
     // only the MUTATED rows — untouched victim-file rows ride along
@@ -580,19 +675,28 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
       (!hasUpdateOrInsert || !GvdbRowLevel.indexed(spark, root))
     val joined = srcKey match {
       case Some(key) if fast =>
-        // source on the LEFT (full outer is symmetric; sides are told
-        // apart by the T/S presence columns, never position): the
-        // source plan appears twice — once as the join side, once
-        // inside the semi-join key set — and the analyzer's
-        // DeduplicateRelations re-aliases the SECOND occurrence. The
-        // key subtree only surfaces the SK alias, so it is the one
-        // occurrence whose exprIds may change; the join-side source
-        // must keep its original exprIds, which the star-expanded
-        // action assignments reference directly.
-        val keys = sDf.select(GraftBridge.column(key).as(SK)).distinct()
-        val tSemi = tDf.join(keys, GraftBridge.column(idField) === col(SK), "left_semi")
+        // the target side is pruned by the source keys: an `id IN`
+        // filter (pushed into the parquet scan) when the keys fit under
+        // the probe cap — collecting a local source (a temp view of
+        // driver rows, a CDC batch) runs no job at all — else a
+        // semi-join against the distinct keys. Source on the LEFT (full
+        // outer is symmetric; sides are told apart by the T/S presence
+        // columns, never position): on the semi-join route the source
+        // plan appears twice — once as the join side, once inside the
+        // key set — and the analyzer's DeduplicateRelations re-aliases
+        // the SECOND occurrence. The key subtree only surfaces the SK
+        // alias, so it is the one occurrence whose exprIds may change;
+        // the join-side source must keep its original exprIds, which
+        // the star-expanded action assignments reference directly.
+        val cap = graft.sources.IdBlooms.MaxProbeIds
+        val srcKeys = sDf.select(GraftBridge.column(key)).limit(cap + 1).collect()
+        val tPruned =
+          if (srcKeys.length <= cap)
+            tDf.where(GraftBridge.column(idField).isin(srcKeys.map(_.get(0)).distinct.toSeq: _*))
+          else tDf.join(sDf.select(GraftBridge.column(key).as(SK)).distinct(),
+            GraftBridge.column(idField) === col(SK), "left_semi")
         sDf.withColumn(S, lit(1))
-          .join(tSemi.withColumn(T, lit(1)), GraftBridge.column(spec.cond), "full_outer")
+          .join(tPruned.withColumn(T, lit(1)), GraftBridge.column(spec.cond), "full_outer")
       case _ => fullJoined
     }
     runClassified(spark, joined, fast, targetFields, idField, hasUpdateOrInsert)
@@ -619,46 +723,6 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
       (matchedActions.zipWithIndex.collect { case (_: DeleteAction, i) => 100 + i } ++
         notMatchedBySourceActions.zipWithIndex.collect { case (_: DeleteAction, i) => 300 + i })
 
-    // fast path: ONE evaluation of the (key-pruned) join feeds the
-    // gate, the touched-id pin, and the replacement. Pinned with an
-    // EAGER localCheckpoint, not persist: the classified set is
-    // batch-sized (candidate rows + source), and a checkpoint truncates
-    // the lineage to a LogicalRDD leaf — every downstream consumer
-    // (gate, touched, replacement) then plans against a tiny plan,
-    // where a persist() would make each of them re-canonicalize the
-    // whole join subtree per CacheManager lookup (measured: the driver
-    // gap, not the jobs, dominated these entries).
-    val classified0 = joined.withColumn(ACT, act)
-    graft.core.PlanDump.dump(classified0, "merge_classified")
-    val classified = if (fast) classified0.localCheckpoint(true) else classified0
-
-    // Cardinality gate (the MergeRowsExec / Delta contract): a target
-    // row matched by MULTIPLE source rows would be updated/deleted more
-    // than once — or, under our rewrite, emitted more than once — so a
-    // merge carrying any WHEN MATCHED clause fails fast instead of
-    // silently duplicating ids. O(matched) shuffle on the id key only;
-    // limit(1) short-circuits the probe (and, on the fast path,
-    // materializes the persisted classified join for every later
-    // consumer).
-    if (matchedActions.nonEmpty) {
-      val multi = classified.where(col(T).isNotNull && col(S).isNotNull)
-        .groupBy(GraftBridge.column(idField)).count()
-        .where(col("count") > 1).limit(1).count()
-      if (multi > 0)
-        throw new IllegalStateException(
-          "MERGE_CARDINALITY_VIOLATION: the ON search condition matched a single " +
-            "row of the target table with multiple rows of the source; a matched " +
-            "row may be updated or deleted at most once")
-    }
-
-    if (!hasUpdateOrInsert) {
-      // pure retraction: tombstone the matched ids, merge-on-read
-      new VectorTable(spark, root, 1).deleteIds(
-        classified.where(col(ACT).isin(dropCodes.filter(_ > 0).map(Int.box): _*))
-          .select(GraftBridge.column(idField).as(VectorSchema.ID)))
-      return Seq.empty
-    }
-
     // assignment for `field` under action `code`; an unassigned column
     // keeps its target value (partial UPDATE) — which is NULL on a
     // source-only row, the right INSERT default
@@ -681,6 +745,54 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     val insertCodes: Seq[Int] =
       notMatchedActions.zipWithIndex.collect { case (_: InsertAction, i) => 200 + i }
     val mutatedCodes: Seq[Int] = dropCodes.filter(_ > 0) ++ updateCodes
+    def idStr = GraftBridge.column(idField).cast("string")
+
+    // fast path: ONE evaluation of the (key-pruned) join, pinned with
+    // an EAGER localCheckpoint, not persist: the classified set is
+    // batch-sized (candidate rows + source), and a checkpoint truncates
+    // the lineage to a LogicalRDD leaf — every downstream consumer then
+    // plans against a tiny plan, where a persist() would make each of
+    // them re-canonicalize the whole join subtree per CacheManager
+    // lookup (measured: the driver gap, not the jobs, dominated these
+    // entries). Right after it, ONE bounded collect of the narrow
+    // (pre-image, post-image, matched) id projection gives the driver
+    // every key the commit needs: the cardinality gate, the victim
+    // lookup and the ride-along anti-join run from that set.
+    val classified0 = joined.withColumn(ACT, act)
+    graft.core.PlanDump.dump(classified0, "merge_classified")
+    val classified = if (fast) classified0.localCheckpoint(true) else classified0
+    val keys =
+      if (!fast) None
+      else GvdbRowLevel.collectKeys(classified.select(
+        when(col(ACT).isin(mutatedCodes.map(Int.box): _*), idStr),
+        when(col(ACT).isin((updateCodes ++ insertCodes).map(Int.box): _*),
+          valueFor(idField).cast("string")),
+        when(col(T).isNotNull && col(S).isNotNull, idStr)))
+
+    // Cardinality gate (the MergeRowsExec / Delta contract): a target
+    // row matched by MULTIPLE source rows would be updated/deleted more
+    // than once — or, under our rewrite, emitted more than once — so a
+    // merge carrying any WHEN MATCHED clause fails fast instead of
+    // silently duplicating ids. From the collected keys when there are
+    // any; otherwise an O(matched) shuffle on the id key only, with
+    // limit(1) short-circuiting the probe.
+    if (matchedActions.nonEmpty) keys match {
+      case Some(k) => k.requireSingleMatch()
+      case None =>
+        val multi = classified.where(col(T).isNotNull && col(S).isNotNull)
+          .groupBy(GraftBridge.column(idField)).count()
+          .where(col("count") > 1).limit(1).count()
+        if (multi > 0) throw GvdbRowLevel.cardinalityViolation
+    }
+
+    if (!hasUpdateOrInsert) {
+      // pure retraction: tombstone the matched ids, merge-on-read
+      new VectorTable(spark, root, 1).deleteIds(
+        classified.where(col(ACT).isin(dropCodes.filter(_ > 0).map(Int.box): _*))
+          .select(GraftBridge.column(idField).as(VectorSchema.ID)))
+      return Seq.empty
+    }
+
     // touched = PRE-image ids of mutated target rows (their files must
     // rewrite) ∪ POST-image ids of every row the command writes
     // (updates and inserts): a RAW dead row sharing a written id —
@@ -690,7 +802,7 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     // the footer COUNT(*) arithmetic are id-keyed).
     val preImage = classified
       .where(col(ACT).isin(mutatedCodes.map(Int.box): _*))
-      .select(GraftBridge.column(idField).cast("string").as(VectorSchema.ID))
+      .select(idStr.as(VectorSchema.ID))
     val touched = preImage
       .unionByName(classified
         .where(col(ACT).isin((updateCodes ++ insertCodes).map(Int.box): _*))
@@ -698,7 +810,7 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     val raw = classified
       .where(!col(ACT).isin(dropCodes.map(Int.box): _*))
       .select((targetFields.map(valueFor) :+
-        GraftBridge.column(idField).cast("string").as(GvdbRowLevel.Origin) :+
+        idStr.as(GvdbRowLevel.Origin) :+
         col(ACT)).toIndexedSeq: _*)
     // Inserted rows (Origin null) re-enter the table's first-wins
     // dedup contract here — the group-CoW append bypasses
@@ -721,7 +833,7 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
       val updatesOut = survivors.where(col(ACT).isin(updateCodes.map(Int.box): _*))
       val mutatedOut = inserted.fold(updatesOut)(updatesOut.unionByName(_))
         .drop(ACT, GvdbRowLevel.Origin)
-      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutatedOut, touched, preImage)
+      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutatedOut, touched, preImage, keys)
     } else {
       val result = inserted.fold(raw)(survivors.unionByName(_)).drop(ACT)
       GvdbRowLevel.rewrite(spark, root, result, touched)
@@ -745,14 +857,21 @@ case class GvdbUpdateSpec(assignments: Seq[Assignment], condition: Option[Expres
 case class GvdbUpdateCommand(root: String, targetPlan: LogicalPlan,
     spec: GvdbUpdateSpec) extends LeafRunnableCommand {
 
-  override def run(spark: SparkSession): Seq[Row] = {
+  /** One writer turn from the snapshot read through the commit (see
+    * [[GvdbMergeCommand.run]]). */
+  override def run(spark: SparkSession): Seq[Row] =
+    graft.core.WriterLock.withLock(new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), root)(update(spark))
+
+  private def update(spark: SparkSession): Seq[Row] = {
     val t = GraftBridge.ofRows(spark, targetPlan)
     val idField = targetPlan.output.find(_.name == VectorSchema.ID).get
     val condCol = spec.condition.map(GraftBridge.column).getOrElse(lit(true))
     if (!GvdbRowLevel.indexed(spark, root)) {
       // touched-first: matched rows only, evaluated once and pinned by
       // an eager localCheckpoint (lineage-truncating — see the
-      // GvdbMergeCommand classified note)
+      // GvdbMergeCommand classified note), then one bounded collect of
+      // their pre/post-image ids drives the commit's key steps
       val matched = t.where(condCol).localCheckpoint(true)
       val fields = targetPlan.output.map { f =>
         GvdbRowLevel.assignCol(spec.assignments, f)
@@ -760,14 +879,15 @@ case class GvdbUpdateCommand(root: String, targetPlan: LogicalPlan,
       }
       val mutated = matched.select(fields.toIndexedSeq: _*)
       graft.core.PlanDump.dump(mutated, "update_result")
-      val preImage = matched
-        .select(GraftBridge.column(idField).cast("string").as(VectorSchema.ID))
+      val preId = GraftBridge.column(idField).cast("string")
+      val postId = GvdbRowLevel.assignCol(spec.assignments, idField).cast("string")
+      val keys = GvdbRowLevel.collectKeys(
+        matched.select(preId, postId, lit(null).cast("string")))
+      val preImage = matched.select(preId.as(VectorSchema.ID))
       // pre-image ∪ post-image ids (see GvdbMergeCommand: an assigned
       // id colliding with a RAW dead row must purge that row's file)
-      val touched = preImage.unionByName(matched
-        .select(GvdbRowLevel.assignCol(spec.assignments, idField)
-          .cast("string").as(VectorSchema.ID)))
-      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated, touched, preImage)
+      val touched = preImage.unionByName(matched.select(postId.as(VectorSchema.ID)))
+      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated, touched, preImage, keys)
       return Seq.empty
     }
     val fields = targetPlan.output.map { f =>

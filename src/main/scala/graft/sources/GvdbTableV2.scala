@@ -196,7 +196,12 @@ private[graft] object GvdbFooters {
             }
           if (perBlock.exists(_.isEmpty)) None
           else perBlock.flatten.reduceOption { (a, b) =>
-            (if (a._1 <= b._1) a._1 else b._1, if (a._2 >= b._2) a._2 else b._2)
+            // parquet's (and Spark's) string order is unsigned UTF-8
+            // bytes, not String.compareTo's UTF-16 units
+            def cmp(x: String, y: String) =
+              org.apache.spark.unsafe.types.UTF8String.fromString(x)
+                .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
+            (if (cmp(a._1, b._1) <= 0) a._1 else b._1, if (cmp(a._2, b._2) >= 0) a._2 else b._2)
           }
         } finally r.close()
       })

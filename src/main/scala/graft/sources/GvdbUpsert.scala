@@ -36,9 +36,10 @@ object GvdbUpsert {
       if (!table.exists) {
         GvdbWrite.insert(spark, root, shaped, overwrite = false, dimOpt)
       } else if (!indexed) {
-        // touched-first fast path (guide §1.2): ONE persisted
-        // batch-side left join classifies every batch row as
-        // update-or-insert; the whole-table `copies` projection is
+        // touched-first fast path (guide §1.2): ONE pinned batch-side
+        // left join classifies every batch row as update-or-insert,
+        // under the writer turn taken above (the read and the commit
+        // see the same table); the whole-table `copies` projection is
         // never built — untouched victim-file rows ride along inside
         // groupCopyOnWriteMutated. The legacy path below evaluated the
         // table↔batch join four times (copies, updates, inserts, and
@@ -56,10 +57,15 @@ object GvdbUpsert {
         // touched = every batch id: pre-image (replaced rows' files
         // rewrite) and post-image (a dead raw duplicate of an
         // inserted id purges with its file) coincide here; ride-along
-        // excludes only the REPLACED (live-matched) pre-images
-        val preImage = flagged.where(col(E) === 1).select(VectorSchema.ID)
+        // excludes only the REPLACED (live-matched) pre-images. One
+        // bounded collect of those ids drives the commit's key steps.
+        val replaced = col(E) === 1
+        val keys = GvdbRowLevel.collectKeys(flagged.select(
+          when(replaced, col(VectorSchema.ID)), col(VectorSchema.ID),
+          lit(null).cast("string")))
         GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated,
-          flagged.select(VectorSchema.ID), preImage)
+          flagged.select(VectorSchema.ID), flagged.where(replaced).select(VectorSchema.ID),
+          keys)
       } else {
         val ids = Seq(VectorSchema.ID)
         val tgt = table.df.select(VectorSchema.ID, VectorSchema.METADATA,

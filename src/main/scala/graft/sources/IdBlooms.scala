@@ -172,11 +172,13 @@ private[graft] object IdBlooms {
       bLive.value.get(r.getString(0)).contains((r.getLong(1), r.getLong(2)))
     }
     val tmp = new Path(root + ".blooms__rewrite")
-    keep.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(dir(root), true)
-    fs.rename(tmp, dir(root))
-    bLive.destroy()
-    ()
+    try {
+      keep.write.mode("overwrite").parquet(tmp.toString)
+      fs.delete(dir(root), true)
+      if (!fs.rename(tmp, dir(root)))
+        throw new java.io.IOException(
+          s"gvdb: bloom manifest GC could not rename $tmp to ${dir(root)}")
+    } finally bLive.destroy()
   }
 
   /** Aggregate per-file blooms from an `(id, full file path)` frame

@@ -760,7 +760,11 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
       val tmp = new Path(root + "__vacuum")
       withExtracts(df).write.mode("overwrite").parquet(tmp.toString)
       fs.delete(hadoopPath, true)
-      fs.rename(tmp, hadoopPath)
+      // the data directory is already gone: a false rename must not
+      // go on to drop the tombstones and report success
+      if (!fs.rename(tmp, hadoopPath))
+        throw new java.io.IOException(
+          s"gvdb: vacuum could not rename $tmp to $hadoopPath; the rewritten rows are in $tmp")
       fs.delete(tombPath, true)
       tombCountCache = Some((0L, 0L)) // no tombPath → signature 0
       expireSnapshots() // data files rewritten: retention-zero expiry

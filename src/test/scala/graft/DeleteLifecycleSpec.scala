@@ -125,4 +125,28 @@ class DeleteLifecycleSpec extends SparkSpec with Matchers {
     plan should include("LeftAnti")
     tbl.drop()
   }
+
+  test("a failed vacuum swap rename throws and keeps the rewritten rows") {
+    val tbl = freshTable("delvac")
+    tbl.insert(mkRows(0 until 10))
+    tbl.delete(col(VectorSchema.ID) === "4")
+    val failing = new VectorTable(spark, SwapRenameFailingFs.on(spark, tbl.root), 4)
+    intercept[java.io.IOException](failing.vacuum()).getMessage should include("rename")
+    // the data directory is gone, but the live rows are in the staged
+    // rewrite the error names — not lost behind a reported success
+    spark.read.parquet(tbl.root + "__vacuum").count() shouldBe 9L
+    new java.io.File(tbl.root + ".tombstones").exists() shouldBe true
+  }
+
+  test("a failed tombstone-fold rename throws instead of dropping every tombstone") {
+    val tbl = freshTable("delfold")
+    tbl.insert(mkRows(0 until 10))
+    tbl.delete(col(VectorSchema.ID).isin("2", "7"))
+    val root = SwapRenameFailingFs.on(spark, tbl.root)
+    // an upsert touching row 3 rewrites its file and folds the
+    // tombstones of every victim file through `.tombstones__rewrite`
+    intercept[java.io.IOException] {
+      graft.sources.GvdbUpsert(spark, root, mkRows(3 until 4), Some(4))
+    }.getMessage should include("tombstone")
+  }
 }

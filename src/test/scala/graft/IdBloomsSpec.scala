@@ -128,4 +128,18 @@ class IdBloomsSpec extends SparkSpec with Matchers {
     val (v1, _) = GvdbRowLevel.victimLookup(spark, root, t1)
     v1.map(f => new Path(f).getName).toSet shouldBe groundTruthVictims(root, t1)
   }
+
+  test("a failed bloom-manifest GC rename throws") {
+    val root = Files.createTempDirectory("graft-blooms-gc").toString + "/t"
+    val table = new VectorTable(spark, root, 1).create()
+    (0 until 2).foreach(s => table.insert(batch(s, 50)))
+    GvdbRowLevel.victimLookup(spark, root, touchedOf(1, 50, 5)) // builds the manifest
+    IdBlooms.enabled(fs(root), root) shouldBe true
+    val failing = SwapRenameFailingFs.on(spark, root)
+    // counts that call the manifest bloated: the GC rewrites it through
+    // `.blooms__rewrite`, whose rename fails
+    intercept[java.io.IOException] {
+      IdBlooms.gcIfBloated(spark, fs(failing), failing, totalEntries = 10, validEntries = 1)
+    }.getMessage should include("rename")
+  }
 }

@@ -3,19 +3,22 @@ package graft
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
-/** A local filesystem under its own scheme whose rename of a
-  * `*__compacting` directory — the HNSW graph swap — returns false.
-  * Every other rename (the parquet committer's) succeeds, so writes
-  * through it land normally and only the swap fails. */
+/** A local filesystem under its own scheme whose rename of a staged
+  * swap directory returns false: `*__compacting` (the HNSW graph swap),
+  * `*__rewrite` (the tombstone fold and the Bloom-manifest GC) and
+  * `*__vacuum` (the vacuum data swap). Every other rename (the parquet
+  * committer's) succeeds, so writes through it land normally and only
+  * the swap fails. */
 class SwapRenameFailingFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create(s"${SwapRenameFailingFs.Scheme}:///")
   override def getScheme: String = SwapRenameFailingFs.Scheme
   override def rename(src: Path, dst: Path): Boolean =
-    !src.getName.endsWith("__compacting") && super.rename(src, dst)
+    !SwapRenameFailingFs.Staged.exists(src.getName.endsWith) && super.rename(src, dst)
 }
 
 object SwapRenameFailingFs {
   val Scheme = "failswap"
+  val Staged = Seq("__compacting", "__rewrite", "__vacuum")
 
   /** `path` (an absolute local path) through the failing filesystem. */
   def on(spark: SparkSession, path: String): String = {

@@ -85,4 +85,40 @@ class WriterLockSpec extends SparkSpec with Matchers {
     lock.delete()
     new VectorTable(spark, root, 2).drop()
   }
+
+  test("MERGE and UPDATE read and commit in one writer turn (writer B lands before A's lock)") {
+    // writer B commits at the moment writer A takes its lock. A command
+    // that read its snapshot BEFORE that moment would commit stale rows:
+    // a duplicate id (A's insert of an id B just added) or a lost update
+    // (A's rewrite of a row from before B's update). Reading inside the
+    // turn, A sees B's rows.
+    val warehouse = LockHookFs.on(spark,
+      Files.createTempDirectory("graft-lockspec-turn").toString)
+    spark.conf.set("spark.sql.catalog.lkc", "graft.sources.GvdbCatalog")
+    spark.conf.set("spark.sql.catalog.lkc.warehouse", warehouse)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS lkc.w")
+    spark.sql("""CREATE TABLE lkc.w.t
+                 (id string, metadata string, embedding array<float>) USING gvdb""")
+    spark.sql("""INSERT INTO lkc.w.t VALUES
+      ('1', 'm', array(1.0f)), ('2', 'm', array(2.0f))""")
+    def rowsOf(id: String) =
+      spark.sql(s"SELECT metadata FROM lkc.w.t WHERE id = '$id'").collect().map(_.getString(0))
+
+    LockHookFs.beforeNextLock(
+      spark.sql("INSERT INTO lkc.w.t VALUES ('n', 'from-b', array(9.0f))"))
+    spark.sql("""MERGE INTO lkc.w.t t
+      USING (SELECT 'n' AS id, 'from-a' AS metadata, array(7.0f) AS embedding) c
+      ON t.id = c.id
+      WHEN MATCHED THEN UPDATE SET metadata = c.metadata
+      WHEN NOT MATCHED THEN INSERT (id, metadata, embedding)
+        VALUES (c.id, c.metadata, c.embedding)""")
+    rowsOf("n") shouldBe Array("from-a") // one row: A matched B's insert
+
+    LockHookFs.beforeNextLock(
+      spark.sql("UPDATE lkc.w.t SET metadata = concat(metadata, '+b') WHERE id = '1'"))
+    spark.sql("UPDATE lkc.w.t SET metadata = concat(metadata, '+a') WHERE id = '1'")
+    rowsOf("1") shouldBe Array("m+b+a") // B's update kept, A applied on top
+    spark.sql("SELECT count(*) FROM lkc.w.t").head.getLong(0) shouldBe 3L
+    spark.sql("DROP TABLE lkc.w.t")
+  }
 }
