@@ -202,14 +202,26 @@ private[graft] object GvdbRowLevel {
     }
   }
 
+  /** The key bound of a touched-first commit: a key set up to it is
+    * collected to the driver and drives the commit from there; a
+    * bigger one keeps the distributed gate, probe and scan. A dynamic
+    * scope rather than a setting, so a test can run the distributed
+    * route on a small fixture (`probeCap.withValue(0) { ... }`). */
+  private[graft] val probeCap =
+    new scala.util.DynamicVariable[Int](graft.sources.IdBlooms.MaxProbeIds)
+
+  /** The columns of a touched-first key projection, each null where it
+    * does not apply: the pre-image id (a target row the command
+    * rewrites or deletes), the post-image id (a row it writes) and the
+    * matched id (one target id per (target, source) MERGE match). */
+  private val KeyCols = Seq("__gvdb_pre", "__gvdb_post", "__gvdb_matched")
+
   /** The keys of a touched-first commit, collected to the driver ONCE
-    * from the command's pinned frame ([[collectKeys]]): `preImage` =
-    * target ids the command rewrites or deletes, `postImage` = ids it
-    * writes, `matched` = one target id per (target, source) MERGE
-    * match. Every later step of the commit — the cardinality gate, the
-    * footer-range and Bloom probes, the victim scan, the ride-along
-    * anti-join — reads these arrays instead of running its own Spark
-    * action over the pinned frame. */
+    * from the command's key projection ([[collectKeys]]). Every later
+    * step of the commit — the cardinality gate, the footer-range and
+    * Bloom probes, the victim scan, the ride-along anti-join — reads
+    * these arrays instead of running its own Spark action over the
+    * pinned frame. */
   private[graft] final case class TouchedKeys(preImage: Array[String],
       postImage: Array[String], matched: Array[String]) {
     def touched: Array[String] = (preImage ++ postImage).distinct
@@ -226,18 +238,16 @@ private[graft] object GvdbRowLevel {
       "row of the target table with multiple rows of the source; a matched " +
       "row may be updated or deleted at most once")
 
-  /** One bounded collect of a touched-first command's key projection:
-    * three nullable string columns (pre-image id, post-image id,
-    * matched id), taken right after the command's eager checkpoint.
-    * None when the projection has more than `cap` rows — the commit
-    * then keeps its distributed gate, probe and scan. */
-  private[graft] def collectKeys(keys: org.apache.spark.sql.DataFrame,
-      cap: Int = graft.sources.IdBlooms.MaxProbeIds): Option[TouchedKeys] = {
-    val named = Seq("__gvdb_pre", "__gvdb_post", "__gvdb_matched")
+  /** One bounded collect of a touched-first command's key projection
+    * (three nullable string columns in [[KeyCols]] order), taken right
+    * after the command's eager checkpoint. None when the projection
+    * has more than [[probeCap]] non-null rows. */
+  private[graft] def collectKeys(keys: org.apache.spark.sql.DataFrame): Option[TouchedKeys] = {
+    val cap = probeCap.value
     // coalesce(1): ONE task pulls rows until the limit, where a plain
     // limit-collect scans one partition first and then re-runs a job
     // over the rest
-    val rows = keys.toDF(named: _*).where(named.map(col(_).isNotNull).reduce(_ || _))
+    val rows = keys.toDF(KeyCols: _*).where(KeyCols.map(col(_).isNotNull).reduce(_ || _))
       .coalesce(1).limit(cap + 1).collect()
     if (rows.length > cap) None
     else {
@@ -245,6 +255,18 @@ private[graft] object GvdbRowLevel {
       Some(TouchedKeys(at(0), at(1), at(2)))
     }
   }
+
+  private def keyColumn(keys: org.apache.spark.sql.DataFrame, i: Int) =
+    keys.toDF(KeyCols: _*).select(col(KeyCols(i)).as(VectorSchema.ID))
+      .where(col(VectorSchema.ID).isNotNull)
+
+  /** The pre-image ids of a key projection, on the cluster. */
+  private def preImageOf(keys: org.apache.spark.sql.DataFrame) = keyColumn(keys, 0)
+
+  /** The touched ids (pre-image ∪ post-image) of a key projection, on
+    * the cluster. */
+  private[graft] def touchedOf(keys: org.apache.spark.sql.DataFrame) =
+    preImageOf(keys).union(keyColumn(keys, 1))
 
   /** Whether any id of `sorted` (ascending in Spark's binary string
     * order) lies in [lo, hi] — the footer-range probe on the driver.
@@ -273,13 +295,13 @@ private[graft] object GvdbRowLevel {
     * is exactly the locality CDC touches have; a false positive only
     * costs a ride-along rewrite, never correctness.
     *
-    * `touchedIds` is collected under [[graft.sources.IdBlooms.MaxProbeIds]]
-    * (no Spark job when it is a local frame of ids the caller already
-    * holds). A set under that cap drives the range probe, the Bloom
-    * probe and the victim scan (`id IN`) from the driver. Above it the
-    * range probe is a broadcast join of the per-file stats against
-    * `touchedIds` and the victim scan a semi-join — the caller pins
-    * `touchedIds` (localCheckpoint), since both read it. */
+    * `touchedIds` is collected under [[probeCap]] (no Spark job when
+    * it is a local frame of ids the caller already holds). A set under
+    * that cap drives the range and Bloom probes from the driver and
+    * reaches the victim scan as a broadcast local relation. Above it
+    * the range probe is a broadcast join of the per-file stats against
+    * `touchedIds` and the victim scan a semi-join against it — the
+    * caller pins `touchedIds` (localCheckpoint), since both read it. */
   private[graft] def victimLookup(spark: SparkSession, root: String,
       touchedIds: org.apache.spark.sql.DataFrame)
       : (Array[String], org.apache.spark.sql.DataFrame) = {
@@ -288,9 +310,9 @@ private[graft] object GvdbRowLevel {
     val stats = graft.sources.GvdbFooters.idStats(spark, root)
     val (known, unknown) = stats.partition(_._3.isDefined)
     val touchedArr: Option[Array[String]] = {
-      val capped = touchedIds.limit(graft.sources.IdBlooms.MaxProbeIds + 1)
-        .collect().map(_.getString(0))
-      if (capped.length > graft.sources.IdBlooms.MaxProbeIds) None else Some(capped)
+      val cap = probeCap.value
+      val capped = touchedIds.limit(cap + 1).collect().map(_.getString(0))
+      if (capped.length > cap) None else Some(capped)
     }
     val candKnown = touchedArr match {
       case Some(ids) =>
@@ -339,14 +361,18 @@ private[graft] object GvdbRowLevel {
         Some(if (bloomBuild)
           scan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else scan)
       }
-    val victims = (idToFile, touchedArr) match {
-      case (None, _) => Array.empty[String]
-      case (Some(scan), Some(ids)) =>
-        scan.where(col(VectorSchema.ID).isin(ids.toSeq: _*)).select(FileCol)
-          .collect().map(_.getString(0)).distinct
-      case (Some(scan), None) =>
-        scan.join(touchedIds, Seq(VectorSchema.ID), "left_semi")
-          .select(FileCol).distinct().collect().map(_.getString(0))
+    // the victim scan semi-joins the touched ids: under the cap a
+    // broadcast local relation of the collected set (one small job,
+    // shipped once per executor rather than planned as a literal
+    // list), whose hits — about one per id — dedup on the driver;
+    // above it `touchedIds` itself, deduped on the cluster
+    val victims = idToFile match {
+      case None => Array.empty[String]
+      case Some(scan) =>
+        val probe = touchedArr.fold(touchedIds)(ids => broadcast(ids.toSeq.toDF(VectorSchema.ID)))
+        val hits = scan.join(probe, Seq(VectorSchema.ID), "left_semi").select(FileCol)
+        if (touchedArr.isDefined) hits.collect().map(_.getString(0)).distinct
+        else hits.distinct().collect().map(_.getString(0))
     }
     // LAZILY extend the bloom manifest from the candidate pass the
     // lookup just paid: bloom the NON-VICTIM candidates that lack an
@@ -416,30 +442,33 @@ private[graft] object GvdbRowLevel {
     * victim-ride-alongs" ≡ "inserts ∪ result ⋉ victimIds" — with the
     * full-table copy projection never built.
     *
-    * `keys` is the driver-side key set the caller collected from its
-    * pinned frame ([[collectKeys]]); with it the lookup and the
-    * ride-along anti-join run no Spark action over that frame. Without
-    * it (a key projection above the probe cap) the touched ids are
-    * pinned here from `touched` and the ride-along anti-joins
-    * `preImage`, both frames over the caller's pinned frame. The caller
-    * holds the writer lock from before that frame was read (a
-    * snapshot read outside the writer turn can commit stale rows).
-    * Caller contract: the table is UNINDEXED (an index tier forces the
-    * whole-table CoW, which needs every surviving row). */
+    * `keys` is the command's key projection over its pinned frame
+    * ([[KeyCols]] order) and `collected` what [[collectKeys]] took
+    * from it. With the collected set, the victim lookup and the
+    * ride-along anti-join read local frames of those ids and run no
+    * Spark action over the pinned frame. Without it (a projection
+    * above the probe cap) the touched ids are pinned here from the
+    * projection and the ride-along anti-joins its pre-image column.
+    * The caller holds the writer lock from before its pinned frame was
+    * read (a snapshot read outside the writer turn can commit stale
+    * rows). Caller contract: the table is UNINDEXED (an index tier
+    * forces the whole-table CoW, which needs every surviving row). */
   private[graft] def groupCopyOnWriteMutated(spark: SparkSession, root: String,
       mutated: org.apache.spark.sql.DataFrame,
-      touched: org.apache.spark.sql.DataFrame,
-      preImage: org.apache.spark.sql.DataFrame,
-      keys: Option[TouchedKeys]): Unit = {
+      keys: org.apache.spark.sql.DataFrame,
+      collected: Option[TouchedKeys]): Unit = {
     val hfs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.core.WriterLock.withLock(hfs, root) {
       import spark.implicits._
-      val touchedIds = keys match {
-        case Some(k) => k.touched.toSeq.toDF(VectorSchema.ID) // local: collected without a job
-        case None => touched
-          .select(col(touched.columns.head).as(VectorSchema.ID)).distinct()
-          .localCheckpoint(true) // read by the range join and the victim scan
+      val (touchedIds, preImageIds) = collected match {
+        case Some(k) => // local relations of the collected ids
+          (k.touched.toSeq.toDF(VectorSchema.ID),
+            broadcast(k.preImage.toSeq.toDF(VectorSchema.ID)))
+        case None =>
+          (touchedOf(keys).distinct()
+            .localCheckpoint(true), // read by the range join and the victim scan
+            preImageOf(keys).distinct())
       }
       val (victims, victimIds) = victimLookup(spark, root, touchedIds)
       val replacement =
@@ -451,14 +480,7 @@ private[graft] object GvdbRowLevel {
             if (!hfs.exists(tombPath)) raw
             else raw.join(broadcast(spark.read.schema(tombSchema)
               .parquet(tombPath.toString)), Seq(VectorSchema.ID), "left_anti")
-          val rideAlong = keys match {
-            case Some(k) => live.where(!col(VectorSchema.ID).isin(k.preImage.toSeq: _*))
-            case None => live.join(
-              preImage.select(col(preImage.columns.head).cast("string")
-                .as(VectorSchema.ID)).distinct(),
-              Seq(VectorSchema.ID), "left_anti")
-          }
-          mutated.unionByName(rideAlong)
+          mutated.unionByName(live.join(preImageIds, Seq(VectorSchema.ID), "left_anti"))
         }
       appendAndRetire(spark, root, hfs, replacement, victims, victimIds)
     }
@@ -466,7 +488,8 @@ private[graft] object GvdbRowLevel {
 
   /** Shared tail of the group-CoW paths: dim gate, extract recompute,
     * append, tombstone fold, victim deletion, selective snapshot
-    * expiry. */
+    * expiry. A failed fold takes the appended files back out, so the
+    * table stays as it was before the commit. */
   private def appendAndRetire(spark: SparkSession, root: String,
       hfs: org.apache.hadoop.fs.FileSystem,
       replacement: org.apache.spark.sql.DataFrame,
@@ -490,29 +513,21 @@ private[graft] object GvdbRowLevel {
     val toAppend = graft.sources.GvdbExtracts.withColumns(checked,
       graft.sources.GvdbExtracts.spec(hfs, root))
     graft.core.PlanDump.dump(toAppend, "groupcow_append")
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val tombPath = new org.apache.hadoop.fs.Path(root + ".tombstones")
+    val fold = victims.nonEmpty && hfs.exists(tombPath)
+    def files() = hfs.listStatus(rootPath).filter(_.isFile).map(_.getPath.getName).toSet
+    val before = if (fold) files() else Set.empty[String]
     toAppend.write.mode("append").parquet(root)
     if (victims.nonEmpty) {
-      val tombPath = new org.apache.hadoop.fs.Path(root + ".tombstones")
-      if (hfs.exists(tombPath)) {
-        // staged BESIDE the table via the table's own FileSystem (the
-        // snapshot/index sidecar convention) — a driver-local tempdir
-        // would break on any non-local Hadoop FS, where executors and
-        // the table root don't share the driver's disk. Folded by
-        // write-then-RENAME (the vacuum() pattern): the old
-        // write-scratch → read-scratch → overwrite sequence paid a
-        // second full write + read of the tombstone table per rewrite.
-        // `victimIds` reads the victim files, which are deleted below.
-        val scratch = new org.apache.hadoop.fs.Path(root + ".tombstones__rewrite")
-        spark.read.schema(tombSchema).parquet(tombPath.toString)
-          .join(victimIds, Seq(VectorSchema.ID), "left_anti")
-          .write.mode("overwrite").parquet(scratch.toString)
-        hfs.delete(tombPath, true)
-        // a false rename would leave NO tombstone table: every
-        // tombstoned row would resurrect on the next read
-        if (!hfs.rename(scratch, tombPath))
-          throw new java.io.IOException(
-            s"gvdb: tombstone fold could not rename $scratch to $tombPath")
-      }
+      if (fold)
+        try foldTombstones(spark, hfs, tombPath, victimIds)
+        catch {
+          case e: Throwable =>
+            (files() -- before).foreach(f =>
+              hfs.delete(new org.apache.hadoop.fs.Path(rootPath, f), false))
+            throw e
+        }
       victims.foreach(f => hfs.delete(new org.apache.hadoop.fs.Path(f), false))
       // data files deleted: ONLY the snapshot manifests referencing a
       // victim expire — a snapshot whose files all survive the group
@@ -524,6 +539,39 @@ private[graft] object GvdbRowLevel {
     }
     // (the replacement files stay unbloomed-conservative until the
     // next victim lookup reads — and then blooms — them)
+  }
+
+  /** The tombstone fold of a group rewrite: the tombstone table minus
+    * the ids the victim files carry (their dead rows leave with the
+    * files), read while the victims still exist. Staged BESIDE the
+    * table via the table's own FileSystem (the snapshot/index sidecar
+    * convention — a driver-local tempdir would break on any non-local
+    * Hadoop FS) and swapped in by rename: the old table moves aside
+    * first and moves back if the swap fails, so a failure throws with
+    * the old tombstones still in place, never with none (every
+    * tombstoned row would resurrect). */
+  private def foldTombstones(spark: SparkSession, hfs: org.apache.hadoop.fs.FileSystem,
+      tombPath: org.apache.hadoop.fs.Path,
+      victimIds: org.apache.spark.sql.DataFrame): Unit = {
+    val scratch = new org.apache.hadoop.fs.Path(tombPath.toString + "__rewrite")
+    val retired = new org.apache.hadoop.fs.Path(tombPath.toString + "__retired")
+    try {
+      spark.read.schema(tombSchema).parquet(tombPath.toString)
+        .join(victimIds, Seq(VectorSchema.ID), "left_anti")
+        .write.mode("overwrite").parquet(scratch.toString)
+      hfs.delete(retired, true) // a rename onto an existing directory nests inside it
+      if (!hfs.rename(tombPath, retired))
+        throw new java.io.IOException(s"gvdb: tombstone fold could not move $tombPath aside")
+      if (!hfs.rename(scratch, tombPath)) {
+        val restored = hfs.rename(retired, tombPath)
+        throw new java.io.IOException(s"gvdb: tombstone fold could not rename $scratch " +
+          s"to $tombPath" + (if (restored) "" else s"; the tombstones are in $retired"))
+      }
+      hfs.delete(retired, true)
+    } finally {
+      hfs.delete(scratch, true)
+      ()
+    }
   }
 
   /** Whether `root` carries any persisted index tier — tiered tables
@@ -675,26 +723,27 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
       (!hasUpdateOrInsert || !GvdbRowLevel.indexed(spark, root))
     val joined = srcKey match {
       case Some(key) if fast =>
-        // the target side is pruned by the source keys: an `id IN`
-        // filter (pushed into the parquet scan) when the keys fit under
-        // the probe cap — collecting a local source (a temp view of
-        // driver rows, a CDC batch) runs no job at all — else a
-        // semi-join against the distinct keys. Source on the LEFT (full
-        // outer is symmetric; sides are told apart by the T/S presence
-        // columns, never position): on the semi-join route the source
-        // plan appears twice — once as the join side, once inside the
-        // key set — and the analyzer's DeduplicateRelations re-aliases
-        // the SECOND occurrence. The key subtree only surfaces the SK
-        // alias, so it is the one occurrence whose exprIds may change;
-        // the join-side source must keep its original exprIds, which
-        // the star-expanded action assignments reference directly.
-        val cap = graft.sources.IdBlooms.MaxProbeIds
-        val srcKeys = sDf.select(GraftBridge.column(key)).limit(cap + 1).collect()
-        val tPruned =
-          if (srcKeys.length <= cap)
-            tDf.where(GraftBridge.column(idField).isin(srcKeys.map(_.get(0)).distinct.toSeq: _*))
-          else tDf.join(sDf.select(GraftBridge.column(key).as(SK)).distinct(),
-            GraftBridge.column(idField) === col(SK), "left_semi")
+        // the target side is semi-joined with the source keys: a
+        // broadcast local relation of them when they fit under the
+        // probe cap — collecting a local source (a temp view of driver
+        // rows, a CDC batch) runs no job at all — else the distinct
+        // keys on the cluster. Source on the LEFT (full outer is
+        // symmetric; sides are told apart by the T/S presence columns,
+        // never position): on the cluster route the source plan appears
+        // twice — once as the join side, once inside the key set — and
+        // the analyzer's DeduplicateRelations re-aliases the SECOND
+        // occurrence. The key subtree only surfaces the SK alias, so it
+        // is the one occurrence whose exprIds may change; the join-side
+        // source must keep its original exprIds, which the
+        // star-expanded action assignments reference directly.
+        import spark.implicits._
+        val cap = GvdbRowLevel.probeCap.value
+        val srcKeys = sDf.select(GraftBridge.column(key).cast("string"))
+          .limit(cap + 1).collect().map(_.getString(0))
+        val keySet =
+          if (srcKeys.length <= cap) broadcast(srcKeys.distinct.toSeq.toDF(SK))
+          else sDf.select(GraftBridge.column(key).as(SK)).distinct()
+        val tPruned = tDf.join(keySet, GraftBridge.column(idField) === col(SK), "left_semi")
         sDf.withColumn(S, lit(1))
           .join(tPruned.withColumn(T, lit(1)), GraftBridge.column(spec.cond), "full_outer")
       case _ => fullJoined
@@ -761,13 +810,20 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     val classified0 = joined.withColumn(ACT, act)
     graft.core.PlanDump.dump(classified0, "merge_classified")
     val classified = if (fast) classified0.localCheckpoint(true) else classified0
-    val keys =
-      if (!fast) None
-      else GvdbRowLevel.collectKeys(classified.select(
-        when(col(ACT).isin(mutatedCodes.map(Int.box): _*), idStr),
-        when(col(ACT).isin((updateCodes ++ insertCodes).map(Int.box): _*),
-          valueFor(idField).cast("string")),
-        when(col(T).isNotNull && col(S).isNotNull, idStr)))
+    // the key projection: pre-image = target rows the merge rewrites
+    // or deletes (their files must rewrite); post-image = every row it
+    // writes (updates and inserts): a RAW dead row sharing a written
+    // id — a tombstoned id being re-inserted, or an UPDATE SET id =
+    // <dead id> — must be physically purged with its file, or the
+    // tombstone that hides it would hide the NEW row too (the MoR
+    // anti-join and the footer COUNT(*) arithmetic are id-keyed).
+    // Touched = pre ∪ post.
+    val keyCols = classified.select(
+      when(col(ACT).isin(mutatedCodes.map(Int.box): _*), idStr),
+      when(col(ACT).isin((updateCodes ++ insertCodes).map(Int.box): _*),
+        valueFor(idField).cast("string")),
+      when(col(T).isNotNull && col(S).isNotNull, idStr))
+    val keys = if (fast) GvdbRowLevel.collectKeys(keyCols) else None
 
     // Cardinality gate (the MergeRowsExec / Delta contract): a target
     // row matched by MULTIPLE source rows would be updated/deleted more
@@ -793,20 +849,6 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
       return Seq.empty
     }
 
-    // touched = PRE-image ids of mutated target rows (their files must
-    // rewrite) ∪ POST-image ids of every row the command writes
-    // (updates and inserts): a RAW dead row sharing a written id —
-    // a tombstoned id being re-inserted, or an UPDATE SET id = <dead
-    // id> — must be physically purged with its file, or the tombstone
-    // that hides it would hide the NEW row too (the MoR anti-join and
-    // the footer COUNT(*) arithmetic are id-keyed).
-    val preImage = classified
-      .where(col(ACT).isin(mutatedCodes.map(Int.box): _*))
-      .select(idStr.as(VectorSchema.ID))
-    val touched = preImage
-      .unionByName(classified
-        .where(col(ACT).isin((updateCodes ++ insertCodes).map(Int.box): _*))
-        .select(valueFor(idField).cast("string").as(VectorSchema.ID)))
     val raw = classified
       .where(!col(ACT).isin(dropCodes.map(Int.box): _*))
       .select((targetFields.map(valueFor) :+
@@ -833,10 +875,10 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
       val updatesOut = survivors.where(col(ACT).isin(updateCodes.map(Int.box): _*))
       val mutatedOut = inserted.fold(updatesOut)(updatesOut.unionByName(_))
         .drop(ACT, GvdbRowLevel.Origin)
-      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutatedOut, touched, preImage, keys)
+      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutatedOut, keyCols, keys)
     } else {
       val result = inserted.fold(raw)(survivors.unionByName(_)).drop(ACT)
-      GvdbRowLevel.rewrite(spark, root, result, touched)
+      GvdbRowLevel.rewrite(spark, root, result, GvdbRowLevel.touchedOf(keyCols))
     }
     Seq.empty
   }
@@ -881,13 +923,12 @@ case class GvdbUpdateCommand(root: String, targetPlan: LogicalPlan,
       graft.core.PlanDump.dump(mutated, "update_result")
       val preId = GraftBridge.column(idField).cast("string")
       val postId = GvdbRowLevel.assignCol(spec.assignments, idField).cast("string")
-      val keys = GvdbRowLevel.collectKeys(
-        matched.select(preId, postId, lit(null).cast("string")))
-      val preImage = matched.select(preId.as(VectorSchema.ID))
-      // pre-image ∪ post-image ids (see GvdbMergeCommand: an assigned
-      // id colliding with a RAW dead row must purge that row's file)
-      val touched = preImage.unionByName(matched.select(postId.as(VectorSchema.ID)))
-      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated, touched, preImage, keys)
+      // pre-image and post-image ids (see GvdbMergeCommand: an
+      // assigned id colliding with a RAW dead row must purge that
+      // row's file)
+      val keyCols = matched.select(preId, postId, lit(null).cast("string"))
+      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated, keyCols,
+        GvdbRowLevel.collectKeys(keyCols))
       return Seq.empty
     }
     val fields = targetPlan.output.map { f =>

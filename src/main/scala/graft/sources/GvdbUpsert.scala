@@ -54,18 +54,14 @@ object GvdbUpsert {
           .localCheckpoint(true)
         val mutated = flagged.drop(E)
         graft.core.PlanDump.dump(mutated, "upsert_result")
-        // touched = every batch id: pre-image (replaced rows' files
-        // rewrite) and post-image (a dead raw duplicate of an
-        // inserted id purges with its file) coincide here; ride-along
-        // excludes only the REPLACED (live-matched) pre-images. One
+        // pre-image = the REPLACED (live-matched) ids, the only rows
+        // the ride-along excludes; post-image = every batch id (a dead
+        // raw duplicate of an inserted id purges with its file). One
         // bounded collect of those ids drives the commit's key steps.
-        val replaced = col(E) === 1
-        val keys = GvdbRowLevel.collectKeys(flagged.select(
-          when(replaced, col(VectorSchema.ID)), col(VectorSchema.ID),
-          lit(null).cast("string")))
-        GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated,
-          flagged.select(VectorSchema.ID), flagged.where(replaced).select(VectorSchema.ID),
-          keys)
+        val keyCols = flagged.select(when(col(E) === 1, col(VectorSchema.ID)),
+          col(VectorSchema.ID), lit(null).cast("string"))
+        GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated, keyCols,
+          GvdbRowLevel.collectKeys(keyCols))
       } else {
         val ids = Seq(VectorSchema.ID)
         val tgt = table.df.select(VectorSchema.ID, VectorSchema.METADATA,

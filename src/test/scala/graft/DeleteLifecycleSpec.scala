@@ -143,10 +143,23 @@ class DeleteLifecycleSpec extends SparkSpec with Matchers {
     tbl.insert(mkRows(0 until 10))
     tbl.delete(col(VectorSchema.ID).isin("2", "7"))
     val root = SwapRenameFailingFs.on(spark, tbl.root)
+    def files(dir: String) = Option(new java.io.File(dir).list()).map(_.toSet)
+    val before = files(tbl.root)
+    def census = tbl.df.collect()
+      .map(r => r.getString(0) -> r.getAs[Seq[Float]](VectorSchema.EMBEDDING)).toMap
+    val live = census
     // an upsert touching row 3 rewrites its file and folds the
     // tombstones of every victim file through `.tombstones__rewrite`
     intercept[java.io.IOException] {
-      graft.sources.GvdbUpsert(spark, root, mkRows(3 until 4), Some(4))
+      graft.sources.GvdbUpsert(spark, root, mkRows(3 until 4).withColumn(
+        VectorSchema.EMBEDDING, array(Seq.fill(4)(lit(-1f)): _*)), Some(4))
     }.getMessage should include("tombstone")
+    // the failed commit leaves the table as it was: the appended
+    // replacement is gone, the victims and both tombstones stay
+    files(tbl.root) shouldBe before
+    tbl.tombstoneCount shouldBe 2L
+    census shouldBe live
+    live.keySet shouldBe (0 until 10).map(_.toString).toSet -- Set("2", "7")
+    Seq("__rewrite", "__retired").foreach(s => files(tbl.root + ".tombstones" + s) shouldBe None)
   }
 }

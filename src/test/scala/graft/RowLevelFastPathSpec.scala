@@ -162,13 +162,15 @@ class RowLevelFastPathSpec extends SparkSpec with Matchers {
 
   // Spark jobs per touched-first commit on the fixture below: the key
   // steps (gate, range and Bloom probes, victim scan, ride-along
-  // anti-join) run from one driver-side key collect. Measured 13 / 9 /
-  // 11 with that collect and 30 / 21 / 23 when each step ran its own
-  // Spark action over the pinned frame; the bounds leave two jobs of
-  // slack for adaptive-execution stage splits.
-  private val MergeJobs = 15
-  private val UpdateJobs = 11
-  private val UpsertJobs = 13
+  // anti-join) run from one driver-side key collect, and the MERGE
+  // target prune, the victim scan and the ride-along each broadcast a
+  // local relation of those keys (one small job each). Measured 17 /
+  // 12 / 14 that way and 30 / 21 / 23 when each step ran its own Spark
+  // action over the pinned frame; the bounds leave two jobs of slack
+  // for adaptive-execution stage splits.
+  private val MergeJobs = 19
+  private val UpdateJobs = 14
+  private val UpsertJobs = 16
 
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
@@ -254,35 +256,81 @@ class RowLevelFastPathSpec extends SparkSpec with Matchers {
     spark.sql("DROP TABLE fpc.c1.t")
   }
 
+  test("MERGE cardinality violation on an indexed table throws from the distributed gate") {
+    // an index tier takes the MERGE off the touched-first path: no key
+    // collect, so the gate is the shuffle over the classified join
+    init()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS fpc.c2")
+    spark.sql("""CREATE TABLE fpc.c2.t
+                 (id string, metadata string, embedding array<float>) USING gvdb""")
+    rows(0 until 4, i => i.toFloat).createOrReplaceTempView("fpc2_base")
+    spark.sql("INSERT INTO fpc.c2.t SELECT * FROM fpc2_base")
+    val table = new VectorTable(spark, s"$warehouse/c2/t", 1)
+    table.buildHnswIndex()
+    rows(1 until 3, _ => 50f).unionByName(rows(2 until 3, _ => 60f))
+      .createOrReplaceTempView("fpc2_dup")
+    intercept[Exception] {
+      spark.sql("""MERGE INTO fpc.c2.t t USING fpc2_dup c ON t.id = c.id
+        WHEN MATCHED THEN UPDATE SET embedding = c.embedding""")
+    }.getMessage should include("MERGE_CARDINALITY_VIOLATION")
+    census("fpc.c2.t") shouldBe (0 until 4).map(i => f"r$i%03d" -> i.toLong).toMap
+    table.hnswIndexMeta.isDefined shouldBe true
+    spark.sql("DROP TABLE fpc.c2.t")
+  }
+
   test("above the probe cap the distributed commit writes the same table") {
-    // the upsert's touched-first commit, once from the collected keys
-    // and once with a cap of 0 (keys not collected: distributed range
-    // join, victim semi-join, ride-along anti-join) on twin fixtures
-    def commit(root: String, batch: org.apache.spark.sql.DataFrame, cap: Int): Unit = {
-      val table = new VectorTable(spark, root, 1)
-      val flagged = batch.join(table.df.select(col("id"), lit(1).as("e")), Seq("id"), "left")
-        .localCheckpoint(true)
-      val replaced = col("e") === 1
-      val keys = GvdbRowLevel.collectKeys(flagged.select(
-        when(replaced, col("id")), col("id"), lit(null).cast("string")), cap)
-      keys.isDefined shouldBe (cap > 0)
-      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, flagged.drop("e"),
-        flagged.select("id"), flagged.where(replaced).select("id"), keys)
-    }
-    val base = java.nio.file.Files.createTempDirectory("graft-fastpath-cap").toString
+    // MERGE, UPDATE and upsert on twin fixtures, once from the
+    // collected keys and once with a probe cap of 0: keys not
+    // collected, so the MERGE prunes its target by a semi-join on the
+    // cluster and runs the distributed cardinality gate, the victim
+    // lookup runs its range join and semi-join scan, and the
+    // ride-along anti-joins the pre-image ids on the cluster
+    init()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS fpc.cap")
     val tables = Seq(0, graft.sources.IdBlooms.MaxProbeIds).map { cap =>
-      val root = s"$base/t$cap"
-      val table = new VectorTable(spark, root, 1).create()
-      Seq(0 until 30, 30 until 60, 60 until 90).foreach(r => table.insert(rows(r, _.toFloat)))
-      table.delete(col("id").isin("r004", "r031"))
-      commit(root, rows((2 until 6) ++ (31 until 33) ++ (95 until 97), i => (i + 500).toFloat), cap)
-      commit(root, rows((40 until 42) ++ (97 until 98), i => (i + 900).toFloat), cap)
-      (table.tombstoneCount, spark.read.parquet(root)
-        .select(col("id"), col("embedding")(0).cast("long"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).sorted.toSeq)
+      val t = s"fpc.cap.t$cap"
+      spark.sql(s"CREATE TABLE $t (id string, metadata string, embedding array<float>) USING gvdb")
+      Seq(0 until 30, 30 until 60, 60 until 90).foreach { r =>
+        rows(r, _.toFloat).createOrReplaceTempView("fpcap_b")
+        spark.sql(s"INSERT INTO $t SELECT * FROM fpcap_b")
+      }
+      val root = s"$warehouse/cap/t$cap"
+      new VectorTable(spark, root, 1).delete(col("id").isin("r004", "r031"))
+      rows((2 until 6) ++ (31 until 33) ++ (95 until 97), i => (i + 500).toFloat)
+        .createOrReplaceTempView("fpcap_chg")
+      GvdbRowLevel.probeCap.withValue(cap) {
+        GvdbRowLevel.collectKeys(spark.range(1).selectExpr("'a'", "'b'", "'c'"))
+          .isDefined shouldBe (cap > 0)
+        spark.sql(s"""MERGE INTO $t t USING fpcap_chg c ON t.id = c.id
+          WHEN MATCHED THEN UPDATE SET embedding = c.embedding
+          WHEN NOT MATCHED THEN INSERT (id, metadata, embedding)
+            VALUES (c.id, c.metadata, c.embedding)""")
+        spark.sql(s"UPDATE $t SET embedding = array(CAST(embedding[0] + 700 AS float)) " +
+          "WHERE id IN ('r010', 'r011', 'r095')")
+        graft.sources.GvdbUpsert(spark, root,
+          rows((40 until 42) ++ (97 until 98), i => (i + 900).toFloat), Some(1))
+        rows(Seq(20, 20), _ => 0f).createOrReplaceTempView("fpcap_dup")
+        intercept[Exception] {
+          spark.sql(s"""MERGE INTO $t t USING fpcap_dup c ON t.id = c.id
+            WHEN MATCHED THEN UPDATE SET embedding = c.embedding""")
+        }.getMessage should include("MERGE_CARDINALITY_VIOLATION")
+      }
+      val raw = spark.read.parquet(root).select(col("id"), col("embedding")(0).cast("long"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).sorted.toSeq
+      (new VectorTable(spark, root, 1).tombstoneCount, raw, census(t))
     }
     tables(0) shouldBe tables(1)
     tables(0)._2.map(_._1).distinct.length shouldBe tables(0)._2.length // raw ids unique
+    // r004 and r031 were deleted, so the MERGE re-inserts them
+    val want = ((0 until 90) ++ (95 until 98)).map(i => f"r$i%03d" -> (i match {
+      case x if x >= 2 && x < 6 || x >= 31 && x < 33 || x == 96 => x + 500
+      case 95 => 95 + 500 + 700
+      case x if x == 10 || x == 11 => x + 700
+      case x if x >= 40 && x < 42 || x == 97 => x + 900
+      case x => x
+    }).toLong).toMap
+    tables(0)._3 shouldBe want
+    tables(0)._1 shouldBe 0L // both dead twins purged with their files
   }
 
   test("the driver-side range probe orders ids as UTF-8 bytes, not UTF-16") {
