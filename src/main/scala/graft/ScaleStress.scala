@@ -302,6 +302,11 @@ object ScaleStress {
           spark.conf.unset("spark.graft.graph.localEdgeMax")
           spark.conf.unset("spark.graft.cc.localEdgeMax")
         }
+        // the components table is memoized per (session, dir): evict
+        // it, or the forced run would read the local run's labels
+        SparkEntry.componentsMemo.synchronized {
+          SparkEntry.componentsMemo.remove((spark, src)).foreach(_.unpersist(blocking = false))
+        }
         try {
           val t0 = System.nanoTime()
           val rows = SparkEntry.queries(name)(spark, src).collect()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.core.VectorSchema
-import graft.sources.{GvdbTable, GvdbWrite}
+import graft.sources.GvdbTable
 import graft.table.VectorTable
 
 /** Row-level SQL for gvdb tables — `MERGE INTO` (the CDC-apply-by-SQL
@@ -21,8 +21,9 @@ import graft.table.VectorTable
   * machinery (the `vdb_upsert` semantics) instead of Spark's
   * `SupportsRowLevelOperations` plumbing — and with the same
   * granularity a group-based connector would reach: rewrites are
-  * FILE-GROUP copy-on-write ([[GvdbRowLevel.rewrite]]), replacing only
-  * the part files that hold touched rows. Subquery predicates work
+  * FILE-GROUP copy-on-write ([[GvdbRowLevel.groupCopyOnWriteMutated]]),
+  * replacing only the part files that hold touched rows. Subquery
+  * predicates work
   * throughout (the deferred Column evaluation re-plans them like any
   * Dataset operation).
   *
@@ -112,24 +113,6 @@ class GvdbMergeRule(spark: SparkSession) extends Rule[LogicalPlan]
   }
 }
 
-/** The executed merge. Row classification is one full-outer join of
-  * target and source on the merge condition, with presence flags and a
-  * first-matching-action CASE — exactly the `MergeRows` semantics,
-  * expressed as plain DataFrame operators:
-  *
-  *  - DELETES-ONLY merges (every action a DELETE) stay merge-on-read:
-  *    the matched target ids are tombstoned ([[VectorTable.deleteIds]],
-  *    O(matched), no data rewrite) — the cheap CDC-retraction shape;
-  *  - merges carrying UPDATE/INSERT actions route through
-  *    [[GvdbRowLevel.rewrite]]: FILE-GROUP copy-on-write on an
-  *    un-indexed table (only the part files holding touched rows are
-  *    replaced — Spark's group-based row-level operation at file
-  *    granularity, so a CDC batch touching 0.1% of the files rewrites
-  *    0.1% of the table; an insert-only merge is a pure append),
-  *    whole-table copy-on-write with index rebuild when a persisted
-  *    tier exists (the [[VectorTable.vacuum]] cost contract — the
-  *    rebuild dominates either way).
-  */
 /** Plain (non-Expression) holder for the merge spec: keeps the
   * possibly-still-unresolved expressions out of the command's
   * TreeNode-scanned product members, so `CheckAnalysis` sees a
@@ -165,42 +148,12 @@ private[graft] object GvdbRowLevel {
       case dt => dt
     }
 
-  /** The provenance column threaded through a rewrite's result frame:
-    * the target row's ORIGINAL id for target-derived rows (stable even
-    * when the command rewrites `id` itself), null for inserted rows. */
-  val Origin = "__gvdb_origin"
-
   /** Pinned tombstone-table schema — a schema-less parquet read throws
     * on a file-less directory (reachable mid-append: the committer
     * creates the output dir before the job's plan runs). */
   private val tombSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField(VectorSchema.ID,
       org.apache.spark.sql.types.StringType)))
-
-  /** Routes a mutating rewrite. Without a persisted index the rewrite
-    * is FILE-GROUP copy-on-write ([[groupCopyOnWrite]]): only the part
-    * files that CONTAIN mutated rows are replaced — Spark's
-    * group-based row-level operation at file granularity, so a CDC
-    * batch touching 0.1% of a 100 TB table rewrites ~0.1% of its
-    * files, not the table. With an index tier present the rewrite
-    * stays whole-table ([[copyOnWrite]]) with an index rebuild: a
-    * rewrite invalidates persisted tiers either way, and the rebuild
-    * dominates the write regardless of its granularity. */
-  def rewrite(spark: SparkSession, root: String,
-      result: org.apache.spark.sql.DataFrame,
-      touched: org.apache.spark.sql.DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // one writer turn spans the whole rewrite (append + victim drop +
-    // tombstone fold + snapshot expiry); inner mutators reenter
-    graft.core.WriterLock.withLock(fs, root) {
-      val table = new VectorTable(spark, root, 1)
-      val indexed = table.annIndexMeta.isDefined || table.hnswIndexMeta.isDefined ||
-        table.ivfPqIndexMeta.isDefined || table.bqIndexMeta.isDefined
-      if (indexed) copyOnWrite(spark, root, result.drop(Origin))
-      else groupCopyOnWrite(spark, root, result, touched)
-    }
-  }
 
   /** The key bound of a touched-first commit: a key set up to it is
     * collected to the driver and drives the commit from there; a
@@ -265,7 +218,7 @@ private[graft] object GvdbRowLevel {
 
   /** The touched ids (pre-image ∪ post-image) of a key projection, on
     * the cluster. */
-  private[graft] def touchedOf(keys: org.apache.spark.sql.DataFrame) =
+  private def touchedOf(keys: org.apache.spark.sql.DataFrame) =
     preImageOf(keys).union(keyColumn(keys, 1))
 
   /** Whether any id of `sorted` (ascending in Spark's binary string
@@ -400,59 +353,30 @@ private[graft] object GvdbRowLevel {
     (victims, victimIds)
   }
 
-  /** File-group copy-on-write: victims = the part files holding any
-    * `touched` id; the replacement (victim-origin result rows + the
-    * inserts) appends FIRST — its plan still reads the victims — then
-    * the victim files drop, the tombstone ids they carried leave the
-    * tombstone table (keeping the raw-minus-tombstones arithmetic
-    * exact: a victim's dead rows are now physically gone), and ONLY
-    * the snapshots whose manifests reference a victim expire
-    * (selective retention). Rows in victim files that the command did NOT touch
-    * ride along via the origin semi-join; rows in untouched files are
-    * never read twice nor rewritten. Crash window: between the append
-    * and the victim deletion a reader could see a touched row twice —
-    * the same single-writer, non-transactional contract as the rest
-    * of the format's rewrite points. */
-  private def groupCopyOnWrite(spark: SparkSession, root: String,
-      result: org.apache.spark.sql.DataFrame,
-      touched: org.apache.spark.sql.DataFrame): Unit = {
-    val hfs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val touchedIds = touched
-      .select(col(touched.columns.head).as(VectorSchema.ID)).distinct()
-      .localCheckpoint(true) // read by the capped collect and, above the cap, the joins
-    val (victims, victimIds) = victimLookup(spark, root, touchedIds)
-    val replacement = result.where(col(Origin).isNull)
-      .unionByName(result.join(
-        victimIds.withColumnRenamed(VectorSchema.ID, Origin), Seq(Origin), "left_semi"))
-      .drop(Origin)
-    appendAndRetire(spark, root, hfs, replacement, victims, victimIds)
-  }
-
-  /** Touched-first group copy-on-write (guide §1.2/§3 — evaluate the
-    * source↔target join once, feed the rewrite only MUTATED rows):
-    * `mutated` carries ONLY the rows the command writes (updated rows
-    * post-assignment + deduped inserts — never the whole-table copy
-    * rows the legacy path projected and then semi-joined away), and the
+  /** The one rewrite route of MERGE (when it writes rows), UPDATE and
+    * upsert: touched-first group copy-on-write (guide §1.2/§3 —
+    * evaluate the source↔target join once, feed the rewrite only
+    * MUTATED rows). `mutated` carries ONLY the rows the command writes
+    * (updated rows post-assignment + deduped inserts), and the
     * untouched rows of victim files ride along by reading the victim
     * files DIRECTLY (raw rows minus tombstoned ids minus the pre-image
-    * ids of mutated/deleted target rows). Same replacement set as
-    * [[groupCopyOnWrite]] — every updated row's pre-image file is a
-    * victim by construction (its id is touched), so "mutated ∪
-    * victim-ride-alongs" ≡ "inserts ∪ result ⋉ victimIds" — with the
-    * full-table copy projection never built.
+    * ids of mutated/deleted target rows). Every updated row's
+    * pre-image file is a victim by construction (its id is touched),
+    * so "mutated ∪ victim ride-alongs" is exactly the victims' live
+    * rows after the command, plus its inserts.
     *
-    * `keys` is the command's key projection over its pinned frame
-    * ([[KeyCols]] order) and `collected` what [[collectKeys]] took
-    * from it. With the collected set, the victim lookup and the
-    * ride-along anti-join read local frames of those ids and run no
-    * Spark action over the pinned frame. Without it (a projection
-    * above the probe cap) the touched ids are pinned here from the
-    * projection and the ride-along anti-joins its pre-image column.
-    * The caller holds the writer lock from before its pinned frame was
-    * read (a snapshot read outside the writer turn can commit stale
-    * rows). Caller contract: the table is UNINDEXED (an index tier
-    * forces the whole-table CoW, which needs every surviving row). */
+    * `keys` is the command's key projection ([[KeyCols]] order) and
+    * `collected` what [[collectKeys]] took from it. With the collected
+    * set, the victim lookup and the ride-along anti-join read local
+    * frames of those ids and run no Spark action over the command's
+    * frame. Without it (a projection above the probe cap, or a MERGE
+    * whose target is not key-pruned) the touched ids are pinned here
+    * from the projection and the ride-along anti-joins its pre-image
+    * column. The caller holds the writer lock from before its frame
+    * was read (a snapshot read outside the writer turn can commit
+    * stale rows). Indexed tables take the same route: the LSH bucket
+    * column is written with the rows and the active graph/quantizer
+    * tier rebuilds after the commit ([[appendAndRetire]]). */
   private[graft] def groupCopyOnWriteMutated(spark: SparkSession, root: String,
       mutated: org.apache.spark.sql.DataFrame,
       keys: org.apache.spark.sql.DataFrame,
@@ -486,15 +410,18 @@ private[graft] object GvdbRowLevel {
     }
   }
 
-  /** Shared tail of the group-CoW paths: dim gate, extract recompute,
-    * append, tombstone fold, victim deletion, selective snapshot
-    * expiry. A failed fold takes the appended files back out, so the
-    * table stays as it was before the commit. */
+  /** The commit tail of [[groupCopyOnWriteMutated]]: dim gate, the
+    * on-disk columns (LSH buckets, extracts), append, tombstone fold,
+    * victim deletion, selective snapshot expiry, then the rebuild of
+    * an active HNSW / IVF-PQ / BQ tier. A failed fold takes the
+    * appended files back out, so the table stays as it was before the
+    * commit. */
   private def appendAndRetire(spark: SparkSession, root: String,
       hfs: org.apache.hadoop.fs.FileSystem,
       replacement: org.apache.spark.sql.DataFrame,
       victims: Array[String],
       victimIds: org.apache.spark.sql.DataFrame): Unit = {
+    val table = new VectorTable(spark, root, 1)
     // the dim gate the insert path applies (a group write bypasses
     // GvdbWrite.insert, but mixed dimensions must still be impossible)
     val dimHead = spark.read.schema(VectorSchema.schema).parquet(root)
@@ -508,10 +435,11 @@ private[graft] object GvdbRowLevel {
             size(col(VectorSchema.EMBEDDING)).cast("string")))))
       case None => replacement
     }
-    // recompute extract columns (derived from metadata) — every append
-    // site must, or a mapped JSON filter would mis-evaluate the rows
-    val toAppend = graft.sources.GvdbExtracts.withColumns(checked,
-      graft.sources.GvdbExtracts.spec(hfs, root))
+    // an empty LSH-indexed table takes its bucket dimension from the
+    // rows it receives
+    val dim = dimHead.orElse(table.annIndexMeta.flatMap(_ =>
+      replacement.select(size(col(VectorSchema.EMBEDDING))).head(1).headOption.map(_.getInt(0))))
+    val toAppend = table.onDiskColumns(checked, dim.getOrElse(table.dim))
     graft.core.PlanDump.dump(toAppend, "groupcow_append")
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val tombPath = new org.apache.hadoop.fs.Path(root + ".tombstones")
@@ -534,11 +462,12 @@ private[graft] object GvdbRowLevel {
       // rewrite keeps serving time travel (Delta/Iceberg-style
       // selective expiry, not the vacuum/reindex retention-zero rule,
       // which is for whole-table rewrites where every manifest is dead)
-      new VectorTable(spark, root, 1).expireSnapshotsReferencing(
+      table.expireSnapshotsReferencing(
         victims.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet)
     }
     // (the replacement files stay unbloomed-conservative until the
     // next victim lookup reads — and then blooms — them)
+    table.rebuildIndexTier()
   }
 
   /** The tombstone fold of a group rewrite: the tombstone table minus
@@ -573,48 +502,28 @@ private[graft] object GvdbRowLevel {
       ()
     }
   }
-
-  /** Whether `root` carries any persisted index tier — tiered tables
-    * take the whole-table CoW (index rebuild dominates), so the
-    * touched-first fast paths require this to be false. */
-  private[graft] def indexed(spark: SparkSession, root: String): Boolean = {
-    val t = new VectorTable(spark, root, 1)
-    t.annIndexMeta.isDefined || t.hnswIndexMeta.isDefined ||
-      t.ivfPqIndexMeta.isDefined || t.bqIndexMeta.isDefined
-  }
-
-  /** The whole-table copy-on-write tail: stage the result to a scratch
-    * parquet (the result plan READS the target the overwrite is about
-    * to delete), re-insert with overwrite, rebuild whichever index
-    * tier was active (the vacuum contract). */
-  def copyOnWrite(spark: SparkSession, root: String,
-      result: org.apache.spark.sql.DataFrame): Unit = {
-    // staged beside the table (see the tombstone-rewrite note): the
-    // result plan READS the target the overwrite is about to delete,
-    // and the scratch must live on the table's FileSystem, not the
-    // driver's local disk
-    val scratch = root + ".rowlevel__staged"
-    val hfs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      result.write.mode("overwrite").parquet(scratch)
-      // the builders resolve the embedding dimension from DATA
-      // (VectorTable.actualDim), so the dummy-dim handle is safe here
-      val table = new VectorTable(spark, root, 1)
-      val (ann, hnsw, ivfpq, bq) =
-        (table.annIndexMeta, table.hnswIndexMeta, table.ivfPqIndexMeta, table.bqIndexMeta)
-      GvdbWrite.insert(spark, root, spark.read.parquet(scratch), overwrite = true, None)
-      ann.foreach(m => table.buildAnnIndex(m.tables, m.bits, m.seed))
-      hnsw.foreach(m => table.buildHnswIndex(m.m, m.efConstruction))
-      ivfpq.foreach(m => table.buildIvfPqIndex(m.nCells, m.m, m.pqK, m.nProbe, m.shortlistFactor))
-      bq.foreach(m => table.buildBqIndex(m.coarseFactor, m.fineFactor))
-    } finally {
-      hfs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      ()
-    }
-  }
 }
 
+/** The executed merge. Row classification is one full-outer join of
+  * target and source on the merge condition, with presence flags and a
+  * first-matching-action CASE — exactly the `MergeRows` semantics,
+  * expressed as plain DataFrame operators:
+  *
+  *  - DELETES-ONLY merges (every action a DELETE) stay merge-on-read:
+  *    the matched target ids are tombstoned ([[VectorTable.deleteIds]],
+  *    O(matched), no data rewrite) — the cheap CDC-retraction shape;
+  *  - merges carrying UPDATE/INSERT actions commit through
+  *    [[GvdbRowLevel.groupCopyOnWriteMutated]] on every table, indexed
+  *    or not: only the part files holding touched rows are replaced
+  *    (Spark's group-based row-level operation at file granularity, so
+  *    a CDC batch touching 0.1% of the files rewrites 0.1% of the
+  *    table; an insert-only merge is a pure append).
+  *
+  * A merge whose target can be key-pruned ([[fastPathKey]]) joins a
+  * pruned target, pins the classified rows and collects their keys
+  * once; any other merge joins the whole target and hands the commit
+  * no collected keys (`keys = None`), so its key steps run on the
+  * cluster. */
 case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     sourcePlan: LogicalPlan, spec: GvdbMergeSpec)
     extends LeafRunnableCommand
@@ -638,9 +547,10 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     case o => o
   }
 
-  /** Touched-first fast-path eligibility (guide §1.2/§3: evaluate the
-    * id join once against a key-pruned target, not three times against
-    * the whole table). Eligible when (a) there are no NOT MATCHED BY
+  /** Whether the target side of the classification join can be
+    * key-pruned (guide §1.2/§3: evaluate the id join against the
+    * target rows whose id appears among the source keys, not against
+    * the whole table). Prunable when (a) there are no NOT MATCHED BY
     * SOURCE actions (those classify every target row), (b) the resolved
     * merge condition carries a conjunct `t.<id> = <expr over source>`,
     * and (c) every INSERT action assigns the id to that same source
@@ -679,11 +589,11 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
                     }
                 }
               assigned.exists(e => stripCast(e).semanticEquals(stripCast(k)))
-            case _ => false // non-insert NOT MATCHED action: stay legacy
+            case _ => false // non-insert NOT MATCHED action: unpruned
           }
         }
       }
-    } catch { case _: Throwable => None } // unresolvable shape: stay legacy
+    } catch { case _: Throwable => None } // unresolvable shape: unpruned
   }
 
   /** One writer turn from the snapshot read through the commit: a
@@ -705,24 +615,19 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     val hasUpdateOrInsert = (matchedActions ++ notMatchedActions ++ notMatchedBySourceActions)
       .exists { case _: DeleteAction => false; case _ => true }
 
-    // Touched-first fast path: the target side of the classification
-    // join is pruned down to rows whose id appears among the source
-    // keys (at 100 TB: one key-filtered scan instead of a full-table
-    // full-outer join), the classified join is pinned and evaluated
-    // ONCE (the legacy path re-evaluated
-    // the full join for the cardinality gate, the touched-id pin, and
-    // twice inside the replacement union), and the rewrite receives
-    // only the MUTATED rows — untouched victim-file rows ride along
-    // from the victim files themselves (groupCopyOnWriteMutated).
-    // A merge that needs every target row (NOT MATCHED BY SOURCE), a
-    // non-id join condition, an insert reassigning ids away from the
-    // join key, or an indexed table (whole-table CoW) stays on the
-    // legacy path below, byte-identical to r12.
+    // Key pruning: the target side of the classification join is
+    // pruned down to rows whose id appears among the source keys (at
+    // 100 TB: one key-filtered scan instead of a full-table full-outer
+    // join), and the classified join is pinned and evaluated ONCE. A
+    // merge that needs every target row (NOT MATCHED BY SOURCE), a
+    // non-id join condition, or an insert reassigning ids away from
+    // the join key joins the whole target instead. Either way the
+    // rewrite receives only the MUTATED rows — untouched victim-file
+    // rows ride along from the victim files themselves
+    // (groupCopyOnWriteMutated).
     val srcKey = fastPathKey(fullJoined, idField)
-    val fast = srcKey.isDefined &&
-      (!hasUpdateOrInsert || !GvdbRowLevel.indexed(spark, root))
     val joined = srcKey match {
-      case Some(key) if fast =>
+      case Some(key) =>
         // the target side is semi-joined with the source keys: a
         // broadcast local relation of them when they fit under the
         // probe cap — collecting a local source (a temp view of driver
@@ -748,11 +653,11 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
           .join(tPruned.withColumn(T, lit(1)), GraftBridge.column(spec.cond), "full_outer")
       case _ => fullJoined
     }
-    runClassified(spark, joined, fast, targetFields, idField, hasUpdateOrInsert)
+    runClassified(spark, joined, srcKey.isDefined, targetFields, idField, hasUpdateOrInsert)
   }
 
   private def runClassified(spark: SparkSession,
-      joined: org.apache.spark.sql.DataFrame, fast: Boolean,
+      joined: org.apache.spark.sql.DataFrame, pruned: Boolean,
       targetFields: Seq[Attribute], idField: Attribute,
       hasUpdateOrInsert: Boolean): Seq[Row] = {
 
@@ -796,8 +701,8 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     val mutatedCodes: Seq[Int] = dropCodes.filter(_ > 0) ++ updateCodes
     def idStr = GraftBridge.column(idField).cast("string")
 
-    // fast path: ONE evaluation of the (key-pruned) join, pinned with
-    // an EAGER localCheckpoint, not persist: the classified set is
+    // pruned: ONE evaluation of the key-pruned join, pinned with an
+    // EAGER localCheckpoint, not persist: the classified set is
     // batch-sized (candidate rows + source), and a checkpoint truncates
     // the lineage to a LogicalRDD leaf — every downstream consumer then
     // plans against a tiny plan, where a persist() would make each of
@@ -809,7 +714,9 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     // lookup and the ride-along anti-join run from that set.
     val classified0 = joined.withColumn(ACT, act)
     graft.core.PlanDump.dump(classified0, "merge_classified")
-    val classified = if (fast) classified0.localCheckpoint(true) else classified0
+    // an unpruned join is table-sized: never pinned nor collected (a
+    // collect's coalesce(1) would run the whole join in one task)
+    val classified = if (pruned) classified0.localCheckpoint(true) else classified0
     // the key projection: pre-image = target rows the merge rewrites
     // or deletes (their files must rewrite); post-image = every row it
     // writes (updates and inserts): a RAW dead row sharing a written
@@ -823,7 +730,7 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
       when(col(ACT).isin((updateCodes ++ insertCodes).map(Int.box): _*),
         valueFor(idField).cast("string")),
       when(col(T).isNotNull && col(S).isNotNull, idStr))
-    val keys = if (fast) GvdbRowLevel.collectKeys(keyCols) else None
+    val keys = if (pruned) GvdbRowLevel.collectKeys(keyCols) else None
 
     // Cardinality gate (the MergeRowsExec / Delta contract): a target
     // row matched by MULTIPLE source rows would be updated/deleted more
@@ -851,10 +758,8 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
 
     val raw = classified
       .where(!col(ACT).isin(dropCodes.map(Int.box): _*))
-      .select((targetFields.map(valueFor) :+
-        idStr.as(GvdbRowLevel.Origin) :+
-        col(ACT)).toIndexedSeq: _*)
-    // Inserted rows (Origin null) re-enter the table's first-wins
+      .select((targetFields.map(valueFor) :+ col(T) :+ col(ACT)).toIndexedSeq: _*)
+    // Inserted rows (no target side) re-enter the table's first-wins
     // dedup contract here — the group-CoW append bypasses
     // GvdbWrite.insert, so without this a NOT MATCHED INSERT whose id
     // already exists (reachable whenever ON is not id equality) would
@@ -863,23 +768,17 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     // (dropDuplicates) then anti-join against the ids that SURVIVE the
     // merge (not the raw table: an id deleted by this same merge is
     // legitimately re-insertable).
-    val survivors = raw.where(col(GvdbRowLevel.Origin).isNotNull)
+    val survivors = raw.where(col(T).isNotNull)
     val inserted =
       if (notMatchedActions.isEmpty) None
-      else Some(raw.where(col(GvdbRowLevel.Origin).isNull)
+      else Some(raw.where(col(T).isNull)
         .dropDuplicates(VectorSchema.ID)
         .join(survivors.select(col(VectorSchema.ID)), Seq(VectorSchema.ID), "left_anti"))
-    if (fast) {
-      // only the MUTATED output rows enter the rewrite; untouched
-      // victim-file rows ride along inside groupCopyOnWriteMutated
-      val updatesOut = survivors.where(col(ACT).isin(updateCodes.map(Int.box): _*))
-      val mutatedOut = inserted.fold(updatesOut)(updatesOut.unionByName(_))
-        .drop(ACT, GvdbRowLevel.Origin)
-      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutatedOut, keyCols, keys)
-    } else {
-      val result = inserted.fold(raw)(survivors.unionByName(_)).drop(ACT)
-      GvdbRowLevel.rewrite(spark, root, result, GvdbRowLevel.touchedOf(keyCols))
-    }
+    // only the MUTATED output rows enter the rewrite; untouched
+    // victim-file rows ride along inside groupCopyOnWriteMutated
+    val updatesOut = survivors.where(col(ACT).isin(updateCodes.map(Int.box): _*))
+    val mutatedOut = inserted.fold(updatesOut)(updatesOut.unionByName(_)).drop(ACT, T)
+    GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutatedOut, keyCols, keys)
     Seq.empty
   }
 }
@@ -888,14 +787,9 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
 case class GvdbUpdateSpec(assignments: Seq[Assignment], condition: Option[Expression])
 
 /** SQL `UPDATE cat.ns.t SET ... WHERE ...` — file-group copy-on-write
-  * on an un-indexed table: the MATCHED rows are evaluated ONCE
-  * (persisted), their assignments plus the untouched rows of victim
-  * files re-enter via [[GvdbRowLevel.groupCopyOnWriteMutated]] — the
-  * legacy path projected the WHOLE table through the assignment CASE
-  * and evaluated the condition three times (result + pre/post-image
-  * touched ids). With an index tier present the table is replaced
-  * whole with index rebuild (the same vacuum-class cost contract as a
-  * MERGE carrying updates), unchanged. */
+  * on every table, indexed or not: the MATCHED rows are evaluated ONCE
+  * (pinned), and their assignments plus the untouched rows of victim
+  * files re-enter via [[GvdbRowLevel.groupCopyOnWriteMutated]]. */
 case class GvdbUpdateCommand(root: String, targetPlan: LogicalPlan,
     spec: GvdbUpdateSpec) extends LeafRunnableCommand {
 
@@ -909,44 +803,24 @@ case class GvdbUpdateCommand(root: String, targetPlan: LogicalPlan,
     val t = GraftBridge.ofRows(spark, targetPlan)
     val idField = targetPlan.output.find(_.name == VectorSchema.ID).get
     val condCol = spec.condition.map(GraftBridge.column).getOrElse(lit(true))
-    if (!GvdbRowLevel.indexed(spark, root)) {
-      // touched-first: matched rows only, evaluated once and pinned by
-      // an eager localCheckpoint (lineage-truncating — see the
-      // GvdbMergeCommand classified note), then one bounded collect of
-      // their pre/post-image ids drives the commit's key steps
-      val matched = t.where(condCol).localCheckpoint(true)
-      val fields = targetPlan.output.map { f =>
-        GvdbRowLevel.assignCol(spec.assignments, f)
-          .cast(GvdbRowLevel.relaxedType(f)).as(f.name)
-      }
-      val mutated = matched.select(fields.toIndexedSeq: _*)
-      graft.core.PlanDump.dump(mutated, "update_result")
-      val preId = GraftBridge.column(idField).cast("string")
-      val postId = GvdbRowLevel.assignCol(spec.assignments, idField).cast("string")
-      // pre-image and post-image ids (see GvdbMergeCommand: an
-      // assigned id colliding with a RAW dead row must purge that
-      // row's file)
-      val keyCols = matched.select(preId, postId, lit(null).cast("string"))
-      GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated, keyCols,
-        GvdbRowLevel.collectKeys(keyCols))
-      return Seq.empty
-    }
+    // touched-first: matched rows only, evaluated once and pinned by an
+    // eager localCheckpoint (lineage-truncating — see the
+    // GvdbMergeCommand classified note), then one bounded collect of
+    // their pre/post-image ids drives the commit's key steps
+    val matched = t.where(condCol).localCheckpoint(true)
     val fields = targetPlan.output.map { f =>
-      when(condCol, GvdbRowLevel.assignCol(spec.assignments, f))
-        .otherwise(GraftBridge.column(f))
+      GvdbRowLevel.assignCol(spec.assignments, f)
         .cast(GvdbRowLevel.relaxedType(f)).as(f.name)
     }
-    val result = t.select((fields :+
-      GraftBridge.column(idField).cast("string").as(GvdbRowLevel.Origin)).toIndexedSeq: _*)
-    graft.core.PlanDump.dump(result, "update_result")
-    // pre-image ∪ post-image ids (see GvdbMergeCommand: an assigned id
-    // colliding with a RAW dead row must purge that row's file)
-    val touched = t.where(condCol)
-      .select(GraftBridge.column(idField).cast("string").as(VectorSchema.ID))
-      .unionByName(t.where(condCol)
-        .select(GvdbRowLevel.assignCol(spec.assignments, idField)
-          .cast("string").as(VectorSchema.ID)))
-    GvdbRowLevel.rewrite(spark, root, result, touched)
+    val mutated = matched.select(fields.toIndexedSeq: _*)
+    graft.core.PlanDump.dump(mutated, "update_result")
+    val preId = GraftBridge.column(idField).cast("string")
+    val postId = GvdbRowLevel.assignCol(spec.assignments, idField).cast("string")
+    // pre-image and post-image ids (see GvdbMergeCommand: an assigned
+    // id colliding with a RAW dead row must purge that row's file)
+    val keyCols = matched.select(preId, postId, lit(null).cast("string"))
+    GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated, keyCols,
+      GvdbRowLevel.collectKeys(keyCols))
     Seq.empty
   }
 }

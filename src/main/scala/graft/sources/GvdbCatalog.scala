@@ -220,14 +220,22 @@ class GvdbCatalog extends TableCatalog with SupportsNamespaces
     if (!fs.exists(nsPath(newIdent.namespace())))
       throw new NoSuchNamespaceException(catalogName +: newIdent.namespace().toIndexedSeq)
     // rename the table dir AND every dot-suffixed sidecar sibling, so
-    // tombstones/snapshots/indexes follow the name
+    // tombstones/snapshots/indexes follow the name; a failed rename
+    // moves the ones already done back, so the table keeps its old name
     val srcDir = nsPath(oldIdent.namespace())
-    fs.listStatus(srcDir).toSeq.map(_.getPath)
+    val moves = fs.listStatus(srcDir).toList.map(_.getPath)
       .filter(p => p.getName == oldIdent.name() || p.getName.startsWith(oldIdent.name() + "."))
-      .foreach { p =>
+      .map { p =>
         val newName = newIdent.name() + p.getName.stripPrefix(oldIdent.name())
-        fs.rename(p, new Path(nsPath(newIdent.namespace()), newName))
+        p -> new Path(nsPath(newIdent.namespace()), newName)
       }
+    val done = moves.takeWhile { case (from, to) => fs.rename(from, to) }
+    if (done.length < moves.length) {
+      done.foreach { case (from, to) => fs.rename(to, from) }
+      val (from, to) = moves(done.length)
+      throw new java.io.IOException(s"gvdb catalog: could not rename $from to $to; " +
+        s"${oldIdent.name()} keeps its name")
+    }
   }
 
   // ---- namespaces ----

@@ -83,8 +83,11 @@ class GvdbStreamingWrite(spark: SparkSession, root: String, dimOpt: Option[Int],
     val out = fs.create(tmp, true)
     try out.write(epochId.toString.getBytes("UTF-8")) finally out.close()
     fs.delete(ledgerPath, false) // rename won't replace; a crash here = no record
-    fs.rename(tmp, ledgerPath)
-    ()
+    // a false rename leaves no record: fail the epoch commit rather
+    // than report it recorded (the replay it causes is a row-level no-op)
+    if (!fs.rename(tmp, ledgerPath))
+      throw new java.io.IOException(
+        s"gvdb sink: could not rename $tmp to $ledgerPath; epoch $epochId is not recorded")
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {

@@ -663,8 +663,8 @@ class GvdbMicroBatchStream(spark: SparkSession, root: String,
     val out = logFs.create(tmp, true)
     try out.write(GvdbSourceOffset.filesJson(files.toSeq).getBytes("UTF-8")) finally out.close()
     logFs.delete(p, false)
-    logFs.rename(tmp, p)
-    ()
+    if (!logFs.rename(tmp, p))
+      throw new java.io.IOException(s"gvdb source: could not rename $tmp to $p")
   }
 
   private def writeEntry(i: Int, files: Seq[String]): Unit =
@@ -729,8 +729,10 @@ class GvdbMicroBatchStream(spark: SparkSession, root: String,
     }
     if (take.isEmpty) start
     else {
+      // the index advances only once its entry is durable: a failed
+      // write must not leave a pending index with no entry behind it
+      writeEntry(maxLogIndex + 1, take)
       maxLogIndex += 1
-      writeEntry(maxLogIndex, take)
       seen ++= take
       if (maxLogIndex % CompactInterval == 0)
         writeFile(new Path(logDir, s"$maxLogIndex.compact"), seen)

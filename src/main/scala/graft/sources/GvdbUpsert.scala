@@ -9,9 +9,10 @@ import graft.table.VectorTable
 
 /** Keyed upsert over a gvdb table: batch rows REPLACE same-id table
   * rows, new ids insert — the `vdb_upsert` semantics (tombstone-free:
-  * a file-group copy-on-write through [[GvdbRowLevel.rewrite]], so
-  * only the part files holding replaced ids rewrite; an all-new batch
-  * is a pure append). This is the streaming UPDATE-mode sink's apply
+  * a file-group copy-on-write through
+  * [[GvdbRowLevel.groupCopyOnWriteMutated]] on every table, indexed or
+  * not, so only the part files holding replaced ids rewrite; an
+  * all-new batch is a pure append). This is the streaming UPDATE-mode sink's apply
   * (`GvdbStreamingWrite` with `upsert`) and the batch
   * `.option("upsert", "true")` write path.
   *
@@ -31,19 +32,14 @@ object GvdbUpsert {
     graft.core.WriterLock.withLock(fs, root) {
       val shaped = GvdbWrite.shape(data).dropDuplicates(VectorSchema.ID)
       val table = new VectorTable(spark, root, dimOpt.getOrElse(1))
-      val indexed = table.annIndexMeta.isDefined || table.hnswIndexMeta.isDefined ||
-        table.ivfPqIndexMeta.isDefined || table.bqIndexMeta.isDefined
       if (!table.exists) {
         GvdbWrite.insert(spark, root, shaped, overwrite = false, dimOpt)
-      } else if (!indexed) {
-        // touched-first fast path (guide §1.2): ONE pinned batch-side
-        // left join classifies every batch row as update-or-insert,
-        // under the writer turn taken above (the read and the commit
-        // see the same table); the whole-table `copies` projection is
-        // never built — untouched victim-file rows ride along inside
-        // groupCopyOnWriteMutated. The legacy path below evaluated the
-        // table↔batch join four times (copies, updates, inserts, and
-        // again per replacement-union branch).
+      } else {
+        // touched-first (guide §1.2): ONE pinned batch-side left join
+        // classifies every batch row as update-or-insert, under the
+        // writer turn taken above (the read and the commit see the same
+        // table); untouched victim-file rows ride along inside
+        // groupCopyOnWriteMutated
         val E = "__gvdb_exists"
         // eager localCheckpoint, not persist: batch-sized, and the
         // lineage truncation keeps every consumer's plan tiny (see the
@@ -62,24 +58,6 @@ object GvdbUpsert {
           col(VectorSchema.ID), lit(null).cast("string"))
         GvdbRowLevel.groupCopyOnWriteMutated(spark, root, mutated, keyCols,
           GvdbRowLevel.collectKeys(keyCols))
-      } else {
-        val ids = Seq(VectorSchema.ID)
-        val tgt = table.df.select(VectorSchema.ID, VectorSchema.METADATA,
-          VectorSchema.EMBEDDING)
-        val copies = tgt.join(shaped.select(VectorSchema.ID), ids, "left_anti")
-          .withColumn(GvdbRowLevel.Origin, col(VectorSchema.ID))
-        val updates = shaped.join(tgt.select(VectorSchema.ID), ids, "left_semi")
-          .withColumn(GvdbRowLevel.Origin, col(VectorSchema.ID))
-        val inserts = shaped.join(tgt.select(VectorSchema.ID), ids, "left_anti")
-          .withColumn(GvdbRowLevel.Origin,
-            lit(null).cast(org.apache.spark.sql.types.StringType))
-        // touched = every batch id: pre-image (replaced rows' files
-        // rewrite) and post-image (a dead raw duplicate of an inserted
-        // id purges with its file) coincide here
-        val result = copies.unionByName(updates).unionByName(inserts)
-        graft.core.PlanDump.dump(result, "upsert_result")
-        GvdbRowLevel.rewrite(spark, root, result,
-          shaped.select(VectorSchema.ID))
       }
     }
   }

@@ -68,7 +68,11 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     val tmp = new Path(root + "__indexing")
     withExtracts(indexed).write.mode("overwrite").parquet(tmp.toString)
     fs.delete(hadoopPath, true)
-    fs.rename(tmp, hadoopPath)
+    // the data directory is already gone: a false rename must not go
+    // on to drop the tombstones and report an index (see vacuum)
+    if (!fs.rename(tmp, hadoopPath))
+      throw new java.io.IOException(s"gvdb: LSH index build could not rename $tmp to " +
+        s"$hadoopPath; the indexed rows are in $tmp")
     fs.delete(snapsRoot, true) // rewrite: snapshots expire (see snapshot())
     // the rewrite materialized the MoR view (df applies tombstones), so
     // the deletes are now physical — the tombstone table must fold with
@@ -470,6 +474,18 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
   private def withExtracts(df: DataFrame): DataFrame =
     graft.sources.GvdbExtracts.withColumns(df, extractSpec)
 
+  /** Contract-schema rows in their on-disk form: the persisted LSH
+    * bucket column when an LSH index exists (hashed at dimension `d`,
+    * so the LSH tier stays complete without a rebuild), then the
+    * extract columns. The append sites of [[insert]] and the row-level
+    * group rewrite both write through this. */
+  private[graft] def onDiskColumns(rows: DataFrame, d: Int): DataFrame =
+    withExtracts(annIndexMeta match {
+      case Some(m) => rows.withColumn(VectorSchema.ANN_BUCKETS,
+        graft.functions.LshBucketsExpr(col(VectorSchema.EMBEDDING), d, m.tables, m.bits, m.seed))
+      case None => rows
+    })
+
   /** The MoR view WITH the extract columns (the JSON-filter scan path;
     * [[df]] stays contract-only so the columns never leak), optionally
     * over an explicit footer-pruned file subset. */
@@ -773,14 +789,23 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
       // the active tier over the now-physical live set, or the probe
       // under-returns silently (k − deleted rows). A vacuum is already
       // a full data rewrite; the index rebuild is the same
-      // proportional cost. At most one branch fires (single slot).
-      hnswIndexMeta.foreach(meta =>
-        buildHnswIndex(m = meta.m, efConstruction = meta.efConstruction))
-      ivfPqIndexMeta.foreach(meta => buildIvfPqIndex(meta.nCells, meta.m,
-        meta.pqK, meta.nProbe, meta.shortlistFactor))
-      bqIndexMeta.foreach(meta => buildBqIndex(meta.coarseFactor, meta.fineFactor))
+      // proportional cost.
+      rebuildIndexTier()
     }
     this
+  }
+
+  /** Rebuilds the active HNSW / IVF-PQ / BQ tier over the live rows
+    * from its PERSISTED parameters — the index upkeep of a data
+    * rewrite (vacuum, the row-level group rewrite). At most one branch
+    * fires (single slot). The LSH tier needs none: its bucket column
+    * is written with the rows ([[onDiskColumns]]). */
+  private[graft] def rebuildIndexTier(): Unit = {
+    hnswIndexMeta.foreach(meta =>
+      buildHnswIndex(m = meta.m, efConstruction = meta.efConstruction))
+    ivfPqIndexMeta.foreach(meta => buildIvfPqIndex(meta.nCells, meta.m,
+      meta.pqK, meta.nProbe, meta.shortlistFactor))
+    bqIndexMeta.foreach(meta => buildBqIndex(meta.coarseFactor, meta.fineFactor))
   }
 
   /** In-place small-file compaction — the maintenance half of a CDC
@@ -849,13 +874,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
           .otherwise(raise_error(concat(
             lit(s"embedding dim mismatch: expected $dim, got "),
             size(col(VectorSchema.EMBEDDING)).cast("string")))))
-    // keep the persisted ANN index complete across inserts
-    val indexed = annIndexMeta match {
-      case Some(m) => checked.withColumn(VectorSchema.ANN_BUCKETS,
-        graft.functions.LshBucketsExpr(col(VectorSchema.EMBEDDING), dim, m.tables, m.bits, m.seed))
-      case None => checked
-    }
-    val deduped = indexed.dropDuplicates(VectorSchema.ID)
+    val deduped = checked.dropDuplicates(VectorSchema.ID)
     // anti-join unconditionally: against an empty table it is an
     // identity with a near-zero build side, and skipping it would cost
     // a driver-side existence job (df.isEmpty) on EVERY insert — at
@@ -864,7 +883,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     // see [[delete]].
     val fresh = deduped.join(rawDf.select(VectorSchema.ID), Seq(VectorSchema.ID), "left_anti")
     if (hnswIndexMeta.isEmpty && ivfPqIndexMeta.isEmpty && bqIndexMeta.isEmpty) {
-      withExtracts(fresh).write.mode("append").parquet(root)
+      onDiskColumns(fresh, dim).write.mode("append").parquet(root)
     } else {
       // keep the persisted index complete across inserts: the fresh
       // rows become NEW index segments / appended code rows; built
@@ -912,7 +931,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
               .write.mode("append").parquet(bqCodesPath.toString)
           }
         }
-        withExtracts(fresh).write.mode("append").parquet(root)
+        onDiskColumns(fresh, dim).write.mode("append").parquet(root)
         // merge policy AFTER the append is durable: accumulated small
         // delta segments fold once they cross the mergeAt threshold
         autoCompactHnsw()

@@ -138,6 +138,20 @@ class DeleteLifecycleSpec extends SparkSpec with Matchers {
     new java.io.File(tbl.root + ".tombstones").exists() shouldBe true
   }
 
+  test("a failed LSH index build rename throws and keeps the indexed rows") {
+    val tbl = freshTable("delann")
+    tbl.insert(mkRows(0 until 10))
+    tbl.delete(col(VectorSchema.ID) === "4")
+    val failing = new VectorTable(spark, SwapRenameFailingFs.on(spark, tbl.root), 4)
+    intercept[java.io.IOException](failing.buildAnnIndex(tables = 2, bits = 4))
+      .getMessage should include("__indexing")
+    // the data directory is gone, but the live rows are in the staged
+    // rewrite the error names; no index is reported built
+    spark.read.parquet(tbl.root + "__indexing").count() shouldBe 9L
+    new java.io.File(tbl.root + ".tombstones").exists() shouldBe true
+    new java.io.File(tbl.root + ".ann_index.json").exists() shouldBe false
+  }
+
   test("a failed tombstone-fold rename throws instead of dropping every tombstone") {
     val tbl = freshTable("delfold")
     tbl.insert(mkRows(0 until 10))

@@ -650,6 +650,28 @@ class GvdbCatalogSpec extends SparkSpec with Matchers {
     spark.catalog.tableExists("vdbcat.onlyns") shouldBe false
   }
 
+  test("a failed table rename throws and the table keeps its name and sidecars") {
+    // a catalog over the rename-failing filesystem: the table directory
+    // (its name ends in a failing suffix) cannot move, its sidecars can
+    val wh = SwapRenameFailingFs.on(spark,
+      Files.createTempDirectory("graft-catalog-renamefail").toString)
+    spark.conf.set("spark.sql.catalog.failcat", "graft.sources.GvdbCatalog")
+    spark.conf.set("spark.sql.catalog.failcat.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS failcat.r")
+    spark.sql("""CREATE TABLE failcat.r.t__rewrite
+                 (id string, metadata string, embedding array<float>) USING gvdb""")
+    spark.sql("INSERT INTO failcat.r.t__rewrite VALUES ('a', '{}', array(1.0f)), " +
+      "('b', '{}', array(2.0f))")
+    spark.sql("DELETE FROM failcat.r.t__rewrite WHERE id = 'b'")
+    intercept[Exception](spark.sql("ALTER TABLE failcat.r.t__rewrite RENAME TO failcat.r.t2"))
+      .getMessage should include("could not rename")
+    val local = wh.stripPrefix(s"${SwapRenameFailingFs.Scheme}://") + "/r"
+    new java.io.File(s"$local/t__rewrite.tombstones").exists() shouldBe true
+    new java.io.File(local).list().filter(_.startsWith("t2")) shouldBe empty
+    spark.sql("SELECT id FROM failcat.r.t__rewrite").collect().map(_.getString(0)) shouldBe
+      Array("a")
+  }
+
   test("maintenance procedures: CALL system.snapshot / compact / vacuum") {
     init()
     import spark.implicits._

@@ -605,6 +605,35 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
     new VectorTable(spark, root, 2).drop()
   }
 
+  test("a failed sink-ledger rename fails the epoch commit") {
+    val root = SwapRenameFailingFs.on(spark, freshRoot("ledgerfail"))
+    val w = new graft.sources.GvdbStreamingWrite(spark, root, Some(2), truncate = false,
+      queryId = "q1", schema = graft.core.VectorSchema.schema)
+    intercept[java.io.IOException](w.commit(0L, Array.empty))
+      .getMessage should include("epoch 0 is not recorded")
+    w.committedEpoch shouldBe -1L
+  }
+
+  test("a failed source-log rename throws and leaves no entry-less batch") {
+    import graft.sources.{GvdbLogOffset, GvdbMicroBatchStream}
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val root = freshRoot("logfail")
+    rows(0 until 4).write.format("gvdb").option("dim", "2").mode(SaveMode.Overwrite).save(root)
+    val cp = SwapRenameFailingFs.on(spark,
+      Files.createTempDirectory("graft-gvdbspec-logfailcp").toString)
+    val s = new GvdbMicroBatchStream(spark, root,
+      graft.core.VectorSchema.schema, Array.empty, None, cp)
+    // the entry never became durable, so a retry must not offer batch 1
+    // as pending: it tries the write again
+    (1 to 2).foreach { _ =>
+      intercept[java.io.IOException](s.latestOffset(GvdbLogOffset(0), ReadLimit.allAvailable()))
+        .getMessage should include("rename")
+    }
+    new java.io.File(cp.stripPrefix(s"${SwapRenameFailingFs.Scheme}://") +
+      "/gvdb_seen_files/1").exists() shouldBe false
+    new VectorTable(spark, root, 2).drop()
+  }
+
   test("write shaping: positional matching is the VALUES carve-out, never a partial-name cross") {
     import spark.implicits._
     import graft.sources.GvdbWrite

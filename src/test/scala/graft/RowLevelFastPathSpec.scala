@@ -8,13 +8,13 @@ import org.scalatest.matchers.should.Matchers
 import graft.plans.GvdbRowLevel
 import graft.table.VectorTable
 
-/** The r13 touched-first row-level rewrite (GvdbMergeRule): MERGE /
-  * UPDATE / upsert over un-indexed tables evaluate the source↔target
-  * id join ONCE against a key-pruned target and feed the group CoW
-  * only MUTATED rows, with untouched victim-file rows riding along
-  * from the victim files themselves. These tests pin the fast path's
-  * results to the semantics the legacy (r12) path had — including the
-  * shapes that must fall back to it. */
+/** The touched-first row-level rewrite (GvdbMergeRule): MERGE /
+  * UPDATE / upsert feed the group CoW only MUTATED rows, with
+  * untouched victim-file rows riding along from the victim files
+  * themselves — on every table, indexed or not. A MERGE whose target
+  * can be key-pruned evaluates the source↔target id join ONCE against
+  * the pruned target; the other shapes join the whole target and run
+  * the commit's key steps on the cluster. */
 class RowLevelFastPathSpec extends SparkSpec with Matchers {
 
   private lazy val warehouse = Files.createTempDirectory("graft-fastpath").toString
@@ -87,7 +87,7 @@ class RowLevelFastPathSpec extends SparkSpec with Matchers {
     spark.sql("DROP TABLE fpc.m2.t")
   }
 
-  test("INSERT reassigning ids away from the join key falls back to legacy dedup") {
+  test("INSERT reassigning ids away from the join key dedups against the whole target") {
     init()
     spark.sql("CREATE NAMESPACE IF NOT EXISTS fpc.m3")
     spark.sql("""CREATE TABLE fpc.m3.t
@@ -98,9 +98,9 @@ class RowLevelFastPathSpec extends SparkSpec with Matchers {
     spark.sql("INSERT INTO fpc.m3.t SELECT * FROM fp3_base")
     // source key 'b' is unmatched; the INSERT writes id 'xb', which
     // collides with a LIVE row whose id is NOT among the source keys —
-    // only the full-target dedup (legacy path) can see that collision,
-    // so the gate must route this merge there: first-wins, 'xb' keeps
-    // its original value
+    // only the dedup against the whole (unpruned) target can see that
+    // collision, so the merge must not be key-pruned: first-wins, 'xb'
+    // keeps its original value
     Seq(("b", "{}", Seq(99f)))
       .toDF("id", "metadata", "embedding").createOrReplaceTempView("fp3_chg")
     spark.sql("""MERGE INTO fpc.m3.t t USING fp3_chg c ON t.id = c.id
@@ -256,9 +256,9 @@ class RowLevelFastPathSpec extends SparkSpec with Matchers {
     spark.sql("DROP TABLE fpc.c1.t")
   }
 
-  test("MERGE cardinality violation on an indexed table throws from the distributed gate") {
-    // an index tier takes the MERGE off the touched-first path: no key
-    // collect, so the gate is the shuffle over the classified join
+  test("MERGE cardinality violation on an indexed table throws from the collected keys") {
+    // an indexed table takes the same key-pruned route as an un-indexed
+    // one: the gate reads the collected matched ids
     init()
     spark.sql("CREATE NAMESPACE IF NOT EXISTS fpc.c2")
     spark.sql("""CREATE TABLE fpc.c2.t
@@ -359,4 +359,167 @@ class RowLevelFastPathSpec extends SparkSpec with Matchers {
     got.length shouldBe 40
     got.filter(_._2 == -1f).map(_._1).toSet shouldBe touched.toSet
   }
+
+  test("MERGE, UPDATE and upsert on an HNSW-indexed table keep its sidecars") {
+    // the extract spec and the streaming-sink epoch ledgers are table
+    // sidecars a row-level commit must leave alone: a whole-table
+    // overwrite drops them with the old table
+    init()
+    import spark.implicits._
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS fpc.s1")
+    spark.sql("""CREATE TABLE fpc.s1.t
+                 (id string, metadata string, embedding array<float>) USING gvdb""")
+    val root = s"$warehouse/s1/t"
+    val table = new VectorTable(spark, root, 2)
+    table.setExtractPaths(Seq("$.lang"))
+    def langRows(ids: Seq[Int], v: Int => Float) = ids.map(i =>
+        (f"r$i%03d", s"""{"lang":"${if (i % 2 == 0) "en" else "fr"}"}""", Seq(v(i), 1f)))
+      .toDF("id", "metadata", "embedding")
+    langRows(0 until 20, _.toFloat).createOrReplaceTempView("fps_b")
+    spark.sql("INSERT INTO fpc.s1.t SELECT * FROM fps_b")
+    table.buildHnswIndex()
+    val ledgers = Seq("q1", "q2").map(q => java.nio.file.Paths.get(s"$root.sink_commits/$q"))
+    ledgers.foreach { l =>
+      Files.createDirectories(l.getParent)
+      Files.write(l, "3".getBytes("UTF-8"))
+    }
+    val spec = graft.sources.GvdbExtracts.Spec(Seq("$.lang"), cluster = true)
+    val hfs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def sidecarsKept(op: String): Unit = withClue(s"after $op: ") {
+      graft.sources.GvdbExtracts.spec(hfs, root) shouldBe spec
+      ledgers.map(l => new String(Files.readAllBytes(l), "UTF-8")) shouldBe Seq("3", "3")
+      table.hnswIndexMeta.isDefined shouldBe true
+      // every written row carries its extract value (schemas merged:
+      // the empty part file of CREATE TABLE predates the extract column)
+      spark.read.option("mergeSchema", "true").parquet(root)
+        .where(!(col("__x_lang") <=> get_json_object(col("metadata"), "$.lang")))
+        .count() shouldBe 0L
+    }
+    langRows(Seq(3, 30), i => (i + 100).toFloat).createOrReplaceTempView("fps_chg")
+    spark.sql("""MERGE INTO fpc.s1.t t USING fps_chg c ON t.id = c.id
+      WHEN MATCHED THEN UPDATE SET *
+      WHEN NOT MATCHED THEN INSERT *""")
+    sidecarsKept("MERGE")
+    spark.sql("""UPDATE fpc.s1.t SET metadata = '{"lang":"de"}' WHERE id = 'r004'""")
+    sidecarsKept("UPDATE")
+    graft.sources.GvdbUpsert(spark, root, langRows(Seq(5, 31), i => (i + 200).toFloat), Some(2))
+    sidecarsKept("upsert")
+    spark.sql("SELECT id, get_json_object(metadata, '$.lang'), CAST(embedding[0] AS bigint) " +
+        "FROM fpc.s1.t WHERE id IN ('r003', 'r004', 'r005', 'r030', 'r031')")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted.toSeq shouldBe
+      Seq(("r003", "fr", 103L), ("r004", "de", 4L), ("r005", "fr", 205L),
+        ("r030", "en", 130L), ("r031", "fr", 231L))
+    spark.sql("DROP TABLE fpc.s1.t")
+  }
+
+  // ---- four-tier parity: each persisted index tier takes the same
+  // group rewrite as an un-indexed table, keeps its meta, serves the
+  // rewritten rows, and leaves untouched files and snapshots alone ----
+
+  private val Moved = Seq(50f, -3f, 7f, 2f)
+
+  private def vec4(i: Int): Seq[Float] = Seq(i.toFloat, (i % 7).toFloat, (i % 3).toFloat, 1f)
+
+  private def rows4(ids: Seq[Int], v: Int => Seq[Float]) = {
+    import spark.implicits._
+    ids.map(i => (f"r$i%03d", s"""{"g":${i % 3}}""", v(i))).toDF("id", "metadata", "embedding")
+  }
+
+  private case class TierRun(rows: Seq[(String, String, Seq[Float])],
+      kept: Set[String], lost: Set[String], snapshot: Int, table: VectorTable)
+
+  /** Two insert batches, the tier build, a snapshot, a third batch,
+    * then a pruned MERGE, an unpruned MERGE (NOT MATCHED BY SOURCE),
+    * an UPDATE that moves r045's embedding to [[Moved]], and an upsert
+    * — all touching third-batch rows or new ids only. */
+  private def tierRun(name: String, tier: Option[String]): TierRun = {
+    init()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS fpc.tier")
+    val t = s"fpc.tier.$name"
+    val root = s"$warehouse/tier/$name"
+    spark.sql(s"CREATE TABLE $t (id string, metadata string, embedding array<float>) USING gvdb")
+    def insert(ids: Range): Unit = {
+      rows4(ids, vec4).createOrReplaceTempView("fpt_b")
+      spark.sql(s"INSERT INTO $t SELECT * FROM fpt_b")
+    }
+    insert(0 until 20)
+    insert(20 until 40)
+    val table = new VectorTable(spark, root, 4)
+    tier.foreach {
+      case "lsh" => table.buildAnnIndex(tables = 2, bits = 8)
+      case "hnsw" => table.buildHnswIndex()
+      case "ivfpq" => table.buildIvfPqIndex(nCells = 4, m = 2, pqK = 16)
+      case "bq" => table.buildBqIndex()
+    }
+    val v1 = table.snapshot()
+    def parts() = new java.io.File(root).list().filter(_.startsWith("part-")).toSet
+    val before = parts()
+    insert(40 until 60)
+    rows4(Seq(41, 42, 70), i => vec4(i).map(_ + 100f)).createOrReplaceTempView("fpt_c1")
+    spark.sql(s"""MERGE INTO $t t USING fpt_c1 c ON t.id = c.id
+      WHEN MATCHED THEN UPDATE SET *
+      WHEN NOT MATCHED THEN INSERT *""")
+    rows4(Seq(43, 71), i => vec4(i).map(_ + 200f)).createOrReplaceTempView("fpt_c2")
+    spark.sql(s"""MERGE INTO $t t USING fpt_c2 c ON t.id = c.id
+      WHEN MATCHED THEN UPDATE SET *
+      WHEN NOT MATCHED THEN INSERT *
+      WHEN NOT MATCHED BY SOURCE AND t.id = 'r044' THEN DELETE""")
+    spark.sql(s"UPDATE $t SET embedding = array(${Moved.map(x => s"${x}f").mkString(", ")}) " +
+      "WHERE id = 'r045'")
+    graft.sources.GvdbUpsert(spark, root, rows4(Seq(46, 72), i => vec4(i).map(_ + 300f)), Some(4))
+    val after = parts()
+    val got = spark.sql(s"SELECT id, metadata, embedding FROM $t").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getSeq[Float](2))).sortBy(_._1).toSeq
+    TierRun(got, before intersect after, before -- after, v1, table)
+  }
+
+  private lazy val twin = tierRun("plain", None)
+
+  for (tier <- Seq("lsh", "hnsw", "ivfpq", "bq"))
+    test(s"$tier-indexed MERGE, UPDATE and upsert match an un-indexed twin, victims only") {
+      val run = tierRun(tier, Some(tier))
+      run.rows shouldBe twin.rows
+      run.rows.map(_._1) should not contain "r044"
+      run.rows.find(_._1 == "r045").map(_._3) shouldBe Some(Moved)
+      val vt = run.table
+      val meta = tier match {
+        case "lsh" => vt.annIndexMeta
+        case "hnsw" => vt.hnswIndexMeta
+        case "ivfpq" => vt.ivfPqIndexMeta
+        case "bq" => vt.bqIndexMeta
+      }
+      meta.isDefined shouldBe true
+      // the index route serves the moved row and a merged-in row at the
+      // exact route's distance: neither is in the index built before
+      val db = new graft.VectorDB(spark, tier, s"$warehouse/tier", "hashing",
+        Map("dim" -> "4"), dim = 4)
+      def knn(q: Array[Float], useIndex: Boolean): Array[graft.core.Result] =
+        if (tier != "lsh" || !useIndex) db.queryByVector(q, k = 3, useIndex = useIndex).collect()
+        else {
+          spark.experimental.extraOptimizations = Seq(new graft.plans.AnnRewriteRule(spark))
+          spark.conf.set("spark.graft.ann.autoRewrite", "true")
+          try {
+            vt.pinAnnConfs()
+            val plan = db.queryByVector(q, k = 3)
+            plan.queryExecution.optimizedPlan.toString should include("arrays_overlap")
+            plan.collect()
+          } finally {
+            spark.conf.set("spark.graft.ann.autoRewrite", "false")
+            spark.experimental.extraOptimizations = Nil
+          }
+        }
+      for ((id, v) <- Seq("r045" -> Moved, "r071" -> vec4(71).map(_ + 200f))) withClue(s"$id: ") {
+        def dist(useIndex: Boolean) = knn(v.toArray, useIndex).find(_.id == id).map(_.distance)
+        val exact = dist(useIndex = false)
+        exact.isDefined shouldBe true
+        dist(useIndex = true).get shouldBe exact.get +- 1e-6
+      }
+      // the rewrite replaced only third-batch files: the files the
+      // snapshot lists all survive, and the snapshot still serves
+      run.lost shouldBe empty
+      run.kept should not be empty
+      vt.snapshotVersions should contain(run.snapshot)
+      vt.asOf(run.snapshot).count() shouldBe 40L
+    }
 }

@@ -4,11 +4,14 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
 /** A local filesystem under its own scheme whose rename of a staged
-  * swap directory returns false: `*__compacting` (the HNSW graph swap),
-  * `*__rewrite` (the tombstone fold and the Bloom-manifest GC) and
-  * `*__vacuum` (the vacuum data swap). Every other rename (the parquet
-  * committer's) succeeds, so writes through it land normally and only
-  * the swap fails. */
+  * swap directory or file returns false: `*__compacting` (the HNSW
+  * graph swap), `*__rewrite` (the tombstone fold and the Bloom-manifest
+  * GC), `*__vacuum` (the vacuum data swap), `*__indexing` (the LSH
+  * index build's data swap) and `*.tmp` (the sink ledger and the
+  * source log). A catalog table whose name ends in one of these fails
+  * its rename too. Every other rename (the parquet committer's)
+  * succeeds, so writes through it land normally and only the swap
+  * fails. */
 class SwapRenameFailingFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create(s"${SwapRenameFailingFs.Scheme}:///")
   override def getScheme: String = SwapRenameFailingFs.Scheme
@@ -18,7 +21,7 @@ class SwapRenameFailingFs extends RawLocalFileSystem {
 
 object SwapRenameFailingFs {
   val Scheme = "failswap"
-  val Staged = Seq("__compacting", "__rewrite", "__vacuum")
+  val Staged = Seq("__compacting", "__rewrite", "__vacuum", "__indexing", ".tmp")
 
   /** `path` (an absolute local path) through the failing filesystem. */
   def on(spark: SparkSession, path: String): String = {
