@@ -1,21 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     // Warm up codegen/classloading so the first measured query isn't
     // charged ~10 s of JVM one-time cost.
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
@@ -32,6 +22,8 @@ object Bench {
       if (args.nonEmpty) args.toSeq.filter(SparkEntry.queries.contains)
       else SparkEntry.queries.keys.toSeq
     val times = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
+    // entries whose run read a session memo (SparkEntry.runEntry)
+    val fixtureEntries = scala.collection.mutable.Set[String]()
     // Fixed-floor sentinel: a constant-work job (no data dependence, no
     // shuffle) timed once per pass. Its plan can never regress with the
     // engine's queries, so sentinel inflation across passes measures
@@ -50,11 +42,7 @@ object Bench {
     for (_ <- 1 to runs) {
       sentinels += sentinelOnce()
       for (name <- names) {
-        val fn = SparkEntry.queries(name)
         val t0 = System.nanoTime()
-        // toRdd + foreach forces every output column of the optimized plan
-        // to be computed (a bare .count() would let Catalyst prune
-        // expensive projections, under-measuring kernel-heavy queries).
         // NOTE (r13): a per-entry PlanCache.release here was tried and
         // REVERTED — transient caches staying warm across the min-of-N
         // passes is the established steady-state methodology (see the
@@ -65,7 +53,7 @@ object Bench {
         // `first` numbers below keep the cold, from-parquet cost of
         // every entry visible in the artifact.
         try {
-          fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
+          if (SparkEntry.runEntry(spark, name, sfDir)) fixtureEntries += name
           times(name) = ((System.nanoTime() - t0) / 1e9) :: times(name)
         } catch {
           case e: Throwable =>
@@ -107,13 +95,14 @@ object Bench {
     // comparison keys on `queries`): `first` is each entry's PASS-1
     // seconds (for fixture consumers this INCLUDES the memoized build
     // the later passes skip — the build-inclusive number stays visible
-    // in the artifact), `fixture_entries` lists which entries consume a
-    // session-memoized fixture so a reader can tell probe-only mins
-    // from build-inclusive ones mechanically.
+    // in the artifact), `fixture_entries` lists which entries read a
+    // session memo during this run — derived from the memo hit counts,
+    // not kept by hand — so a reader can tell probe-only mins from
+    // build-inclusive ones mechanically.
     val firstJson = results.collect { case (k, ts) if ts.nonEmpty =>
       s"${jstr(k)}:${ts.last}"
     }.mkString("{", ",", "}")
-    val fixturesJson = names.filter(SparkEntry.sessionFixtureEntries)
+    val fixturesJson = names.filter(fixtureEntries)
       .map(jstr).mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"first":$firstJson,"fixture_entries":$fixturesJson,"spread":$spread,"sentinel":$sentinelJson,"order":$orderJson,"errors":$errJson,"runs":$runs,"sf":"$sfDir"}"""
     println(line)

@@ -198,22 +198,13 @@ object ScaleStress {
     // plan. Overridable via SPARK_GRAFT_STRESS_PARTITIONS.
     val shufParts = sys.env.getOrElse("SPARK_GRAFT_STRESS_PARTITIONS",
       math.max(32, math.min(512, 32 * copies / 10)).toString)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+    val spark = graft.core.Sessions.local(32,
+      "spark.sql.shuffle.partitions" -> shufParts,
       // recursive-CTE safety valve scales with the corpus: the digit
       // walk emits ~|customer|·depth rows, which crosses the 1M
       // default at the 10× corpus (a conf guard, not a plan hazard —
       // the per-iteration frontier join stays keyed and bounded)
-      .config("spark.sql.cteRecursionRowLimit", (100000000L).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.cteRecursionRowLimit" -> (100000000L).toString)
     generate(spark, src, target, copies)
     generateEmbeddings(spark, src, target, copies)
     generateCustomer(spark, src, target, copies)
@@ -304,9 +295,7 @@ object ScaleStress {
         }
         // the components table is memoized per (session, dir): evict
         // it, or the forced run would read the local run's labels
-        SparkEntry.componentsMemo.synchronized {
-          SparkEntry.componentsMemo.remove((spark, src)).foreach(_.unpersist(blocking = false))
-        }
+        SparkEntry.componentsMemo.evict(spark, src)
         try {
           val t0 = System.nanoTime()
           val rows = SparkEntry.queries(name)(spark, src).collect()

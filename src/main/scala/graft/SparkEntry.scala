@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionMemo
 import graft.filters.Filters
 import graft.functions.{DamerauLevenshteinExpr, JaroWinklerExpr, RoundPortableExpr, VectorFunctions}
 import graft.ops.{AsOf, Dedup, LexicalSearch, MlAnn, Multimodal, Similarity, TextAnalysis}
@@ -227,31 +228,28 @@ object SparkEntry {
   /** Unique catalog-table suffix per invocation (Bench runs every entry
     * more than once in one session). */
   private val layoutRunSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  // All memo maps are keyed by (session, dir), not dir alone: catalog
-  // table names and persisted DataFrames are session-scoped artifacts,
-  // and a second SparkSession in the same JVM must not inherit handles
-  // from a stopped one.
+  // Session fixtures: each memo below is a SessionMemo keyed by
+  // (session, dir) or (session, (dir, tier)); releaseSessionCaches
+  // drops them all.
   // (session, dir) -> (bucketed lineitem table, bucketed orders table);
   // see layout_bucketed_join — layout cost paid once per source dir
-  private[graft] val bucketedLayout =
-    scala.collection.mutable.Map[(SparkSession, String), (String, String)]()
+  private[graft] val bucketedLayout = SessionMemo[String, (String, String)]()
   // (session, dir) -> z-ordered lineitem path; see layout_zorder
-  private[graft] val zorderLayout = scala.collection.mutable.Map[(SparkSession, String), String]()
+  private[graft] val zorderLayout = SessionMemo[String, String]()
   // (session, dir) -> compaction scratch root; see layout_compact
-  private[graft] val compactLayout = scala.collection.mutable.Map[(SparkSession, String), String]()
+  private[graft] val compactLayout = SessionMemo[String, String]()
   // (session, dir) -> schema-evolution scratch root; see layout_schema_evolution
-  private[graft] val evolutionLayout = scala.collection.mutable.Map[(SparkSession, String), String]()
+  private[graft] val evolutionLayout = SessionMemo[String, String]()
   // (session, dir) -> (PQ codebooks, encoded corpus); see sim_ann_pq
   private[graft] val pqIndex =
-    scala.collection.mutable.Map[(SparkSession, String), (ops.PqAnn.Codebooks, DataFrame)]()
+    SessionMemo.cached[String, (ops.PqAnn.Codebooks, DataFrame)] { case (_, codes) => codes.unpersist(blocking = false) }
   // (session, dir) -> (IVF centroids + PQ residual codebooks, encoded
   // corpus); see sim_ann_ivfpq
   private[graft] val ivfpqIndex =
-    scala.collection.mutable.Map[(SparkSession, String), (ops.IvfPq.Index, DataFrame)]()
+    SessionMemo.cached[String, (ops.IvfPq.Index, DataFrame)] { case (_, codes) => codes.unpersist(blocking = false) }
   // (session, dir) -> pre-compaction HNSW segment dir (base + two
   // appended deltas): ann_hnsw_compact's read-only input fixture
-  private[graft] val hnswCompactInputMemo =
-    scala.collection.mutable.Map[(SparkSession, String), String]()
+  private[graft] val hnswCompactInputMemo = SessionMemo[String, String]()
 
   // (session, dir) -> label-carrying full-corpus IVF index (nCells=16,
   // keepCols=label): shared by ann_filtered_ivf / ann_filtered_adaptive
@@ -260,34 +258,29 @@ object SparkEntry {
   // ivfpqIndex above). The assigned corpus is persisted + materialized
   // once; released with the session's other cached artifacts.
   private[graft] val ivfLabeled =
-    scala.collection.mutable.Map[(SparkSession, String), ops.MlAnn.IvfIndex]()
+    SessionMemo.cached[String, ops.MlAnn.IvfIndex](_.indexed.unpersist(blocking = false))
 
   private[graft] def ivfLabeledIndex(s: SparkSession, dir: String): ops.MlAnn.IvfIndex =
-    ivfLabeled.synchronized {
-      ivfLabeled.getOrElseUpdate((s, dir), {
-        val ix = ops.MlAnn.ivfBuild(s.read.parquet(t(dir, "embeddings")),
-          nCells = 16, keepCols = Seq("label"))
-        ix.indexed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ix.indexed.count()
-        ix
-      })
+    ivfLabeled(s, dir) {
+      val ix = ops.MlAnn.ivfBuild(s.read.parquet(t(dir, "embeddings")),
+        nCells = 16, keepCols = Seq("label"))
+      ix.indexed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      ix.indexed.count()
+      ix
     }
 
   // (session, dir) -> (IVF-PQ index over the 80% base split, persisted
   // base code-table path); shared by the incremental-append queries —
   // the per-run contract is the APPEND + probe, not the base build
-  private[graft] val ivfpqBase =
-    scala.collection.mutable.Map[(SparkSession, String), (ops.IvfPq.Index, String)]()
+  private[graft] val ivfpqBase = SessionMemo[String, (ops.IvfPq.Index, String)]()
 
   private[graft] def ivfpqBaseIndex(s: SparkSession, dir: String): (ops.IvfPq.Index, String) =
-    ivfpqBase.synchronized {
-      ivfpqBase.getOrElseUpdate((s, dir), {
-        val base = s.read.parquet(t(dir, "embeddings")).where(col("vec_id") % 5 =!= 0)
-        val (ix, c0) = ops.IvfPq.build(base, dim = 64, nCells = 16, m = 8, k = 256)
-        val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-base").toString
-        ops.IvfPq.persistCodes(c0, path)
-        (ix, path)
-      })
+    ivfpqBase(s, dir) {
+      val base = s.read.parquet(t(dir, "embeddings")).where(col("vec_id") % 5 =!= 0)
+      val (ix, c0) = ops.IvfPq.build(base, dim = 64, nCells = 16, m = 8, k = 256)
+      val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-base").toString
+      ops.IvfPq.persistCodes(c0, path)
+      (ix, path)
     }
 
   // (session, dir, tier) -> (warehouse root, appendedOk): the BUILT
@@ -298,34 +291,30 @@ object SparkEntry {
   // was 6% of the whole bench inside one entry. Consumers must treat
   // the fixture warehouse as READ-ONLY — mutating entries (deletes)
   // copy the directory first (vdb_knn_capped_widen).
-  private[graft] val tierFixtureMemo =
-    scala.collection.mutable.Map[(SparkSession, String, String), (String, Boolean)]()
+  private[graft] val tierFixtureMemo = SessionMemo[(String, String), (String, Boolean)]()
 
   // (session, dir, tier) -> warehouse with the 80% BASE inserted and
   // the tier index built, NO delta: the build artifact the delta-append
   // consumers (batch lifecycle, streaming maintenance) each copy and
   // append to. One KMeans/graph build per (session, dir, tier).
-  private[graft] val tierBaseFixtureMemo =
-    scala.collection.mutable.Map[(SparkSession, String, String), String]()
+  private[graft] val tierBaseFixtureMemo = SessionMemo[(String, String), String]()
 
   private[graft] def tierBaseFixture(s: SparkSession, dir: String, tier: String): String =
-    tierBaseFixtureMemo.synchronized {
-      tierBaseFixtureMemo.getOrElseUpdate((s, dir, tier), {
-        import s.implicits._
-        val wh = java.nio.file.Files.createTempDirectory(s"graft-base$tier").toString
-        val emb = s.read.parquet(t(dir, "embeddings"))
-        val rows = emb.select(
-          to_json(struct($"vec_id", $"label")).as("metadata"), $"embedding")
-        val db = new VectorDB(s, "items", wh, "hashing", Map("dim" -> "64"),
-          dim = 64, newTable = true)
-        db.insertEmbedded(rows.where($"vec_id" % 5 =!= 0))
-        tier match {
-          case "ivfpq" => db.table.buildIvfPqIndex()
-          case "bq" => db.table.buildBqIndex()
-          case _ => db.table.buildHnswIndex()
-        }
-        wh
-      })
+    tierBaseFixtureMemo(s, (dir, tier)) {
+      import s.implicits._
+      val wh = java.nio.file.Files.createTempDirectory(s"graft-base$tier").toString
+      val emb = s.read.parquet(t(dir, "embeddings"))
+      val rows = emb.select(
+        to_json(struct($"vec_id", $"label")).as("metadata"), $"embedding")
+      val db = new VectorDB(s, "items", wh, "hashing", Map("dim" -> "64"),
+        dim = 64, newTable = true)
+      db.insertEmbedded(rows.where($"vec_id" % 5 =!= 0))
+      tier match {
+        case "ivfpq" => db.table.buildIvfPqIndex()
+        case "bq" => db.table.buildBqIndex()
+        case _ => db.table.buildHnswIndex()
+      }
+      wh
     }
 
   private[graft] def tierIndexRows(db: VectorDB, tier: String): Long = tier match {
@@ -336,20 +325,18 @@ object SparkEntry {
 
   private[graft] def tierFixture(
       s: SparkSession, dir: String, tier: String): (String, Boolean) =
-    tierFixtureMemo.synchronized {
-      tierFixtureMemo.getOrElseUpdate((s, dir, tier), {
-        import s.implicits._
-        // copy of the base fixture + the 20% delta batch-inserted:
-        // fresh rows become appended index rows (codes / new segments)
-        val wh = copyFixture(s, tierBaseFixture(s, dir, tier))
-        val emb = s.read.parquet(t(dir, "embeddings"))
-        val rows = emb.select(
-          to_json(struct($"vec_id", $"label")).as("metadata"), $"embedding")
-        val db = new VectorDB(s, "items", wh, "hashing", Map("dim" -> "64"), dim = 64)
-        val before = tierIndexRows(db, tier)
-        db.insertEmbedded(rows.where($"vec_id" % 5 === 0))
-        (wh, tierIndexRows(db, tier) > before)
-      })
+    tierFixtureMemo(s, (dir, tier)) {
+      import s.implicits._
+      // copy of the base fixture + the 20% delta batch-inserted:
+      // fresh rows become appended index rows (codes / new segments)
+      val wh = copyFixture(s, tierBaseFixture(s, dir, tier))
+      val emb = s.read.parquet(t(dir, "embeddings"))
+      val rows = emb.select(
+        to_json(struct($"vec_id", $"label")).as("metadata"), $"embedding")
+      val db = new VectorDB(s, "items", wh, "hashing", Map("dim" -> "64"), dim = 64)
+      val before = tierIndexRows(db, tier)
+      db.insertEmbedded(rows.where($"vec_id" % 5 === 0))
+      (wh, tierIndexRows(db, tier) > before)
     }
 
   /** A fresh throwaway copy of a [[tierFixture]] warehouse for entries
@@ -363,23 +350,20 @@ object SparkEntry {
   // contract of those entries is the PROBE + gates; the identical
   // insert+build is separately exercised (and measured) by the
   // lifecycle entries that own it (ann_hnsw_persist, vdb_knn_indexed).
-  private[graft] val fullHnswFixtureMemo =
-    scala.collection.mutable.Map[(SparkSession, String), String]()
+  private[graft] val fullHnswFixtureMemo = SessionMemo[String, String]()
 
   private[graft] def fullHnswFixture(s: SparkSession, dir: String): String =
-    fullHnswFixtureMemo.synchronized {
-      fullHnswFixtureMemo.getOrElseUpdate((s, dir), {
-        import s.implicits._
-        val wh = java.nio.file.Files.createTempDirectory("graft-fullhnsw").toString
-        val emb = s.read.parquet(t(dir, "embeddings"))
-        val rows = emb.select(
-          to_json(struct($"vec_id", $"label")).as("metadata"), $"embedding")
-        val db = new VectorDB(s, "items", wh, "hashing", Map("dim" -> "64"),
-          dim = 64, newTable = true)
-        db.insertEmbedded(rows)
-        db.table.buildHnswIndex()
-        wh
-      })
+    fullHnswFixtureMemo(s, dir) {
+      import s.implicits._
+      val wh = java.nio.file.Files.createTempDirectory("graft-fullhnsw").toString
+      val emb = s.read.parquet(t(dir, "embeddings"))
+      val rows = emb.select(
+        to_json(struct($"vec_id", $"label")).as("metadata"), $"embedding")
+      val db = new VectorDB(s, "items", wh, "hashing", Map("dim" -> "64"),
+        dim = 64, newTable = true)
+      db.insertEmbedded(rows)
+      db.table.buildHnswIndex()
+      wh
     }
 
   // (session, dir) -> the FULL-corpus HNSW graph table (built once,
@@ -391,34 +375,29 @@ object SparkEntry {
   // the identical rows. The build cost itself stays measured by the
   // lifecycle owners (ann_hnsw_persist/_compact, stream_hnsw_append).
   private[graft] val hnswGraphMemo =
-    scala.collection.mutable.Map[(SparkSession, String), DataFrame]()
+    SessionMemo.cached[String, DataFrame](_.unpersist(blocking = false))
 
   private[graft] def fullCorpusHnswGraph(s: SparkSession, dir: String): DataFrame =
-    hnswGraphMemo.synchronized {
-      hnswGraphMemo.getOrElseUpdate((s, dir), {
-        val g = ops.Hnsw.buildGraph(s.read.parquet(t(dir, "embeddings"))).persist()
-        g.count()
-        g
-      })
+    hnswGraphMemo(s, dir) {
+      val g = ops.Hnsw.buildGraph(s.read.parquet(t(dir, "embeddings"))).persist()
+      g.count()
+      g
     }
 
   // (session, dir) -> parquet dir holding the PRE-BUILT 80%-base HNSW
   // graph segments for the streaming-append runner: each bench pass
   // COPIES the directory (the stream appends into its copy), instead
   // of re-running the serial base build per pass.
-  private[graft] val hnswStreamBaseMemo =
-    scala.collection.mutable.Map[(SparkSession, String), String]()
+  private[graft] val hnswStreamBaseMemo = SessionMemo[String, String]()
 
   private[graft] def hnswStreamBase(s: SparkSession, dir: String): String =
-    hnswStreamBaseMemo.synchronized {
-      hnswStreamBaseMemo.getOrElseUpdate((s, dir), {
-        val base = java.nio.file.Files.createTempDirectory("graft-hnsw-base").toString
-        ops.Hnsw.buildGraph(
-            s.read.parquet(t(dir, "embeddings")).where(col("vec_id") % 5 =!= 0),
-            numSegments = 4)
-          .write.mode("overwrite").parquet(s"$base/graph")
-        base
-      })
+    hnswStreamBaseMemo(s, dir) {
+      val base = java.nio.file.Files.createTempDirectory("graft-hnsw-base").toString
+      ops.Hnsw.buildGraph(
+          s.read.parquet(t(dir, "embeddings")).where(col("vec_id") % 5 =!= 0),
+          numSegments = 4)
+        .write.mode("overwrite").parquet(s"$base/graph")
+      base
     }
 
   private[graft] def copyFixture(s: SparkSession, src: String): String = {
@@ -467,38 +446,34 @@ object SparkEntry {
       .toDF("query_id", "recall_ok", "appended_ok", "filtered_ok")
   }
 
-  // (session, dir, tier) -> rewrite-warehouse root: the bare table +
-  // tier index the planner-consult entries PLAN against — read-only
-  // for the query, so built once per session like the tier fixtures
   // (session, dir) -> the insert-path auto-compaction leg's gate bit
   // (ann_hnsw_compact): 4 sequential facade inserts + index builds are
   // the most expensive lifecycle leg in the registry, and the result is
   // a deterministic property of the code path — pay it once per
   // session, not once per bench iteration.
-  private[graft] val autoCompactMemo =
-    scala.collection.mutable.Map[(SparkSession, String), Boolean]()
+  private[graft] val autoCompactMemo = SessionMemo[String, Boolean]()
 
-  private[graft] val rewriteWhMemo =
-    scala.collection.mutable.Map[(SparkSession, String, String), String]()
+  // (session, dir, tier) -> rewrite-warehouse root: the bare table +
+  // tier index the planner-consult entries PLAN against — read-only
+  // for the query, so built once per session like the tier fixtures
+  private[graft] val rewriteWhMemo = SessionMemo[(String, String), String]()
 
   private[graft] def rewriteWarehouse(s: SparkSession, dir: String, tier: String): String =
-    rewriteWhMemo.synchronized {
-      rewriteWhMemo.getOrElseUpdate((s, dir, tier), {
-        import s.implicits._
-        val emb = s.read.parquet(t(dir, "embeddings"))
-        val wh = java.nio.file.Files.createTempDirectory(s"graft-probe$tier").toString
-        emb.select(concat(lit("v"), format_string("%05d", $"vec_id")).as("id"),
-            to_json(struct($"label")).as("metadata"), $"embedding")
-          .write.mode("overwrite").parquet(s"$wh/src")
-        val tbl = new graft.table.VectorTable(s, s"$wh/table", 64)
-        tbl.loadFromParquet(s"$wh/src")
-        tier match {
-          case "ivfpq" => tbl.buildIvfPqIndex()
-          case "bq" => tbl.buildBqIndex()
-          case _ => tbl.buildHnswIndex()
-        }
-        wh
-      })
+    rewriteWhMemo(s, (dir, tier)) {
+      import s.implicits._
+      val emb = s.read.parquet(t(dir, "embeddings"))
+      val wh = java.nio.file.Files.createTempDirectory(s"graft-probe$tier").toString
+      emb.select(concat(lit("v"), format_string("%05d", $"vec_id")).as("id"),
+          to_json(struct($"label")).as("metadata"), $"embedding")
+        .write.mode("overwrite").parquet(s"$wh/src")
+      val tbl = new graft.table.VectorTable(s, s"$wh/table", 64)
+      tbl.loadFromParquet(s"$wh/src")
+      tier match {
+        case "ivfpq" => tbl.buildIvfPqIndex()
+        case "bq" => tbl.buildBqIndex()
+        case _ => tbl.buildHnswIndex()
+      }
+      wh
     }
 
   /** Shared body of the `ann_probe_rewrite_{ivfpq,bq}` entries: the
@@ -688,44 +663,38 @@ object SparkEntry {
   // (session, dir) -> one-batch-pending ER state root (pairs +
   // components parquet over the 90% base): pipeline_er_incremental's
   // prior state, built once — the per-run contract is the batch STEP
-  private[graft] val erBaseStateMemo =
-    scala.collection.mutable.Map[(SparkSession, String), String]()
+  private[graft] val erBaseStateMemo = SessionMemo[String, String]()
 
   private[graft] def erBaseState(s: SparkSession, dir: String): String =
-    erBaseStateMemo.synchronized {
-      erBaseStateMemo.getOrElseUpdate((s, dir), {
-        import s.implicits._
-        val root = java.nio.file.Files.createTempDirectory("graft-er-state").toString
-        erWriteBaseState(s, erCapped(s, dir).where(pmod($"c_custkey", lit(10)) =!= 0), root)
-        root
-      })
+    erBaseStateMemo(s, dir) {
+      import s.implicits._
+      val root = java.nio.file.Files.createTempDirectory("graft-er-state").toString
+      erWriteBaseState(s, erCapped(s, dir).where(pmod($"c_custkey", lit(10)) =!= 0), root)
+      root
     }
 
   // (session, dir) -> ER state root AFTER batch 1 of the two-batch
   // lifecycle (base = custkey%10 ∉ {0,5}; batch1 = %10==0): the state
   // pipeline_er_incremental2 reads, proving state ROUND-TRIPS — batch
   // 2 applied to re-read state must equal the full recompute
-  private[graft] val erTwoBatchMemo =
-    scala.collection.mutable.Map[(SparkSession, String), String]()
+  private[graft] val erTwoBatchMemo = SessionMemo[String, String]()
 
   private[graft] def erTwoBatchState(s: SparkSession, dir: String): String =
-    erTwoBatchMemo.synchronized {
-      erTwoBatchMemo.getOrElseUpdate((s, dir), {
-        import s.implicits._
-        val capped = graft.core.PlanCache.persist(erCapped(s, dir))
-        val root0 = java.nio.file.Files.createTempDirectory("graft-er-state0").toString
-        erWriteBaseState(s, capped.where(
-          pmod($"c_custkey", lit(10)) =!= 0 && pmod($"c_custkey", lit(10)) =!= 5), root0)
-        val batch1 = capped.where(pmod($"c_custkey", lit(10)) === 0)
-        // present at batch-1 time: base ∪ batch1 — batch-2 rows have
-        // not arrived and must not appear in state labels
-        val present1 = capped.where(pmod($"c_custkey", lit(10)) =!= 5)
-        val (p1, c1) = erStep(s, present1, batch1, root0)
-        val root1 = java.nio.file.Files.createTempDirectory("graft-er-state1").toString
-        p1.write.mode("overwrite").parquet(s"$root1/pairs")
-        c1.write.mode("overwrite").parquet(s"$root1/components")
-        root1
-      })
+    erTwoBatchMemo(s, dir) {
+      import s.implicits._
+      val capped = graft.core.PlanCache.persist(erCapped(s, dir))
+      val root0 = java.nio.file.Files.createTempDirectory("graft-er-state0").toString
+      erWriteBaseState(s, capped.where(
+        pmod($"c_custkey", lit(10)) =!= 0 && pmod($"c_custkey", lit(10)) =!= 5), root0)
+      val batch1 = capped.where(pmod($"c_custkey", lit(10)) === 0)
+      // present at batch-1 time: base ∪ batch1 — batch-2 rows have
+      // not arrived and must not appear in state labels
+      val present1 = capped.where(pmod($"c_custkey", lit(10)) =!= 5)
+      val (p1, c1) = erStep(s, present1, batch1, root0)
+      val root1 = java.nio.file.Files.createTempDirectory("graft-er-state1").toString
+      p1.write.mode("overwrite").parquet(s"$root1/pairs")
+      c1.write.mode("overwrite").parquet(s"$root1/components")
+      root1
     }
 
   // (session, dir) -> persisted (id, component) duplicate-cluster
@@ -733,80 +702,43 @@ object SparkEntry {
   // the SAME materialized table — at scale, components are a pipeline
   // stage you compute once, not per downstream query
   private[graft] val componentsMemo =
-    scala.collection.mutable.Map[(SparkSession, String), DataFrame]()
+    SessionMemo.cached[String, DataFrame](_.unpersist(blocking = false))
 
   /** Duplicate-cluster labels (id, component) for the documents table
     * at `dir`: simhash pair edges → star-contraction connected
     * components, materialized once per (session, dir). */
   private[graft] def documentComponents(s: SparkSession, dir: String): DataFrame =
-    componentsMemo.synchronized {
-      componentsMemo.getOrElseUpdate((s, dir), {
-        val docs = s.read.parquet(t(dir, "documents"))
-        val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
-        val comps = ops.Components.connectedComponents(
-          docs.select(col("doc_id")), pairs.select(col("id_a"), col("id_b"))).persist()
-        comps.count() // materialize: this IS the stored components table
-        comps
-      })
+    componentsMemo(s, dir) {
+      val docs = s.read.parquet(t(dir, "documents"))
+      val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
+      val comps = ops.Components.connectedComponents(
+        docs.select(col("doc_id")), pairs.select(col("id_a"), col("id_b"))).persist()
+      comps.count() // materialize: this IS the stored components table
+      comps
     }
 
   /** Tears down every session-scoped cached artifact: transient
-    * mid-plan caches (PlanCache) AND the memoized session-lifetime
-    * tables (components, PQ/IVF-PQ code tables, layout scratch
-    * registrations). Call when retiring a session — Verify and Bench do
-    * before `spark.stop()`; within a session's lifetime the memoized
-    * tables are deliberately long-lived (compute-once index artifacts). */
-  /** Entries whose steady-state (min-of-passes) time excludes a
-    * once-per-(session, dir) memoized fixture build — the r12 judge's
-    * bench-transparency ask: the bench artifact marks these so a reader
-    * can tell "probe-only min" from "build-inclusive first pass"
-    * (`first` in bench_local.json carries the pass-1 seconds, which for
-    * these entries include the fixture build). Maintained by hand next
-    * to the memo maps above; an entry belongs here iff its body (or a
-    * helper it calls) goes through one of the session memo maps. */
-  val sessionFixtureEntries: Set[String] = Set(
-    "pipeline_er_incremental", "pipeline_er_incremental2", "stream_hnsw_append",
-    "ann_hnsw_bulk", "vdb_knn_indexed_delete", "vdb_knn_filtered_indexed",
-    "ann_hnsw_filtered", "ann_hnsw_filtered_tight", "ann_hnsw_compact",
-    "ann_filtered_ivf", "ann_filtered_adaptive", "vdb_knn_indexed",
-    "vdb_auto_vacuum", "ann_filtered_ivfpq", "ann_filtered_bq",
-    "vdb_knn_capped_widen", "vdb_knn_bulk", "sim_ann_pq", "sim_ann_ivfpq",
-    "layout_compact", "ann_probe_rewrite_ivfpq", "ann_probe_rewrite_bq",
-    "vdb_knn_bulk_ivfpq", "vdb_knn_bulk_bq", "stream_ivfpq_append",
-    "stream_bq_append", "dedup_components", "dedup_keep_one",
-    "vdb_knn_indexed_ivfpq", "vdb_knn_indexed_bq",
-    "layout_schema_evolution", "layout_bucketed_join", "layout_zorder")
-
+    * mid-plan caches (PlanCache) AND every [[SessionMemo]] value the
+    * session holds (components, ANN code tables, index warehouses,
+    * layout scratch registrations). Call when retiring a session — the
+    * harness mains do before `spark.stop()`; within a session's
+    * lifetime the memoized tables are deliberately long-lived
+    * (compute-once index artifacts). */
   def releaseSessionCaches(s: SparkSession): Unit = {
     graft.core.PlanCache.release(s)
-    def drop[V](m: scala.collection.mutable.Map[(SparkSession, String), V])(
-        onDrop: V => Unit): Unit = m.synchronized {
-      m.keys.filter(_._1 eq s).toList.foreach { k => onDrop(m(k)); m.remove(k) }
-    }
-    drop(componentsMemo)(df => df.unpersist(blocking = false))
-    drop(pqIndex) { case (_, codes) => codes.unpersist(blocking = false) }
-    drop(ivfpqIndex) { case (_, codes) => codes.unpersist(blocking = false) }
-    drop(ivfpqBase)(_ => ()) // parquet-backed, nothing cached
-    drop(ivfLabeled)(ix => ix.indexed.unpersist(blocking = false))
-    drop(erBaseStateMemo)(_ => ()) // parquet-backed
-    drop(erTwoBatchMemo)(_ => ())
-    drop(fullHnswFixtureMemo)(_ => ()) // parquet-backed warehouse
-    drop(hnswGraphMemo)(df => df.unpersist(blocking = false))
-    drop(hnswStreamBaseMemo)(_ => ()) // parquet-backed
-    drop(hnswCompactInputMemo)(_ => ()) // parquet-backed
-    tierFixtureMemo.synchronized { // parquet-backed warehouses
-      tierFixtureMemo.keys.filter(_._1 eq s).toList.foreach(tierFixtureMemo.remove)
-    }
-    tierBaseFixtureMemo.synchronized {
-      tierBaseFixtureMemo.keys.filter(_._1 eq s).toList.foreach(tierBaseFixtureMemo.remove)
-    }
-    rewriteWhMemo.synchronized {
-      rewriteWhMemo.keys.filter(_._1 eq s).toList.foreach(rewriteWhMemo.remove)
-    }
-    drop(bucketedLayout)(_ => ())
-    drop(zorderLayout)(_ => ())
-    drop(compactLayout)(_ => ())
-    drop(evolutionLayout)(_ => ())
+    SessionMemo.releaseAll(s)
+  }
+
+  /** Runs registry entry `name` to completion — `toRdd` computes every
+    * output column, where a bare `count()` would let Catalyst prune
+    * expensive projections — and returns whether the run read a
+    * [[SessionMemo]]. Such an entry's steady-state (min-of-passes)
+    * time excludes a once-per-(session, dir) fixture build that its
+    * first pass paid; Bench lists it in `fixture_entries`. */
+  def runEntry(s: SparkSession, name: String, dir: String): Boolean = {
+    val before = SessionMemo.hits(s)
+    queries(name)(s, dir).queryExecution.toRdd.foreach(_ => ())
+    SessionMemo.hits(s) > before
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -2076,16 +2008,14 @@ object SparkEntry {
     // the base table ----
     "layout_schema_evolution" -> ((s, dir) => {
       import s.implicits._
-      val path = SparkEntry.evolutionLayout.synchronized {
-        SparkEntry.evolutionLayout.getOrElseUpdate((s, dir), {
-          val tmp = java.nio.file.Files.createTempDirectory("graft-evolve").toString
-          val docs = s.read.parquet(t(dir, "documents"))
-          docs.select($"doc_id", $"lang").write.parquet(s"$tmp/gen=1")
-          docs.select($"doc_id", $"lang",
-              ($"n_chars" / lit(1000.0)).as("quality"))
-            .write.parquet(s"$tmp/gen=2")
-          tmp
-        })
+      val path = SparkEntry.evolutionLayout(s, dir) {
+        val tmp = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+        val docs = s.read.parquet(t(dir, "documents"))
+        docs.select($"doc_id", $"lang").write.parquet(s"$tmp/gen=1")
+        docs.select($"doc_id", $"lang",
+            ($"n_chars" / lit(1000.0)).as("quality"))
+          .write.parquet(s"$tmp/gen=2")
+        tmp
       }
       s.read.option("mergeSchema", "true").parquet(path)
         .groupBy($"lang")
@@ -4455,18 +4385,16 @@ object SparkEntry {
       // is the entry's INPUT fixture — built once per session and read
       // only (compactSegments writes its merge to a fresh dir each
       // pass); the per-run contract is the COMPACTION + probe (r12)
-      val path = SparkEntry.hnswCompactInputMemo.synchronized {
-        SparkEntry.hnswCompactInputMemo.getOrElseUpdate((s, dir), {
-          val p = java.nio.file.Files.createTempDirectory("graft-hnsw-cmp").toString
-          ops.Hnsw.buildGraph(emb.where($"vec_id" % 5 > 1), numSegments = 4)
-            .write.mode("overwrite").parquet(p)
-          (0 to 1).foreach { b =>
-            ops.Hnsw.buildGraph(emb.where($"vec_id" % 5 === b), numSegments = 2,
-                segOffset = 4 + b * 2)
-              .write.mode("append").parquet(p)
-          }
-          p
-        })
+      val path = SparkEntry.hnswCompactInputMemo(s, dir) {
+        val p = java.nio.file.Files.createTempDirectory("graft-hnsw-cmp").toString
+        ops.Hnsw.buildGraph(emb.where($"vec_id" % 5 > 1), numSegments = 4)
+          .write.mode("overwrite").parquet(p)
+        (0 to 1).foreach { b =>
+          ops.Hnsw.buildGraph(emb.where($"vec_id" % 5 === b), numSegments = 2,
+              segOffset = 4 + b * 2)
+            .write.mode("append").parquet(p)
+        }
+        p
       }
       val merged = ops.Hnsw.compactSegments(ops.Hnsw.readGraph(s, path),
         maxRows = emb.count() / 8, numSegments = 2, segOffset = 100)
@@ -4478,24 +4406,22 @@ object SparkEntry {
       // deterministic property of the insert path, and re-paying four
       // facade inserts + index builds per bench iteration would
       // dominate the entry's time without measuring anything new.
-      val autoOk = SparkEntry.autoCompactMemo.synchronized {
-        SparkEntry.autoCompactMemo.getOrElseUpdate((s, dir), {
-          s.conf.set("spark.graft.hnsw.mergeAt", "3")
-          try {
-            val wh = java.nio.file.Files.createTempDirectory("graft-hnsw-auto").toString
-            val rows = emb.where($"vec_id" < 100).select(
-              to_json(struct($"vec_id", $"label")).as("metadata"), $"embedding")
-            val db = new VectorDB(s, "items", wh, "hashing", Map("dim" -> "64"),
-              dim = 64, newTable = true)
-            db.insertEmbedded(rows.where($"vec_id" < 25))
-            db.table.buildHnswIndex()
-            val maxSegs = (1 to 3).map { b =>
-              db.insertEmbedded(rows.where($"vec_id" >= b * 25 && $"vec_id" < (b + 1) * 25))
-              db.table.hnswGraph.get.select($"seg").distinct().count()
-            }.max
-            maxSegs <= 3 && db.table.hnswGraph.get.count() == 100
-          } finally s.conf.unset("spark.graft.hnsw.mergeAt")
-        })
+      val autoOk = SparkEntry.autoCompactMemo(s, dir) {
+        s.conf.set("spark.graft.hnsw.mergeAt", "3")
+        try {
+          val wh = java.nio.file.Files.createTempDirectory("graft-hnsw-auto").toString
+          val rows = emb.where($"vec_id" < 100).select(
+            to_json(struct($"vec_id", $"label")).as("metadata"), $"embedding")
+          val db = new VectorDB(s, "items", wh, "hashing", Map("dim" -> "64"),
+            dim = 64, newTable = true)
+          db.insertEmbedded(rows.where($"vec_id" < 25))
+          db.table.buildHnswIndex()
+          val maxSegs = (1 to 3).map { b =>
+            db.insertEmbedded(rows.where($"vec_id" >= b * 25 && $"vec_id" < (b + 1) * 25))
+            db.table.hnswGraph.get.select($"seg").distinct().count()
+          }.max
+          maxSegs <= 3 && db.table.hnswGraph.get.count() == 100
+        } finally s.conf.unset("spark.graft.hnsw.mergeAt")
       }
       Similarity.recallGate(ops.Hnsw.probeGraph(ops.Hnsw.readGraph(s, cmpPath), q, k = 10),
           Similarity.bruteTopK(q, emb, k = 10), k = 10, floor = 0.9)
@@ -5364,23 +5290,21 @@ object SparkEntry {
       // at ingest, never again). Memoize the bucketed tables per source
       // dir so repeated runs measure the shuffle-free join, not the
       // setup; first run still pays the full layout cost.
-      val (li, o) = SparkEntry.bucketedLayout.synchronized {
-        SparkEntry.bucketedLayout.getOrElseUpdate((s, dir), {
-          val run = layoutRunSeq.incrementAndGet()
-          val tmp = java.nio.file.Files.createTempDirectory("graft-bucket").toString
-          def writeBucketed(df: DataFrame, name: String): String = {
-            // external table (explicit path): bucket metadata lives in the
-            // in-memory catalog, files in the temp dir — nothing persists
-            // into a ./spark-warehouse under the working directory
-            df.write.mode("overwrite").bucketBy(8, "k").sortBy("k")
-              .option("path", s"$tmp/$name").format("parquet").saveAsTable(name)
-            name
-          }
-          (writeBucketed(s.read.parquet(t(dir, "lineitem"))
-            .select($"l_orderkey".as("k"), $"l_quantity"), s"graft_bl_li_$run"),
-            writeBucketed(s.read.parquet(t(dir, "orders"))
-              .select($"o_orderkey".as("k"), $"o_orderpriority"), s"graft_bl_o_$run"))
-        })
+      val (li, o) = SparkEntry.bucketedLayout(s, dir) {
+        val run = layoutRunSeq.incrementAndGet()
+        val tmp = java.nio.file.Files.createTempDirectory("graft-bucket").toString
+        def writeBucketed(df: DataFrame, name: String): String = {
+          // external table (explicit path): bucket metadata lives in the
+          // in-memory catalog, files in the temp dir — nothing persists
+          // into a ./spark-warehouse under the working directory
+          df.write.mode("overwrite").bucketBy(8, "k").sortBy("k")
+            .option("path", s"$tmp/$name").format("parquet").saveAsTable(name)
+          name
+        }
+        (writeBucketed(s.read.parquet(t(dir, "lineitem"))
+          .select($"l_orderkey".as("k"), $"l_quantity"), s"graft_bl_li_$run"),
+          writeBucketed(s.read.parquet(t(dir, "orders"))
+            .select($"o_orderkey".as("k"), $"o_orderpriority"), s"graft_bl_o_$run"))
       }
       s.table(li).join(s.table(o), Seq("k"))
         .groupBy($"o_orderpriority")
@@ -5394,14 +5318,12 @@ object SparkEntry {
     // paid once per source dir, like the bucketed join. ----
     "layout_zorder" -> ((s, dir) => {
       import s.implicits._
-      val path = SparkEntry.zorderLayout.synchronized {
-        SparkEntry.zorderLayout.getOrElseUpdate((s, dir), {
-          val tmp = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-          ops.ZOrder.writeZOrdered(
-            s.read.parquet(t(dir, "lineitem"))
-              .select($"l_partkey", $"l_suppkey", $"l_quantity"),
-            "l_partkey", "l_suppkey", bits = 15, path = tmp, numFiles = 16)
-        })
+      val path = SparkEntry.zorderLayout(s, dir) {
+        val tmp = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+        ops.ZOrder.writeZOrdered(
+          s.read.parquet(t(dir, "lineitem"))
+            .select($"l_partkey", $"l_suppkey", $"l_quantity"),
+          "l_partkey", "l_suppkey", bits = 15, path = tmp, numFiles = 16)
       }
       s.read.parquet(path)
         .where($"l_partkey".between(100, 300) && $"l_suppkey".between(10, 40))
@@ -5415,13 +5337,11 @@ object SparkEntry {
     "sim_ann_pq" -> ((s, dir) => {
       import s.implicits._
       val emb = s.read.parquet(t(dir, "embeddings"))
-      val (books, codes) = SparkEntry.pqIndex.synchronized {
-        SparkEntry.pqIndex.getOrElseUpdate((s, dir), {
-          val b = ops.PqAnn.trainOn(emb, dim = 64, m = 8, k = 256)
-          val c = ops.PqAnn.encode(emb, b).persist()
-          c.count() // materialize once — this IS the stored index
-          (b, c)
-        })
+      val (books, codes) = SparkEntry.pqIndex(s, dir) {
+        val b = ops.PqAnn.trainOn(emb, dim = 64, m = 8, k = 256)
+        val c = ops.PqAnn.encode(emb, b).persist()
+        c.count() // materialize once — this IS the stored index
+        (b, c)
       }
       val q = emb.where($"vec_id" < 10)
       // ADC shortlist (16×k) + exact rerank: measured recall@10
@@ -5442,18 +5362,16 @@ object SparkEntry {
     "sim_ann_ivfpq" -> ((s, dir) => {
       import s.implicits._
       val emb = s.read.parquet(t(dir, "embeddings"))
-      val (index, codes) = SparkEntry.ivfpqIndex.synchronized {
-        SparkEntry.ivfpqIndex.getOrElseUpdate((s, dir), {
-          val (ix, c0) = ops.IvfPq.build(emb, dim = 64, nCells = 16, m = 8, k = 256)
-          // the stored index: driver artifact (centroids+codebooks) and
-          // CELL-PARTITIONED code parquet — probes prune unvisited
-          // cells at the directory level (PartitionFilters). Read back
-          // through loadIndex so the query exercises the full at-rest
-          // round trip a deployment ships between build and serving.
-          val path = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-          ops.IvfPq.persistIndex(ix, c0, path)
-          ops.IvfPq.loadIndex(s, path)
-        })
+      val (index, codes) = SparkEntry.ivfpqIndex(s, dir) {
+        val (ix, c0) = ops.IvfPq.build(emb, dim = 64, nCells = 16, m = 8, k = 256)
+        // the stored index: driver artifact (centroids+codebooks) and
+        // CELL-PARTITIONED code parquet — probes prune unvisited
+        // cells at the directory level (PartitionFilters). Read back
+        // through loadIndex so the query exercises the full at-rest
+        // round trip a deployment ships between build and serving.
+        val path = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+        ops.IvfPq.persistIndex(ix, c0, path)
+        ops.IvfPq.loadIndex(s, path)
       }
       val q = emb.where($"vec_id" < 10)
       Similarity.meanRecallGate(
@@ -5540,15 +5458,13 @@ object SparkEntry {
     }),
     "layout_compact" -> ((s, dir) => {
       import s.implicits._
-      val path = SparkEntry.compactLayout.synchronized {
-        SparkEntry.compactLayout.getOrElseUpdate((s, dir), {
-          val tmp = java.nio.file.Files.createTempDirectory("graft-compact").toString
-          val docs = s.read.parquet(t(dir, "documents"))
-          docs.repartition(64).write.parquet(s"$tmp/small") // fragmented ingest
-          ops.Compaction.compact(s.read.parquet(s"$tmp/small"), s"$tmp/compacted",
-            targetFileRows = 256)
-          tmp
-        })
+      val path = SparkEntry.compactLayout(s, dir) {
+        val tmp = java.nio.file.Files.createTempDirectory("graft-compact").toString
+        val docs = s.read.parquet(t(dir, "documents"))
+        docs.repartition(64).write.parquet(s"$tmp/small") // fragmented ingest
+        ops.Compaction.compact(s.read.parquet(s"$tmp/small"), s"$tmp/compacted",
+          targetFileRows = 256)
+        tmp
       }
       s.read.parquet(s"$path/compacted")
         .agg(count(lit(1)).as("cnt"),

@@ -21,8 +21,9 @@ import org.apache.spark.storage.StorageLevel
   * per-query write, a spec, an application's query loop) calls
   * [[release]] once the action completes. Memoized whole-table
   * artifacts (the components table, stored ANN code tables) deliberately
-  * do NOT go through here — they are session-lifetime by design and are
-  * torn down by `SparkEntry.releaseSessionCaches` on session retirement.
+  * do NOT go through here — they are session-lifetime by design, held
+  * in a [[SessionMemo]], and torn down by [[SessionMemo.releaseAll]]
+  * on session retirement.
   */
 object PlanCache {
 

@@ -15,9 +15,9 @@ import graft.functions._
   *  - injects [[AnnRewriteRule]], an opt-in optimizer rule that turns a
   *    brute-force cosine top-k plan into an LSH-bucket-prefiltered one.
   *
-  * Activate with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * Activate with `spark.sql.extensions=graft.plans.GraftExtensions`
+  * (as [[graft.core.Sessions]] does) or with
+  * `withExtensions(new GraftExtensions)` on a session builder.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

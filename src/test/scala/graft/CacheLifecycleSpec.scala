@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.matchers.should.Matchers
 
 /** Explicit cache lifecycle (round-4 review item): transient mid-plan
@@ -13,13 +12,12 @@ class CacheLifecycleSpec extends SparkSpec with Matchers {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def memoCount: Int =
-    Seq[scala.collection.Map[(SparkSession, String), _]](
-      SparkEntry.componentsMemo, SparkEntry.pqIndex, SparkEntry.ivfpqIndex)
-      .map(_.keys.count(_._1 eq spark)).sum
+  // memo entries that hold a persisted plan (SessionMemo.cached)
+  private def memoCount: Int = core.SessionMemo.cachedHeld(spark)
 
   test("every cache-registering query leaves only memoized tables after release") {
     val sc = spark.sparkContext
+    SparkEntry.releaseSessionCaches(spark) // start from no memoized tables
     val baseline = sc.getPersistentRDDs.keySet // other suites share the context
     // the registry queries that persist mid-plan subtrees (minhash
     // signatures, BM25 tf, duplicated windows — directly or through an
@@ -49,6 +47,10 @@ class CacheLifecycleSpec extends SparkSpec with Matchers {
       withClue(s"after $name: ${extra.size} persistent RDDs vs $memoCount memo tables: ") {
         extra.size should be <= memoCount
       }
+      // this entry list fills only the components and PQ / IVF-PQ
+      // code-table memos: the bound is no looser than those three
+      memoCount shouldBe Seq(SparkEntry.componentsMemo.size(spark),
+        SparkEntry.pqIndex.size(spark), SparkEntry.ivfpqIndex.size(spark)).sum
     }
     memoCount should be > 0 // the loop exercised the exemption, not a vacuous bound
     SparkEntry.releaseSessionCaches(spark)
@@ -56,6 +58,15 @@ class CacheLifecycleSpec extends SparkSpec with Matchers {
     withClue("after releaseSessionCaches: ") {
       (sc.getPersistentRDDs.keySet -- baseline) shouldBe empty
     }
+  }
+
+  test("releaseSessionCaches drops every session memo the session holds") {
+    SparkEntry.runEntry(spark, "ann_hnsw_compact", "/root/testdata/sf0.001") shouldBe true
+    SparkEntry.autoCompactMemo.size(spark) shouldBe 1
+    SparkEntry.hnswCompactInputMemo.size(spark) shouldBe 1
+    SparkEntry.releaseSessionCaches(spark)
+    core.SessionMemo.held(spark) shouldBe 0
+    core.SessionMemo.hits(spark) shouldBe 0
   }
 
   test("concurrent child sessions register and release caches independently") {
