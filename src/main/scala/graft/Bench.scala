@@ -1,5 +1,5 @@
 package graft
-import graft.core.Sessions
+import graft.core.{Json, Sessions}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -65,14 +65,7 @@ object Bench {
     }
     sentinels += sentinelOnce()
     val results = names.map(n => n -> times(n))
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = results.collect { case (k, ts) if ts.nonEmpty => s"${jstr(k)}:${ts.min}" }
+    val qs = results.collect { case (k, ts) if ts.nonEmpty => s"${Json.str(k)}:${ts.min}" }
       .mkString("{", ",", "}")
     // Per-query dispersion across the whole-suite passes: max/min ratio
     // (1.0 = perfectly stable). High spread on a query whose plan did
@@ -80,17 +73,17 @@ object Bench {
     // regressions by min, never by a high-spread single sample.
     def r3(x: Double): Double = math.rint(x * 1000) / 1000
     val spread = results.collect { case (k, ts) if ts.size >= 2 =>
-      s"${jstr(k)}:${r3(ts.max / ts.min)}"
+      s"${Json.str(k)}:${r3(ts.max / ts.min)}"
     }.mkString("{", ",", "}")
     val sentinelJson =
       s"""{"times":[${sentinels.map(r3).mkString(",")}],"min":${r3(sentinels.min)},"spread":${r3(sentinels.max / sentinels.min)}}"""
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val errJson = errors.map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }.mkString("{", ",", "}")
     val total = results.collect { case (_, ts) if ts.nonEmpty => ts.min }.sum
     // run ORDER ships with the artifact: a contiguous block of outliers
     // at adjacent positions (the BENCH_r11 positions-3–7 shape) is a
     // host stall, not N independent regressions — now diagnosable from
     // this one file without consulting bench_history.jsonl
-    val orderJson = names.map(jstr).mkString("[", ",", "]")
+    val orderJson = names.map(Json.str).mkString("[", ",", "]")
     // r12 judge's transparency items (additive — the driver's PERF
     // comparison keys on `queries`): `first` is each entry's PASS-1
     // seconds (for fixture consumers this INCLUDES the memoized build
@@ -100,10 +93,10 @@ object Bench {
     // not kept by hand — so a reader can tell probe-only mins from
     // build-inclusive ones mechanically.
     val firstJson = results.collect { case (k, ts) if ts.nonEmpty =>
-      s"${jstr(k)}:${ts.last}"
+      s"${Json.str(k)}:${ts.last}"
     }.mkString("{", ",", "}")
     val fixturesJson = names.filter(fixtureEntries)
-      .map(jstr).mkString("[", ",", "]")
+      .map(Json.str).mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"first":$firstJson,"fixture_entries":$fixturesJson,"spread":$spread,"sentinel":$sentinelJson,"order":$orderJson,"errors":$errJson,"runs":$runs,"sf":"$sfDir"}"""
     println(line)
     // sidecar: the driver's captured tail can truncate a long stdout
@@ -117,7 +110,7 @@ object Bench {
     // Label with SPARK_GRAFT_HISTORY_ROUND (e.g. "r8"); unlabeled local
     // iteration runs stay out of the ledger.
     sys.env.get("SPARK_GRAFT_HISTORY_ROUND").foreach { round =>
-      val row = s"""{"round":${jstr(round)},"total":$total,"sentinel":$sentinelJson,"queries":$qs,"runs":$runs,"sf":"$sfDir"}"""
+      val row = s"""{"round":${Json.str(round)},"total":$total,"sentinel":$sentinelJson,"queries":$qs,"runs":$runs,"sf":"$sfDir"}"""
       try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_history.jsonl"),
         row + "\n", java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
       catch { case e: Throwable => System.err.println(s"[bench] history append failed: ${e.getMessage}") }

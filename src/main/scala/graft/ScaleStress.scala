@@ -267,6 +267,7 @@ object ScaleStress {
           println(f"[stress] ratio  $name%-22s ${big / base}%8.2fx for ${copies}x data")
       }
     }
+    SparkEntry.releaseSessionCaches(spark)
     spark.stop()
   }
 
@@ -419,7 +420,7 @@ object ScaleStress {
     for (tier <- Seq("ivfpq", "bq")) {
       val emb = spark.read.parquet(s"$target/embeddings.parquet")
       val n = emb.count()
-      val wh = java.nio.file.Files.createTempDirectory(s"stress-$tier").toString
+      val wh = graft.core.Scratch.dir(spark, s"stress-$tier")
       val db = new VectorDB(spark, "items", wh, "hashing", Map("dim" -> "64"),
         dim = 64, newTable = true)
       val t0 = System.nanoTime()
@@ -456,7 +457,7 @@ object ScaleStress {
     generateEmbeddings(spark, src, target, copies)
     val emb = spark.read.parquet(s"$target/embeddings.parquet")
     val n = emb.count()
-    val wh = java.nio.file.Files.createTempDirectory("stress-widen").toString
+    val wh = graft.core.Scratch.dir(spark, "stress-widen")
     val db = new VectorDB(spark, "items", wh, "hashing", Map("dim" -> "64"),
       dim = 64, newTable = true)
     db.insertEmbedded(emb.select(
@@ -592,7 +593,7 @@ object ScaleStress {
         .write.format("gvdb").option("dim", "1").mode("overwrite").save(root)
       val n = new java.util.concurrent.atomic.AtomicLong
       val batches = new java.util.concurrent.atomic.AtomicInteger
-      val cp = java.nio.file.Files.createTempDirectory(s"graft-streamstress-cp").toString
+      val cp = graft.core.Scratch.dir(spark, s"graft-streamstress-cp")
       val t0 = System.nanoTime()
       val q = spark.readStream.format("gvdb")
         .option("maxFilesPerTrigger", "8").load(root)
@@ -624,7 +625,7 @@ object ScaleStress {
     import spark.implicits._
     generate(spark, src, target, copies)
     def runOnce(dir: String, tag: String): (Double, Double) = {
-      val wh = java.nio.file.Files.createTempDirectory(s"graft-mergestress-$tag").toString
+      val wh = graft.core.Scratch.dir(spark, s"graft-mergestress-$tag")
       val cat = "gms" + java.lang.Long.toHexString(System.nanoTime())
       spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GvdbCatalog")
       spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -700,7 +701,7 @@ object ScaleStress {
       Thread.sleep(500); recsRead.set(0L); body; Thread.sleep(700); recsRead.get
     }
     def runOnce(dir: String, tag: String): Unit = {
-      val wh = java.nio.file.Files.createTempDirectory(s"graft-victim-$tag").toString
+      val wh = graft.core.Scratch.dir(spark, s"graft-victim-$tag")
       val root = s"$wh/docs"
       val base = spark.read.parquet(s"$dir/documents.parquet")
       // FIXED rows per batch — the CDC reality: a bigger table means
@@ -777,7 +778,7 @@ object ScaleStress {
       Thread.sleep(500); recsRead.set(0L); body; Thread.sleep(700); recsRead.get
     }
     def runOnce(dir: String, tag: String): Unit = {
-      val wh = java.nio.file.Files.createTempDirectory(s"graft-vbloom-$tag").toString
+      val wh = graft.core.Scratch.dir(spark, s"graft-vbloom-$tag")
       val root = s"$wh/docs"
       val base = spark.read.parquet(s"$dir/documents.parquet")
       val batches = math.max(8, (base.count() / 625L).toInt)
@@ -850,7 +851,7 @@ object ScaleStress {
         }
     })
     def runOnce(dir: String, tag: String): Unit = {
-      val wh = java.nio.file.Files.createTempDirectory(s"graft-ctail-$tag").toString
+      val wh = graft.core.Scratch.dir(spark, s"graft-ctail-$tag")
       val root = s"$wh/docs"
       val table = new graft.table.VectorTable(spark, root, 1).create()
       val base = spark.read.parquet(s"$dir/documents.parquet")
@@ -905,7 +906,7 @@ object ScaleStress {
       Thread.sleep(500); recsRead.set(0L); body; Thread.sleep(700); recsRead.get
     }
     def runOnce(dir: String, tag: String): Unit = {
-      val wh = java.nio.file.Files.createTempDirectory(s"graft-fprune-$tag").toString
+      val wh = graft.core.Scratch.dir(spark, s"graft-fprune-$tag")
       val root = s"$wh/docs"
       spark.read.parquet(s"$dir/documents.parquet")
         .select($"doc_id".cast("string").as("id"),
@@ -948,7 +949,7 @@ object ScaleStress {
     * with per-tier build times. Results → BENCHNOTES round 11. */
   private def tierRecall384(spark: SparkSession, src: String): Unit = {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft-recall384").toString
+    val wh = graft.core.Scratch.dir(spark, "graft-recall384")
     val docs = spark.read.parquet(s"$src/documents.parquet")
       .select(to_json(struct($"doc_id", $"lang")).as("metadata"), $"text")
     val emb = graft.embed.EmbedOps
@@ -1011,7 +1012,7 @@ object ScaleStress {
         java.nio.file.Files.copy(seed,
           seed.resolveSibling(f"part-clone-$i%06d.parquet"))
       }
-      val cp = java.nio.file.Files.createTempDirectory(s"graft-manyfiles-cp").toString
+      val cp = graft.core.Scratch.dir(spark, s"graft-manyfiles-cp")
       val rows = new java.util.concurrent.atomic.AtomicLong
       val batches = new java.util.concurrent.atomic.AtomicInteger
       def drain(): Double = {
@@ -1061,7 +1062,7 @@ object ScaleStress {
     generate(spark, src, target, copies)
     def runOnce(dir: String, tag: String): (Double, Double) = {
       val root = s"/tmp/graft-gvdb-cdcstress-$tag/tbl"
-      val cp = java.nio.file.Files.createTempDirectory("graft-cdcstress-cp").toString
+      val cp = graft.core.Scratch.dir(spark, "graft-cdcstress-cp")
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       def shaped(d: org.apache.spark.sql.DataFrame) =
         d.select(concat(lit("d"), format_string("%012d", $"doc_id")).as("id"),

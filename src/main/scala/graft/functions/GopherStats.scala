@@ -20,8 +20,8 @@ import graft.functions.TextKernels.words
   * rules stay tunable. Ratios are portably rounded to 4 decimals BEFORE
   * thresholding so engine last-ulp differences can't flip a rule.
   *
-  * Differential twin: list-lambda SQL in SparkEntry's
-  * text_quality_gopher oracle entry.
+  * Differential twin: list-lambda SQL in the text_quality_gopher
+  * entry's oracle (`registry.TextEntries`).
   */
 case class GopherStatsExpr(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {

@@ -239,7 +239,7 @@ object Multimodal {
     * image near-dup signature): nearest-neighbor-sample the decoded
     * image onto a 9×8 grid, emit one bit per horizontally adjacent
     * pair (right > left), 64 bits total. Resize-invariant by
-    * construction — the property [[SparkEntry]]'s `mm_phash_dedup`
+    * construction — the property `mm_phash_dedup` (registry.MmEntries)
     * pins against a REAL recompressed copy. Real ImageIO decode per
     * row, map-only, binary never shuffles; at corpus scale the hashes
     * (8 bytes/image) are what joins, never the pixels. */

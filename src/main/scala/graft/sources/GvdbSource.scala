@@ -237,24 +237,28 @@ object GvdbFilters {
   * resolve the embedding dimension, route through the dedup insert. */
 object GvdbWrite {
 
-  /** dim resolution: explicit option > existing table rows > first
-    * incoming row. The inference reads ONE row (`head(1)`) — a bounded
-    * driver action, run once per batch write (the streaming sink
-    * memoizes it across batches). An OVERWRITE never consults the
-    * existing table: the old rows are about to be replaced, and pinning
-    * their dimension would reject a legitimate reshape (overwriting a
-    * dim-2 table with dim-4 vectors). */
+  /** dim resolution: existing table rows > explicit option > first
+    * incoming row; an explicit option that disagrees with the live rows
+    * is rejected (appending vectors of another dimension would break
+    * every later k-NN over the table). The table read is ONE row
+    * (`head(1)`) — a bounded driver action, run once per batch write
+    * (the streaming sink memoizes it across batches). An OVERWRITE
+    * never consults the existing table: the old rows are about to be
+    * replaced, and pinning their dimension would reject a legitimate
+    * reshape (overwriting a dim-2 table with dim-4 vectors). An empty
+    * or emptied table has no live row and pins nothing. */
   def resolveDim(spark: SparkSession, root: String, data: DataFrame,
-      dimOpt: Option[Int], overwrite: Boolean = false): Option[Int] =
-    dimOpt
-      .orElse {
-        val t = new VectorTable(spark, root, 1)
-        if (overwrite || !t.exists) None
-        else t.df.select(size(col(VectorSchema.EMBEDDING)).as("d"))
-          .head(1).headOption.map(_.getInt(0))
-      }
+      dimOpt: Option[Int], overwrite: Boolean = false): Option[Int] = {
+    val t = new VectorTable(spark, root, 1)
+    val stored = if (overwrite || !t.exists) None
+      else t.df.select(size(col(VectorSchema.EMBEDDING)).as("d"))
+        .head(1).headOption.map(_.getInt(0))
+    for (d <- dimOpt; live <- stored) require(d == live,
+      s"gvdb: dim option $d disagrees with the table's live rows (dim $live) at $root")
+    stored.orElse(dimOpt)
       .orElse(data.select(size(col(VectorSchema.EMBEDDING)).as("d"))
         .head(1).headOption.map(_.getInt(0)))
+  }
 
   /** Columns are matched by NAME (any order, extras dropped) and cast
     * to the contract types — `array<double>` embeddings from plain SQL

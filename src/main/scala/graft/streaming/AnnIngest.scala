@@ -75,7 +75,7 @@ object AnnIngest {
   def runIvfPqAppendAvailableNow(spark: SparkSession, dir: String,
       ix: IvfPq.Index, baseCodesPath: String): DataFrame = {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val root = java.nio.file.Files.createTempDirectory("graft-ann-stream").toString
+    val root = graft.core.Scratch.dir(spark, "graft-ann-stream")
     val delta = spark.readStream.schema(embSchema)
       .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
       .where(col("vec_id") % 5 === 0)
@@ -116,7 +116,7 @@ object AnnIngest {
     val db = new graft.VectorDB(spark, "items", baseWarehouse, "hashing",
       Map("dim" -> "64"), dim = 64)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tier-stream").toString
+    val ckpt = graft.core.Scratch.dir(spark, "graft-tier-stream")
     val delta = spark.readStream.schema(embSchema)
       .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
       .where(col("vec_id") % 5 === 0)
@@ -180,7 +180,7 @@ object AnnIngest {
       smallMaxRows: Long = 2000, mergeAt: Int = 6,
       baseGraph: Option[String] = None): DataFrame = {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val root = java.nio.file.Files.createTempDirectory("graft-hnsw-stream").toString
+    val root = graft.core.Scratch.dir(spark, "graft-hnsw-stream")
     // the 80% base segments: copied from a pre-built dir when provided
     // (the stream appends into its own copy — the per-run contract is
     // the micro-batch appends + compaction trigger + probe, and the

@@ -489,7 +489,7 @@ object EventStream {
     * temp-dir + rename the batch writers already use. */
   def runIdempotentSinkAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-eos").toString
+    val out = graft.core.Scratch.dir(spark, "graft-eos")
     val src = readEvents(spark, dir).select($"event_id", $"event_type", $"value")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
@@ -526,7 +526,7 @@ object EventStream {
     * trip: stream → sink → MoR read. */
   def runGvdbSinkAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-gvdb-sink").toString
+    val out = graft.core.Scratch.dir(spark, "graft-gvdb-sink")
     val root = s"$out/tbl"
     val src = readEvents(spark, dir)
       .select($"event_id".cast("string").as("id"),
@@ -561,7 +561,7 @@ object EventStream {
     * keyed per-epoch application commutes). */
   def runUpsertSinkAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-upsert-sink").toString
+    val out = graft.core.Scratch.dir(spark, "graft-upsert-sink")
     val root = s"$out/tbl"
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     def shaped(d: DataFrame, bump: Boolean) = {
@@ -625,7 +625,7 @@ object EventStream {
   def runCdcUpsertAvailableNow(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-cdc").toString
+    val root = graft.core.Scratch.dir(spark, "graft-cdc")
     // base rows enter versioned state as live upserts; base versions
     // (doc_id < 250) sort below every change version (doc_id ≥ 250),
     // matching the oracle where any change beats the base row

@@ -493,6 +493,32 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
     new VectorTable(spark, root, 4).drop()
   }
 
+  test("an explicit dim option that disagrees with the live rows is rejected") {
+    import spark.implicits._
+    val root = freshRoot("dimpin")
+    rows(0 until 10).write.format("gvdb").option("dim", "2")
+      .mode(SaveMode.Overwrite).save(root)
+    val dim4 = (10 until 15).map(i => (i.toString, "{}", Seq(1f, 2f, 3f, 4f)))
+      .toDF("id", "metadata", "embedding")
+    val err = intercept[Exception] {
+      dim4.write.format("gvdb").option("dim", "4").mode(SaveMode.Append).save(root)
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    msgs should (include("dim option 4") and include("dim 2"))
+    val back = spark.read.format("gvdb").load(root)
+    back.count() shouldBe 10
+    back.select(org.apache.spark.sql.functions.size(col("embedding")))
+      .distinct().collect().map(_.getInt(0)) shouldBe Array(2)
+    // an agreeing option appends; an overwrite may still reshape
+    rows(10 until 12).write.format("gvdb").option("dim", "2")
+      .mode(SaveMode.Append).save(root)
+    spark.read.format("gvdb").load(root).count() shouldBe 12
+    dim4.write.format("gvdb").option("dim", "4").mode(SaveMode.Overwrite).save(root)
+    spark.read.format("gvdb").load(root).count() shouldBe 5
+    new VectorTable(spark, root, 4).drop()
+  }
+
   test("streaming-source offsets are O(1) log indices backed by a seen-files log") {
     import graft.sources.{GvdbLogOffset, GvdbSourceOffset}
     val root = freshRoot("logoff")

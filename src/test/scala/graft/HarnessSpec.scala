@@ -8,8 +8,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.matchers.should.Matchers
 
 /** The registry harness says each thing once: every session comes
-  * from `core.Sessions`, and the entries that read a session fixture
-  * are derived from `core.SessionMemo` hit counts, not listed by hand. */
+  * from `core.Sessions`, the entries that read a session fixture are
+  * derived from `core.SessionMemo` hit counts, not listed by hand,
+  * each entry carries its own oracle SQL, and every scratch directory
+  * belongs to its session through `core.Scratch`. */
 class HarnessSpec extends SparkSpec with Matchers {
 
   test("fixture attribution marks exactly the entries that read a session memo") {
@@ -42,5 +44,49 @@ class HarnessSpec extends SparkSpec with Matchers {
     conf.sessionLocalTimeZone shouldBe "UTC"
     conf.getConfString("spark.sql.legacy.parquet.nanosAsLong") shouldBe "true"
     conf.numShufflePartitions shouldBe 4
+  }
+
+  test("every registry entry has a distinct name and its own oracle SQL") {
+    val names = SparkEntry.entries.map(_.name)
+    names should have size 327
+    names.distinct should have size 327
+    SparkEntry.entries.filter(_.oracleSql.trim.isEmpty).map(_.name) shouldBe empty
+    SparkEntry.queries.keySet shouldBe SparkEntry.oracleSql.keySet
+  }
+
+  /** Directories named `prefix…` directly under the temp dir or one
+    * level inside a `graft-*` directory there. */
+  private def graftDirs(prefixes: String*): Set[Path] = {
+    def dirs(p: Path): List[Path] =
+      try Files.list(p).iterator().asScala.filter(Files.isDirectory(_)).toList
+      catch { case _: java.io.IOException => Nil }
+    val top = dirs(Paths.get(System.getProperty("java.io.tmpdir")))
+      .filter(_.getFileName.toString.startsWith("graft-"))
+    (top ++ top.flatMap(dirs))
+      .filter(p => prefixes.exists(p.getFileName.toString.startsWith)).toSet
+  }
+
+  test("releasing a session deletes the scratch directories its entries created") {
+    val dir = "/root/testdata/sf0.001"
+    SparkEntry.releaseSessionCaches(spark) // the fixture below is built afresh
+    val prefixes = Seq("graft-ivfpq-base", "graft-del")
+    val before = graftDirs(prefixes: _*)
+    SparkEntry.runEntry(spark, "ann_ivfpq_incremental", dir) // memo fixture
+    SparkEntry.runEntry(spark, "vdb_delete", dir) // per-run scratch
+    val created = graftDirs(prefixes: _*) -- before
+    prefixes.foreach(p => created.map(_.getFileName.toString).exists(_.startsWith(p)) shouldBe true)
+    SparkEntry.releaseSessionCaches(spark)
+    created.filter(Files.exists(_)) shouldBe empty
+  }
+
+  test("createTempDirectory appears only in core/Scratch.scala and core/Iterate.scala") {
+    val root = Paths.get("src/main/scala")
+    val owners = Set("graft/core/Scratch.scala", "graft/core/Iterate.scala").map(root.resolve)
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    owners.foreach(files should contain(_)) // the scan saw the source tree
+    val offenders = files.filterNot(owners)
+      .filter((p: Path) => Files.readString(p).contains("createTempDirectory"))
+    offenders shouldBe empty
   }
 }
