@@ -172,7 +172,7 @@ private[graft] object GvdbRowLevel {
   /** The keys of a touched-first commit, collected to the driver ONCE
     * from the command's key projection ([[collectKeys]]). Every later
     * step of the commit — the cardinality gate, the footer-range and
-    * Bloom probes, the victim scan, the ride-along anti-join — reads
+    * Bloom probes, the victim scan, the ride-along filter — reads
     * these arrays instead of running its own Spark action over the
     * pinned frame. */
   private[graft] final case class TouchedKeys(preImage: Array[String],
@@ -235,6 +235,29 @@ private[graft] object GvdbRowLevel {
       sorted(at).compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(hi)) <= 0
   }
 
+  /** A driver-held id set as a row predicate: membership in a
+    * `SparkContext.broadcast` set, evaluated inside the scan's own
+    * stage. Shipping it runs no Spark job and plans no exchange or
+    * adaptive stage, where a broadcast JOIN of a local relation of the
+    * same ids runs one job to build it (Spark 4.1.2's
+    * `LocalTableScanExec` has no driver-side `executeCollectIterator`).
+    * A UDF, so the predicate stays opaque to source pushdown: a literal
+    * `id IN (...)` list of ~78k keys took 33–39 s to plan. The command
+    * that made the set closes it when it ends. */
+  private[graft] final class IdSet(spark: SparkSession, ids: Iterable[String])
+      extends AutoCloseable {
+    private val set = spark.sparkContext.broadcast(ids.iterator.filter(_ != null).toSet)
+
+    /** True where `id` is in the set; false for a null id (the
+      * semi- and anti-join semantics it replaces). */
+    def contains(id: Column): Column = {
+      val b = set
+      udf((s: String) => s != null && b.value.contains(s)).apply(id)
+    }
+
+    override def close(): Unit = set.destroy()
+  }
+
   /** Which part files hold any touched id (the CoW victims), and a
     * lazy frame of the ids those files carry (read from the victim
     * files themselves, so the caller must consume it BEFORE it deletes
@@ -248,37 +271,47 @@ private[graft] object GvdbRowLevel {
     * is exactly the locality CDC touches have; a false positive only
     * costs a ride-along rewrite, never correctness.
     *
-    * `touchedIds` is collected under [[probeCap]] (no Spark job when
-    * it is a local frame of ids the caller already holds). A set under
-    * that cap drives the range and Bloom probes from the driver and
-    * reaches the victim scan as a broadcast local relation. Above it
-    * the range probe is a broadcast join of the per-file stats against
-    * `touchedIds` and the victim scan a semi-join against it — the
-    * caller pins `touchedIds` (localCheckpoint), since both read it. */
+    * This overload takes ids the caller already holds: the range and
+    * Bloom probes run on the driver and the victim scan filters by an
+    * [[IdSet]] of them. */
+  private[graft] def victimLookup(spark: SparkSession, root: String,
+      touched: Array[String]): (Array[String], org.apache.spark.sql.DataFrame) =
+    lookup(spark, root, Left(touched))
+
+  /** [[victimLookup]] over a frame of touched ids: collected up to
+    * [[probeCap]] (no Spark job when it is a local frame) and then
+    * driven from the driver; above the cap the range probe is a
+    * broadcast join of the per-file stats against `touchedIds` and the
+    * victim scan a semi-join against it — the caller pins
+    * `touchedIds` (localCheckpoint), since both read it. */
   private[graft] def victimLookup(spark: SparkSession, root: String,
       touchedIds: org.apache.spark.sql.DataFrame)
+      : (Array[String], org.apache.spark.sql.DataFrame) = {
+    val cap = probeCap.value
+    val capped = touchedIds.limit(cap + 1).collect().map(_.getString(0))
+    lookup(spark, root, if (capped.length > cap) Right(touchedIds) else Left(capped))
+  }
+
+  private def lookup(spark: SparkSession, root: String,
+      touched: Either[Array[String], org.apache.spark.sql.DataFrame])
       : (Array[String], org.apache.spark.sql.DataFrame) = {
     val FileCol = "__gvdb_file"
     import spark.implicits._
     val stats = graft.sources.GvdbFooters.idStats(spark, root)
     val (known, unknown) = stats.partition(_._3.isDefined)
-    val touchedArr: Option[Array[String]] = {
-      val cap = probeCap.value
-      val capped = touchedIds.limit(cap + 1).collect().map(_.getString(0))
-      if (capped.length > cap) None else Some(capped)
-    }
-    val candKnown = touchedArr match {
-      case Some(ids) =>
+    val touchedArr = touched.swap.toOption
+    val candKnown = touched match {
+      case Left(ids) =>
         val sorted = ids.map(org.apache.spark.unsafe.types.UTF8String.fromString).sorted
         known.collect { case (f, _, Some((lo, hi))) if anyInRange(sorted, lo, hi) => f }
-      case None if known.nonEmpty =>
+      case Right(touchedIds) if known.nonEmpty =>
         val statsDf = known.map { case (f, _, r) => (f, r.get._1, r.get._2) }
           .toDF(FileCol, "__gvdb_lo", "__gvdb_hi")
         touchedIds.join(broadcast(statsDf),
             col(VectorSchema.ID) >= col("__gvdb_lo") &&
               col(VectorSchema.ID) <= col("__gvdb_hi"), "inner")
           .select(FileCol).distinct().collect().map(_.getString(0)).toSeq
-      case None => Seq.empty
+      case Right(_) => Seq.empty
     }
     var candidates = candKnown ++ unknown.map(_._1)
     // Bloom pruning on top of the range probe: under content-hash ids
@@ -291,13 +324,12 @@ private[graft] object GvdbRowLevel {
     // candidates.
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val probed = touchedArr.exists(_.nonEmpty) && graft.sources.IdBlooms.enabled(fs, root)
     // one manifest pass yields validity, hits AND the GC signal;
     // `bloomValid` is reused below for the lazy build's missing-set
-    val (bloomValid, bloomHits, bloomTotal) = touchedArr match {
-      case Some(ids) if graft.sources.IdBlooms.enabled(fs, root) =>
-        graft.sources.IdBlooms.probeValid(spark, fs, root, ids)
-      case _ => (Set.empty[String], Set.empty[String], 0L)
-    }
+    val (bloomValid, bloomHits, bloomTotal) =
+      if (probed) graft.sources.IdBlooms.probeValid(spark, fs, root, touchedArr.get)
+      else (Set.empty[String], Set.empty[String], 0L)
     def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
     if (bloomValid.nonEmpty)
       candidates = candidates.filter(p => !bloomValid(name(p)) || bloomHits(name(p)))
@@ -314,18 +346,22 @@ private[graft] object GvdbRowLevel {
         Some(if (bloomBuild)
           scan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else scan)
       }
-    // the victim scan semi-joins the touched ids: under the cap a
-    // broadcast local relation of the collected set (one small job,
-    // shipped once per executor rather than planned as a literal
-    // list), whose hits — about one per id — dedup on the driver;
-    // above it `touchedIds` itself, deduped on the cluster
+    // the victim scan keeps the rows of touched ids: under the cap an
+    // IdSet predicate over the collected set (no job to ship it), whose
+    // hits — about one per id — dedup on the driver; above it a
+    // semi-join against `touchedIds`, deduped on the cluster
     val victims = idToFile match {
       case None => Array.empty[String]
-      case Some(scan) =>
-        val probe = touchedArr.fold(touchedIds)(ids => broadcast(ids.toSeq.toDF(VectorSchema.ID)))
-        val hits = scan.join(probe, Seq(VectorSchema.ID), "left_semi").select(FileCol)
-        if (touchedArr.isDefined) hits.collect().map(_.getString(0)).distinct
-        else hits.distinct().collect().map(_.getString(0))
+      case Some(scan) => touched match {
+        case Left(ids) =>
+          val set = new IdSet(spark, ids)
+          try scan.where(set.contains(col(VectorSchema.ID))).select(FileCol)
+            .collect().map(_.getString(0)).distinct
+          finally set.close()
+        case Right(touchedIds) =>
+          scan.join(touchedIds, Seq(VectorSchema.ID), "left_semi").select(FileCol)
+            .distinct().collect().map(_.getString(0))
+      }
     }
     // LAZILY extend the bloom manifest from the candidate pass the
     // lookup just paid: bloom the NON-VICTIM candidates that lack an
@@ -334,17 +370,22 @@ private[graft] object GvdbRowLevel {
     // aggregation reads the persisted (id, file) frame, never the
     // data files again; files written later stay
     // unbloomed-conservative until the next lookup reads them anyway.
-    if (touchedArr.isDefined && candidates.nonEmpty) {
-      val victimNames = victims.iterator.map(name).toSet
-      val candNames = candidates.iterator.map(name).toSet
-      val rowsByName = stats.iterator
+    val victimNames = victims.iterator.map(name).toSet
+    val candNames = candidates.iterator.map(name).toSet
+    val rowsByName =
+      if (!bloomBuild) Map.empty[String, Long]
+      else stats.iterator
         .map { case (p, n, _) => name(p) -> n }
         .filter { case (n, _) => !bloomValid(n) && candNames(n) && !victimNames(n) }
-        .toMap // empty unless bloomBuild
-      graft.sources.IdBlooms.buildFrom(spark, fs, root, idToFile.get, rowsByName)
+        .toMap
+    idToFile.foreach(graft.sources.IdBlooms.buildFrom(spark, fs, root, _, rowsByName))
+    // a manifest left with no valid entry once the victims go would
+    // cost every later lookup a probe job for nothing: drop it
+    if (probed && rowsByName.isEmpty && bloomValid.subsetOf(victimNames))
+      graft.sources.IdBlooms.dropUnused(fs, root)
+    else if (touchedArr.isDefined)
       graft.sources.IdBlooms.gcIfBloated(spark, fs, root,
         bloomTotal + rowsByName.size, bloomValid.size.toLong + rowsByName.size)
-    }
     if (bloomBuild) idToFile.get.unpersist()
     val victimIds =
       if (victims.isEmpty) Seq.empty[String].toDF(VectorSchema.ID)
@@ -367,16 +408,21 @@ private[graft] object GvdbRowLevel {
     *
     * `keys` is the command's key projection ([[KeyCols]] order) and
     * `collected` what [[collectKeys]] took from it. With the collected
-    * set, the victim lookup and the ride-along anti-join read local
-    * frames of those ids and run no Spark action over the command's
-    * frame. Without it (a projection above the probe cap, or a MERGE
-    * whose target is not key-pruned) the touched ids are pinned here
-    * from the projection and the ride-along anti-joins its pre-image
-    * column. The caller holds the writer lock from before its frame
-    * was read (a snapshot read outside the writer turn can commit
-    * stale rows). Indexed tables take the same route: the LSH bucket
-    * column is written with the rows and the active graph/quantizer
-    * tier rebuilds after the commit ([[appendAndRetire]]). */
+    * set, the victim lookup reads those ids, the ride-along filters by
+    * an [[IdSet]] of the pre-image ids, and the replacement rows — at
+    * most [[probeCap]] mutated rows plus the victims' own — are written
+    * as one file per victim (one when there is none), so a commit
+    * leaves as many files as it retires (Delta's copy-on-write layout).
+    * Without it (a projection above the probe cap, or a MERGE whose
+    * target is not key-pruned) the touched ids are pinned here from the
+    * projection, the ride-along anti-joins its pre-image column, and
+    * the append keeps its input partitioning: `mutated` may be
+    * table-sized there. The caller holds the writer lock from before
+    * its frame was read (a snapshot read outside the writer turn can
+    * commit stale rows). Indexed tables take the same route: the LSH
+    * bucket column is written with the rows and the active
+    * graph/quantizer tier rebuilds after the commit
+    * ([[appendAndRetire]]). */
   private[graft] def groupCopyOnWriteMutated(spark: SparkSession, root: String,
       mutated: org.apache.spark.sql.DataFrame,
       keys: org.apache.spark.sql.DataFrame,
@@ -384,34 +430,37 @@ private[graft] object GvdbRowLevel {
     val hfs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.core.WriterLock.withLock(hfs, root) {
-      import spark.implicits._
-      val (touchedIds, preImageIds) = collected match {
-        case Some(k) => // local relations of the collected ids
-          (k.touched.toSeq.toDF(VectorSchema.ID),
-            broadcast(k.preImage.toSeq.toDF(VectorSchema.ID)))
-        case None =>
-          (touchedOf(keys).distinct()
-            .localCheckpoint(true), // read by the range join and the victim scan
-            preImageOf(keys).distinct())
+      val (victims, victimIds) = collected match {
+        case Some(k) => victimLookup(spark, root, k.touched)
+        case None => victimLookup(spark, root,
+          touchedOf(keys).distinct()
+            .localCheckpoint(true)) // read by the range join and the victim scan
       }
-      val (victims, victimIds) = victimLookup(spark, root, touchedIds)
-      val replacement =
-        if (victims.isEmpty) mutated
-        else {
-          val raw = spark.read.schema(VectorSchema.schema).parquet(victims.toSeq: _*)
-          val tombPath = new org.apache.hadoop.fs.Path(root + ".tombstones")
-          val live =
-            if (!hfs.exists(tombPath)) raw
-            else raw.join(broadcast(spark.read.schema(tombSchema)
-              .parquet(tombPath.toString)), Seq(VectorSchema.ID), "left_anti")
-          mutated.unionByName(live.join(preImageIds, Seq(VectorSchema.ID), "left_anti"))
-        }
-      appendAndRetire(spark, root, hfs, replacement, victims, victimIds)
+      val preImage = collected.map(k => new IdSet(spark, k.preImage))
+      try {
+        val replacement =
+          if (victims.isEmpty) mutated
+          else {
+            val raw = spark.read.schema(VectorSchema.schema).parquet(victims.toSeq: _*)
+            val tombPath = new org.apache.hadoop.fs.Path(root + ".tombstones")
+            val live =
+              if (!hfs.exists(tombPath)) raw
+              else raw.join(broadcast(spark.read.schema(tombSchema)
+                .parquet(tombPath.toString)), Seq(VectorSchema.ID), "left_anti")
+            mutated.unionByName(preImage match {
+              case Some(set) => live.where(!set.contains(col(VectorSchema.ID)))
+              case None => live.join(preImageOf(keys).distinct(), Seq(VectorSchema.ID), "left_anti")
+            })
+          }
+        appendAndRetire(spark, root, hfs, replacement, victims, victimIds,
+          outFiles = collected.map(_ => math.max(1, victims.length)))
+      } finally preImage.foreach(_.close())
     }
   }
 
   /** The commit tail of [[groupCopyOnWriteMutated]]: dim gate, the
-    * on-disk columns (LSH buckets, extracts), append, tombstone fold,
+    * on-disk columns (LSH buckets, extracts), append — as `outFiles`
+    * files when given, else one per input partition — tombstone fold,
     * victim deletion, selective snapshot expiry, then the rebuild of
     * an active HNSW / IVF-PQ / BQ tier. A failed fold takes the
     * appended files back out, so the table stays as it was before the
@@ -420,26 +469,26 @@ private[graft] object GvdbRowLevel {
       hfs: org.apache.hadoop.fs.FileSystem,
       replacement: org.apache.spark.sql.DataFrame,
       victims: Array[String],
-      victimIds: org.apache.spark.sql.DataFrame): Unit = {
+      victimIds: org.apache.spark.sql.DataFrame,
+      outFiles: Option[Int]): Unit = {
     val table = new VectorTable(spark, root, 1)
     // the dim gate the insert path applies (a group write bypasses
-    // GvdbWrite.insert, but mixed dimensions must still be impossible)
-    val dimHead = spark.read.schema(VectorSchema.schema).parquet(root)
-      .select(size(col(VectorSchema.EMBEDDING)).as("d")).head(1).headOption.map(_.getInt(0))
-    val checked = dimHead match {
+    // GvdbWrite.insert, but mixed dimensions must still be impossible),
+    // under the table's one dimension rule, read with no Spark job
+    val stored = graft.sources.GvdbFooters.storedDim(spark, root)
+    val checked = stored match {
       case Some(d) => replacement.withColumn(VectorSchema.EMBEDDING,
         when(col(VectorSchema.EMBEDDING).isNull ||
             size(col(VectorSchema.EMBEDDING)) === d, col(VectorSchema.EMBEDDING))
-          .otherwise(raise_error(concat(
-            lit(s"embedding dim mismatch: expected $d, got "),
-            size(col(VectorSchema.EMBEDDING)).cast("string")))))
+          .otherwise(VectorTable.dimMismatch(d)))
       case None => replacement
     }
     // an empty LSH-indexed table takes its bucket dimension from the
     // rows it receives
-    val dim = dimHead.orElse(table.annIndexMeta.flatMap(_ =>
+    val dim = stored.orElse(table.annIndexMeta.flatMap(_ =>
       replacement.select(size(col(VectorSchema.EMBEDDING))).head(1).headOption.map(_.getInt(0))))
-    val toAppend = table.onDiskColumns(checked, dim.getOrElse(table.dim))
+    val onDisk = table.onDiskColumns(checked, dim.getOrElse(table.dim))
+    val toAppend = outFiles.fold(onDisk)(onDisk.coalesce)
     graft.core.PlanDump.dump(toAppend, "groupcow_append")
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val tombPath = new org.apache.hadoop.fs.Path(root + ".tombstones")
@@ -626,34 +675,41 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     // rows ride along from the victim files themselves
     // (groupCopyOnWriteMutated).
     val srcKey = fastPathKey(fullJoined, idField)
-    val joined = srcKey match {
-      case Some(key) =>
-        // the target side is semi-joined with the source keys: a
-        // broadcast local relation of them when they fit under the
-        // probe cap — collecting a local source (a temp view of driver
-        // rows, a CDC batch) runs no job at all — else the distinct
-        // keys on the cluster. Source on the LEFT (full outer is
-        // symmetric; sides are told apart by the T/S presence columns,
-        // never position): on the cluster route the source plan appears
-        // twice — once as the join side, once inside the key set — and
-        // the analyzer's DeduplicateRelations re-aliases the SECOND
-        // occurrence. The key subtree only surfaces the SK alias, so it
-        // is the one occurrence whose exprIds may change; the join-side
-        // source must keep its original exprIds, which the
-        // star-expanded action assignments reference directly.
-        import spark.implicits._
-        val cap = GvdbRowLevel.probeCap.value
-        val srcKeys = sDf.select(GraftBridge.column(key).cast("string"))
-          .limit(cap + 1).collect().map(_.getString(0))
-        val keySet =
-          if (srcKeys.length <= cap) broadcast(srcKeys.distinct.toSeq.toDF(SK))
-          else sDf.select(GraftBridge.column(key).as(SK)).distinct()
-        val tPruned = tDf.join(keySet, GraftBridge.column(idField) === col(SK), "left_semi")
-        sDf.withColumn(S, lit(1))
-          .join(tPruned.withColumn(T, lit(1)), GraftBridge.column(spec.cond), "full_outer")
-      case _ => fullJoined
+    // the source keys, held on the driver when they fit under the probe
+    // cap: collecting a local source (a temp view of driver rows, a CDC
+    // batch) runs no job at all, and neither does shipping the set
+    val keySet = srcKey.flatMap { key =>
+      val cap = GvdbRowLevel.probeCap.value
+      val srcKeys = sDf.select(GraftBridge.column(key).cast("string"))
+        .limit(cap + 1).collect().map(_.getString(0))
+      if (srcKeys.length > cap) None else Some(new GvdbRowLevel.IdSet(spark, srcKeys))
     }
-    runClassified(spark, joined, srcKey.isDefined, targetFields, idField, hasUpdateOrInsert)
+    try {
+      val joined = srcKey match {
+        case Some(key) =>
+          // the target side keeps the rows whose id is among the source
+          // keys: an IdSet predicate over the collected keys, else a
+          // semi-join with the distinct keys on the cluster. Source on
+          // the LEFT (full outer is symmetric; sides are told apart by
+          // the T/S presence columns, never position): on the cluster
+          // route the source plan appears twice — once as the join
+          // side, once inside the key set — and the analyzer's
+          // DeduplicateRelations re-aliases the SECOND occurrence. The
+          // key subtree only surfaces the SK alias, so it is the one
+          // occurrence whose exprIds may change; the join-side source
+          // must keep its original exprIds, which the star-expanded
+          // action assignments reference directly.
+          val tPruned = keySet match {
+            case Some(set) => tDf.where(set.contains(GraftBridge.column(idField)))
+            case None => tDf.join(sDf.select(GraftBridge.column(key).as(SK)).distinct(),
+              GraftBridge.column(idField) === col(SK), "left_semi")
+          }
+          sDf.withColumn(S, lit(1))
+            .join(tPruned.withColumn(T, lit(1)), GraftBridge.column(spec.cond), "full_outer")
+        case _ => fullJoined
+      }
+      runClassified(spark, joined, srcKey.isDefined, targetFields, idField, hasUpdateOrInsert)
+    } finally keySet.foreach(_.close())
   }
 
   private def runClassified(spark: SparkSession,
@@ -711,7 +767,7 @@ case class GvdbMergeCommand(root: String, targetPlan: LogicalPlan,
     // entries). Right after it, ONE bounded collect of the narrow
     // (pre-image, post-image, matched) id projection gives the driver
     // every key the commit needs: the cardinality gate, the victim
-    // lookup and the ride-along anti-join run from that set.
+    // lookup and the ride-along filter run from that set.
     val classified0 = joined.withColumn(ACT, act)
     graft.core.PlanDump.dump(classified0, "merge_classified")
     // an unpruned join is table-sized: never pinned nor collected (a

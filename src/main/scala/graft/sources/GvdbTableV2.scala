@@ -210,6 +210,68 @@ private[graft] object GvdbFooters {
       conf: org.apache.hadoop.conf.Configuration): Option[(String, String)] =
     colRangeOf(st, conf, graft.core.VectorSchema.ID)
 
+  /** Per-file embedding length of the first row with a non-null
+    * embedding (None: the file has none), memoized like the row
+    * counts. Reads the embedding column of one file with parquet-mr,
+    * row group by row group until such a row turns up. */
+  private val dimMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Option[Int]]
+
+  private def dimOf(st: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration): Option[Int] =
+    dimMemo.computeIfAbsent(
+      (st.getPath.toString, st.getLen, st.getModificationTime),
+      _ => {
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try {
+          val fileSchema = r.getFooter.getFileMetaData.getSchema
+          val emb = graft.core.VectorSchema.EMBEDDING
+          if (!fileSchema.containsField(emb)) None
+          else {
+            val proj = new org.apache.parquet.schema.MessageType(
+              fileSchema.getName, fileSchema.getType(fileSchema.getFieldIndex(emb)))
+            r.setRequestedSchema(proj)
+            val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(proj, fileSchema)
+            // an embedding is a LIST group: its one repeated child
+            // occurs once per element, and a null embedding leaves the
+            // group itself absent
+            Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null)
+              .flatMap { pages =>
+                val rows = io.getRecordReader(pages,
+                  new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(proj))
+                Iterator.fill(pages.getRowCount.toInt)(rows.read())
+              }
+              .collectFirst { case g if g.getFieldRepetitionCount(0) > 0 =>
+                g.getGroup(0, 0).getFieldRepetitionCount(0)
+              }
+          }
+        } finally r.close()
+      })
+
+  /** The stored embedding dimension of the table at `root`, read on
+    * the driver with no Spark job — None when no stored row carries an
+    * embedding (an absent or empty table).
+    *
+    * The one dimension rule of a gvdb table: its STORED rows, deleted
+    * ones included, fix the dimension until a vacuum or an overwrite
+    * removes them. INSERT ([[GvdbWrite.resolveDim]]) and the row-level
+    * commit (`GvdbRowLevel.groupCopyOnWriteMutated`) both gate on it,
+    * so an emptied table keeps rejecting vectors of another dimension
+    * until it is vacuumed. Every write gates on this one dimension, so
+    * any stored row answers: the smallest data-carrying file is read,
+    * and each file is read at most once per JVM (data files are
+    * immutable). */
+  def storedDim(spark: SparkSession, root: String): Option[Int] = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val hfs = p.getFileSystem(conf)
+    if (!hfs.exists(p)) None
+    else hfs.listStatus(p).toSeq.filter(_.getPath.getName.startsWith("part-"))
+      .filter(st => footerRows(st, conf) > 0)
+      .sortBy(st => (st.getLen, st.getPath.getName))
+      .iterator.flatMap(dimOf(_, conf)).nextOption()
+  }
+
   /** Driver-side footer statistics for every data-carrying part file
     * under `root`: (path, rows, id min/max). Zero-row files are
     * omitted — they can never hold a touched row. Feeds the file-group

@@ -53,6 +53,17 @@ import graft.core.VectorSchema
   * entries GC when they outnumber live ones ([[gcIfBloated]], counts
   * the lookup already holds).
   *
+  * A manifest exists only while it can prune. When a lookup's probe
+  * leaves it no valid entry past this commit — none matched a live
+  * file, or every one belongs to a victim the caller is about to
+  * delete — and the lookup blooms no file, the lookup drops the whole
+  * manifest ([[dropUnused]]). [[enabled]] is then false, and later
+  * lookups run no probe job until a lookup finds an unbloomed
+  * non-victim candidate and starts a new one. A touched-first commit
+  * writes its replacement rows as one file per victim, so on a CDC
+  * loop the replacement files become the next commits' victims and
+  * no new manifest starts.
+  *
   * A Bloom false positive only costs a ride-along candidate read; a
   * false negative is impossible, so pruning is sound by construction.
   */
@@ -220,6 +231,12 @@ private[graft] object IdBlooms {
     spark.createDataFrame(entries, manifestSchema)
       .write.mode("append").parquet(dir(root).toString)
   }
+
+  /** Drops a manifest that holds no entry a later lookup could use,
+    * under the writer lock: derived state, so losing it only costs
+    * re-derivation. */
+  def dropUnused(fs: FileSystem, root: String): Unit =
+    graft.core.WriterLock.withLock(fs, root)(drop(fs, root))
 
   def drop(fs: FileSystem, root: String): Unit = {
     fs.delete(dir(root), true)

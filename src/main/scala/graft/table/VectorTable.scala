@@ -871,9 +871,7 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
       .select(VectorSchema.ID, VectorSchema.METADATA, VectorSchema.EMBEDDING)
       .withColumn(VectorSchema.EMBEDDING,
         when(size(col(VectorSchema.EMBEDDING)) === dim, col(VectorSchema.EMBEDDING))
-          .otherwise(raise_error(concat(
-            lit(s"embedding dim mismatch: expected $dim, got "),
-            size(col(VectorSchema.EMBEDDING)).cast("string")))))
+          .otherwise(VectorTable.dimMismatch(dim)))
     val deduped = checked.dropDuplicates(VectorSchema.ID)
     // anti-join unconditionally: against an empty table it is an
     // identity with a near-zero build side, and skipping it would cost
@@ -960,4 +958,18 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
       .write.mode("overwrite").parquet(root)
     if (buildIndex) buildAnnIndex()
   }
+}
+
+object VectorTable {
+
+  /** The write-side dimension gate's failure: raised for a row whose
+    * embedding length is not `d`. The message states the dimension
+    * rule ([[graft.sources.GvdbFooters.storedDim]]), so a write into an
+    * emptied table says how to change its dimension. */
+  private[graft] def dimMismatch(d: Int): org.apache.spark.sql.Column =
+    raise_error(concat(
+      lit(s"embedding dim mismatch: expected $d, got "),
+      size(col(VectorSchema.EMBEDDING)).cast("string"),
+      lit("; stored rows, deleted ones included, fix a table's dimension " +
+        "until a vacuum or an overwrite removes them")))
 }

@@ -13,7 +13,7 @@ class AnnRewriteSpec extends SparkSpec with Matchers {
     import spark.implicits._
     spark.experimental.extraOptimizations = Seq(new AnnRewriteRule(spark))
     try {
-      val wh = Files.createTempDirectory("graft-ann").toString
+      val wh = tempDir("graft-ann")
       val db = new VectorDB(spark, "t", wh, "hashing", Map("dim" -> "16"), dim = 16, newTable = true)
       val docs = (0 until 200).map(i =>
         s"""{"id": $i, "text": "topic ${i % 5} document $i with words about subject ${i % 5}"}""")
@@ -44,7 +44,7 @@ class AnnRewriteSpec extends SparkSpec with Matchers {
     import spark.implicits._
     spark.experimental.extraOptimizations = Seq(new AnnRewriteRule(spark))
     try {
-      val wh = Files.createTempDirectory("graft-ann-filt").toString
+      val wh = tempDir("graft-ann-filt")
       val db = new VectorDB(spark, "t", wh, "hashing", Map("dim" -> "16"), dim = 16, newTable = true)
       val docs = (0 until 200).map(i =>
         s"""{"id": $i, "text": "topic ${i % 5} document $i with words about subject ${i % 5}"}""")
@@ -71,7 +71,7 @@ class AnnRewriteSpec extends SparkSpec with Matchers {
 
   test("rewrite toggle is session-isolated: a child session's rule never leaks to the parent") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("graft-ann-iso").toString
+    val wh = tempDir("graft-ann-iso")
     val db = new VectorDB(spark, "t", wh, "hashing", Map("dim" -> "16"), dim = 16, newTable = true)
     val docs = (0 until 200).map(i =>
       s"""{"id": $i, "text": "topic ${i % 5} document $i with words about subject ${i % 5}"}""")
@@ -109,7 +109,7 @@ class AnnRewriteSpec extends SparkSpec with Matchers {
     import spark.implicits._
     spark.experimental.extraOptimizations = Seq(new AnnRewriteRule(spark))
     try {
-      val wh = Files.createTempDirectory("graft-ann-graph").toString
+      val wh = tempDir("graft-ann-graph")
       val db = new VectorDB(spark, "t", wh, "hashing", Map("dim" -> "16"), dim = 16, newTable = true)
       val docs = (0 until 200).map(i =>
         s"""{"id": $i, "text": "topic ${i % 5} document $i with words about subject ${i % 5}"}""")
@@ -148,7 +148,7 @@ class AnnRewriteSpec extends SparkSpec with Matchers {
     import spark.implicits._
     spark.experimental.extraOptimizations = Seq(new AnnRewriteRule(spark))
     try {
-      val wh = Files.createTempDirectory("graft-ann-graph-f").toString
+      val wh = tempDir("graft-ann-graph-f")
       val db = new VectorDB(spark, "t", wh, "hashing", Map("dim" -> "16"), dim = 16, newTable = true)
       val docs = (0 until 200).map(i =>
         s"""{"id": $i, "text": "topic ${i % 5} document $i with words about subject ${i % 5}"}""")
@@ -176,7 +176,7 @@ class AnnRewriteSpec extends SparkSpec with Matchers {
     import spark.implicits._
     spark.experimental.extraOptimizations = Seq(new AnnRewriteRule(spark))
     try {
-      val wh = Files.createTempDirectory("graft-ann-empty").toString
+      val wh = tempDir("graft-ann-empty")
       val db = new VectorDB(spark, "t", wh, "hashing", Map("dim" -> "16"), dim = 16, newTable = true)
       val docs = (0 until 200).map(i =>
         s"""{"id": $i, "text": "topic ${i % 5} document $i with words about subject ${i % 5}"}""")
@@ -187,7 +187,7 @@ class AnnRewriteSpec extends SparkSpec with Matchers {
       // optimizer-fold to false and the query would return 0 rows
       val graphPath = s"$wh/t.hnsw"
       val empty = spark.read.parquet(graphPath).where(lit(false))
-      val tmp = Files.createTempDirectory("graft-ann-empty-g").toString
+      val tmp = tempDir("graft-ann-empty-g")
       empty.write.mode("overwrite").parquet(tmp)
       spark.read.parquet(tmp).write.mode("overwrite").parquet(graphPath)
       spark.conf.set("spark.graft.ann.autoRewrite", "true")
@@ -217,7 +217,7 @@ class AnnRewriteSpec extends SparkSpec with Matchers {
     import spark.implicits._
     spark.experimental.extraOptimizations = Seq(new AnnRewriteRule(spark))
     try {
-      val wh = Files.createTempDirectory("graft-ann-idx").toString
+      val wh = tempDir("graft-ann-idx")
       val db = new VectorDB(spark, "t", wh, "hashing", Map("dim" -> "16"), dim = 16, newTable = true)
       val docs = (0 until 200).map(i =>
         s"""{"id": $i, "text": "topic ${i % 5} document $i with words about subject ${i % 5}"}""")

@@ -15,7 +15,7 @@ class DeleteLifecycleSpec extends SparkSpec with Matchers {
   }
 
   private def freshTable(name: String) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    val wh = tempDir(s"graft-$name")
     new VectorTable(spark, s"$wh/t", 4).create()
   }
 

@@ -13,7 +13,7 @@ class EdgeCaseSpec extends SparkSpec with Matchers {
 
   test("empty table: query returns empty, empty insert is a no-op") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("graft-edge").toString
+    val wh = tempDir("graft-edge")
     val db = new VectorDB(spark, "empty", wh, "hashing", Map("dim" -> "16"),
       dim = 16, newTable = true)
     db.numRows shouldBe 0L
@@ -52,7 +52,7 @@ class EdgeCaseSpec extends SparkSpec with Matchers {
 
   test("unicode document round-trips insert + query with stable content id") {
     import spark.implicits._
-    val wh = Files.createTempDirectory("graft-edge-uni").toString
+    val wh = tempDir("graft-edge-uni")
     val db = new VectorDB(spark, "uni", wh, "hashing", Map("dim" -> "16"),
       dim = 16, newTable = true)
     val doc = """{"name": "müller 你好 🎉", "text": "unicode content body"}"""
@@ -65,7 +65,7 @@ class EdgeCaseSpec extends SparkSpec with Matchers {
 
   test("corrupt JSONL lines quarantine under PERMISSIVE mode instead of failing the job") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-corrupt").toString
+    val dir = tempDir("graft-corrupt")
     Seq(
       """{"doc_id": 1, "text": "good one"}""",
       """{"doc_id": 2, "text": "truncated""", // bad
@@ -115,7 +115,7 @@ class EdgeCaseSpec extends SparkSpec with Matchers {
 
   test("q_mad on a constant column: MAD = 0 reports zero modified-z, never NaN") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-mad-edge").toString
+    val dir = tempDir("graft-mad-edge")
     // every total identical -> every deviation 0 -> mad4 = 0: the
     // modified z-score is undefined (0/0) and must guard to 0.0
     (1 to 7).map(i => (i.toLong, 100.00)).toDF("o_orderkey", "o_totalprice")

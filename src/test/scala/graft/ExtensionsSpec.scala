@@ -68,7 +68,7 @@ class ExtensionsSpec extends SparkSpec with Matchers {
   test("gvdb table-valued functions: SQL scan/knn match the DataFrame path and fuse top-k") {
     import spark.implicits._
     graft.plans.GvdbTableFunctions.register(spark)
-    val root = java.nio.file.Files.createTempDirectory("graft-tvf").toString + "/tbl"
+    val root = tempDir("graft-tvf") + "/tbl"
     // angles spread on the unit circle: distance to (1, 0) grows with i
     (0 until 50).map { i =>
       val a = i * 0.02
@@ -89,7 +89,7 @@ class ExtensionsSpec extends SparkSpec with Matchers {
 
   test("SQL gvdb_knn is planner-accelerated by a persisted HNSW index") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-tvf-ann").toString + "/tbl"
+    val root = tempDir("graft-tvf-ann") + "/tbl"
     (0 until 200).map { i =>
       val a = i * 0.01
       (f"d$i%03d", "{}", Seq(math.cos(a).toFloat, math.sin(a).toFloat, 0f, 0f))

@@ -14,7 +14,7 @@ import graft.table.VectorTable
   * external LOCATION tables adopting existing warehouse roots. */
 class GvdbCatalogSpec extends SparkSpec with Matchers {
 
-  private lazy val warehouse = Files.createTempDirectory("graft-catalog").toString
+  private lazy val warehouse = tempDir("graft-catalog")
 
   private def init(): Unit = {
     spark.conf.set("spark.sql.catalog.vdbcat", "graft.sources.GvdbCatalog")
@@ -53,7 +53,7 @@ class GvdbCatalogSpec extends SparkSpec with Matchers {
   test("external LOCATION table adopts an existing gvdb root; DROP unlinks only") {
     init()
     import spark.implicits._
-    val external = Files.createTempDirectory("graft-catalog-ext").toString + "/tbl"
+    val external = tempDir("graft-catalog-ext") + "/tbl"
     (0 until 7).map(i => (i.toString, "{}", Seq(i.toFloat)))
       .toDF("id", "metadata", "embedding")
       .write.format("gvdb").option("dim", "1").mode("overwrite").save(external)
@@ -171,8 +171,8 @@ class GvdbCatalogSpec extends SparkSpec with Matchers {
     spark.sql("""CREATE TABLE vdbcat.str.feed
                  (id string, metadata string, embedding array<float>) USING gvdb""")
     spark.sql("INSERT INTO vdbcat.str.feed VALUES ('a','{}',array(1.0f)), ('b','{}',array(2.0f))")
-    val out = Files.createTempDirectory("graft-catstream-out").toString
-    val cp = Files.createTempDirectory("graft-catstream-cp").toString
+    val out = tempDir("graft-catstream-out")
+    val cp = tempDir("graft-catstream-cp")
     val q = spark.readStream.table("vdbcat.str.feed")
       .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
         b.write.mode("append").parquet(out); ()
@@ -193,7 +193,7 @@ class GvdbCatalogSpec extends SparkSpec with Matchers {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS vdbcat.strw")
     spark.sql("""CREATE TABLE vdbcat.strw.sink
                  (id string, metadata string, embedding array<float>) USING gvdb""")
-    val cp = Files.createTempDirectory("graft-catstreamw-cp").toString
+    val cp = tempDir("graft-catstreamw-cp")
     val src = MemoryStream[(String, String, Seq[Float])]
     def start() = src.toDF().toDF("id", "metadata", "embedding")
       .writeStream.option("checkpointLocation", cp).toTable("vdbcat.strw.sink")
@@ -280,7 +280,7 @@ class GvdbCatalogSpec extends SparkSpec with Matchers {
   test("a namespace holding only external tables is a namespace, not a table") {
     init()
     import spark.implicits._
-    val external = Files.createTempDirectory("graft-catalog-extns").toString + "/tbl"
+    val external = tempDir("graft-catalog-extns") + "/tbl"
     (0 until 3).map(i => (i.toString, "{}", Seq(i.toFloat)))
       .toDF("id", "metadata", "embedding")
       .write.format("gvdb").option("dim", "1").mode("overwrite").save(external)
@@ -302,7 +302,8 @@ class GvdbCatalogSpec extends SparkSpec with Matchers {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS vdbcat.phantom")
     // LOCATION under a plain FILE: the root create fails before the
     // pointer is written, so the table must not exist afterwards
-    val blocker = Files.createTempFile("graft-catalog-blocker", ".dat")
+    val blocker = Files.createFile(
+      java.nio.file.Paths.get(tempDir("graft-catalog-blocker"), "blocker.dat"))
     an[Exception] should be thrownBy
       spark.sql(s"CREATE TABLE vdbcat.phantom.bad USING gvdb LOCATION '$blocker/sub/tbl'")
     spark.catalog.tableExists("vdbcat.phantom.bad") shouldBe false
@@ -654,7 +655,7 @@ class GvdbCatalogSpec extends SparkSpec with Matchers {
     // a catalog over the rename-failing filesystem: the table directory
     // (its name ends in a failing suffix) cannot move, its sidecars can
     val wh = SwapRenameFailingFs.on(spark,
-      Files.createTempDirectory("graft-catalog-renamefail").toString)
+      tempDir("graft-catalog-renamefail"))
     spark.conf.set("spark.sql.catalog.failcat", "graft.sources.GvdbCatalog")
     spark.conf.set("spark.sql.catalog.failcat.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS failcat.r")

@@ -29,7 +29,7 @@ class GvdbCompactionSpec extends SparkSpec with Matchers {
   }
 
   test("tail-only rewrite preserves the MoR view and tombstone arithmetic") {
-    val root = Files.createTempDirectory("graft-compact-t").toString + "/t"
+    val root = tempDir("graft-compact-t") + "/t"
     val table = new VectorTable(spark, root, 1).create()
     // one LARGE file (coalesced) + 10 small ones
     table.insert(batch(0, 400).coalesce(1))
@@ -54,7 +54,7 @@ class GvdbCompactionSpec extends SparkSpec with Matchers {
   }
 
   test("snapshots expire selectively; post-compaction snapshots survive") {
-    val root = Files.createTempDirectory("graft-compact-s").toString + "/t"
+    val root = tempDir("graft-compact-s") + "/t"
     val table = new VectorTable(spark, root, 1).create()
     (0 until 6).foreach(b => table.insert(batch(b * 20, b * 20 + 20).coalesce(1)))
     val vPre = table.snapshot() // references the small files → must expire
@@ -67,7 +67,7 @@ class GvdbCompactionSpec extends SparkSpec with Matchers {
   }
 
   test("a persisted HNSW tier serves identical results across compaction") {
-    val wh = Files.createTempDirectory("graft-compact-i").toString
+    val wh = tempDir("graft-compact-i")
     val db = new VectorDB(spark, "items", wh, "hashing", Map("dim" -> "8"),
       dim = 8, newTable = true)
     import spark.implicits._

@@ -14,7 +14,7 @@ import graft.table.VectorTable
 class GvdbExtractsSpec extends SparkSpec with Matchers {
 
   private def freshRoot(tag: String): String =
-    Files.createTempDirectory(s"graft-xspec-$tag").toString + "/tbl"
+    tempDir(s"graft-xspec-$tag") + "/tbl"
 
   private val langs = Seq("en", "fr", "de", "es", "it")
 

@@ -18,7 +18,7 @@ import graft.table.VectorTable
 class GvdbSourceSpec extends SparkSpec with Matchers {
 
   private def freshRoot(tag: String): String =
-    Files.createTempDirectory(s"graft-gvdbspec-$tag").toString + "/tbl"
+    tempDir(s"graft-gvdbspec-$tag") + "/tbl"
 
   private def rows(ids: Range): DataFrame = {
     import spark.implicits._
@@ -122,7 +122,7 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
     // stage an epoch's rows the way a task writer would (JSON lines),
     // then drive commit() directly to pin the ledger semantics
     def stage(tag: String, ids: Range): GvdbStagedFile = {
-      val f = java.nio.file.Files.createTempFile(s"gvdb-stage-$tag", ".json")
+      val f = java.nio.file.Paths.get(tempDir(s"gvdb-stage-$tag"), "rows.json")
       val body = ids.map(i =>
         s"""{"id":"$i","metadata":"{}","embedding":[$i.0,${i * 2}.0]}""").mkString("\n")
       java.nio.file.Files.write(f, body.getBytes("UTF-8"))
@@ -155,7 +155,7 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val root = freshRoot("stream")
-    val cp = Files.createTempDirectory("graft-gvdbspec-cp").toString
+    val cp = tempDir("graft-gvdbspec-cp")
     val src = MemoryStream[(String, String, Seq[Float])]
     val q = src.toDF().toDF("id", "metadata", "embedding")
       .writeStream.format("gvdb")
@@ -216,7 +216,7 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val root = freshRoot("complete")
-    val cp = Files.createTempDirectory("graft-gvdbspec-cpc").toString
+    val cp = tempDir("graft-gvdbspec-cpc")
     val src = MemoryStream[(String, Int)]
     // a running aggregate: Complete mode re-emits the FULL result each
     // epoch, and the sink's truncate() path must replace the table with
@@ -249,7 +249,7 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val root = freshRoot("upsert")
-    val cp = Files.createTempDirectory("graft-gvdbspec-cpu").toString
+    val cp = tempDir("graft-gvdbspec-cpu")
     rows(0 until 10).write.format("gvdb").option("dim", "2")
       .mode(SaveMode.Overwrite).save(root)
     // WITHOUT the option, Update mode stays rejected (first-wins
@@ -297,7 +297,7 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
     spark.read.format("gvdb").load(root).count() shouldBe 9L
     val schema = rows(0 until 1).schema
     def stage(tag: String, ids: Range): GvdbStagedFile = {
-      val f = java.nio.file.Files.createTempFile(s"gvdb-upstage-$tag", ".json")
+      val f = java.nio.file.Paths.get(tempDir(s"gvdb-upstage-$tag"), "rows.json")
       val body = ids.map(i =>
         s"""{"id":"$i","metadata":"{\\"e\\":\\"$tag\\"}","embedding":[$i.0,0.0]}""")
         .mkString("\n")
@@ -374,8 +374,8 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
 
   test("readStream.format('gvdb'): insert feed, incremental offsets across restarts") {
     val root = freshRoot("src")
-    val cp = Files.createTempDirectory("graft-gvdbspec-srccp").toString
-    val out = Files.createTempDirectory("graft-gvdbspec-srcout").toString
+    val cp = tempDir("graft-gvdbspec-srccp")
+    val out = tempDir("graft-gvdbspec-srcout")
     rows(0 until 10).write.format("gvdb").option("dim", "2")
       .mode(SaveMode.Overwrite).save(root)
     def drain(tag: String): Unit = {
@@ -401,8 +401,8 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
 
   test("readChangeFeed stream: per-version adds AND deletes, resumable at version offsets") {
     val root = freshRoot("cdcstream")
-    val cp = Files.createTempDirectory("graft-gvdbspec-cdccp").toString
-    val out = Files.createTempDirectory("graft-gvdbspec-cdcout").toString
+    val cp = tempDir("graft-gvdbspec-cdccp")
+    val out = tempDir("graft-gvdbspec-cdcout")
     rows(0 until 10).write.format("gvdb").option("dim", "2")
       .mode(SaveMode.Overwrite).save(root)
     val tbl = new VectorTable(spark, root, 2)
@@ -437,7 +437,7 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
 
   test("streaming source rate limit: maxFilesPerTrigger bounds each micro-batch") {
     val root = freshRoot("rate")
-    val cp = Files.createTempDirectory("graft-gvdbspec-ratecp").toString
+    val cp = tempDir("graft-gvdbspec-ratecp")
     // three separate inserts → at least three part-file groups on disk
     rows(0 until 10).write.format("gvdb").option("dim", "2")
       .mode(SaveMode.Overwrite).save(root)
@@ -493,6 +493,48 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
     new VectorTable(spark, root, 4).drop()
   }
 
+  test("an emptied table keeps its dimension for INSERT and row-level writes until vacuum") {
+    import spark.implicits._
+    spark.conf.set("spark.sql.catalog.dimcat", "graft.sources.GvdbCatalog")
+    val warehouse = tempDir("graft-gvdbspec-dimcat")
+    spark.conf.set("spark.sql.catalog.dimcat.warehouse", warehouse)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS dimcat.d")
+    spark.sql("CREATE TABLE dimcat.d.t (id string, metadata string, embedding array<float>) " +
+      "USING gvdb")
+    def vecs(ids: Range, d: Int) = ids.map(i => (i.toString, "{}", Seq.fill(d)(i.toFloat)))
+      .toDF("id", "metadata", "embedding")
+    def dims() = spark.sql("SELECT id, size(embedding) FROM dimcat.d.t").collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toMap
+    vecs(0 until 4, 2).createOrReplaceTempView("dim_b2")
+    spark.sql("INSERT INTO dimcat.d.t SELECT * FROM dim_b2")
+    spark.sql("DELETE FROM dimcat.d.t WHERE id IN ('0', '1', '2', '3')")
+    dims() shouldBe empty
+    // the dead dim-2 rows still fix the dimension: a dim-4 INSERT is
+    // rejected with a message that names the vacuum
+    vecs(10 until 12, 4).createOrReplaceTempView("dim_b4")
+    val err = intercept[Exception](spark.sql("INSERT INTO dimcat.d.t SELECT * FROM dim_b4"))
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    msgs should (include("expected 2, got 4") and include("vacuum"))
+    dims() shouldBe empty
+    // so every later row-level write still works at dim 2: a MERGE, a
+    // metadata-only UPDATE and an insert-only MERGE
+    vecs(20 until 22, 2).createOrReplaceTempView("dim_m")
+    spark.sql("""MERGE INTO dimcat.d.t t USING dim_m c ON t.id = c.id
+      WHEN MATCHED THEN UPDATE SET *
+      WHEN NOT MATCHED THEN INSERT *""")
+    spark.sql("""UPDATE dimcat.d.t SET metadata = '{"u":1}' WHERE id = '20'""")
+    vecs(30 until 31, 2).createOrReplaceTempView("dim_i")
+    spark.sql("""MERGE INTO dimcat.d.t t USING dim_i c ON t.id = c.id
+      WHEN NOT MATCHED THEN INSERT *""")
+    dims() shouldBe Map("20" -> 2, "21" -> 2, "30" -> 2)
+    // once a vacuum has removed every stored row, a new dimension is free
+    spark.sql("DELETE FROM dimcat.d.t WHERE id IN ('20', '21', '30')")
+    new VectorTable(spark, s"$warehouse/d/t", 2).vacuum()
+    spark.sql("INSERT INTO dimcat.d.t SELECT * FROM dim_b4")
+    dims() shouldBe Map("10" -> 4, "11" -> 4)
+  }
+
   test("an explicit dim option that disagrees with the live rows is rejected") {
     import spark.implicits._
     val root = freshRoot("dimpin")
@@ -522,7 +564,7 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
   test("streaming-source offsets are O(1) log indices backed by a seen-files log") {
     import graft.sources.{GvdbLogOffset, GvdbSourceOffset}
     val root = freshRoot("logoff")
-    val cp = Files.createTempDirectory("graft-gvdbspec-logoffcp").toString
+    val cp = tempDir("graft-gvdbspec-logoffcp")
     rows(0 until 10).write.format("gvdb").option("dim", "2")
       .mode(SaveMode.Overwrite).save(root)
     rows(10 until 20).write.format("gvdb").mode(SaveMode.Append).save(root)
@@ -601,7 +643,7 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
     import graft.sources.{GvdbLogOffset, GvdbMicroBatchStream, GvdbSourceOffset}
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val root = freshRoot("legacyup")
-    val cp = Files.createTempDirectory("graft-gvdbspec-legacycp").toString
+    val cp = tempDir("graft-gvdbspec-legacycp")
     rows(0 until 6).write.format("gvdb").option("dim", "2")
       .mode(SaveMode.Overwrite).save(root)
     val rootPath = new org.apache.hadoop.fs.Path(root)
@@ -646,7 +688,7 @@ class GvdbSourceSpec extends SparkSpec with Matchers {
     val root = freshRoot("logfail")
     rows(0 until 4).write.format("gvdb").option("dim", "2").mode(SaveMode.Overwrite).save(root)
     val cp = SwapRenameFailingFs.on(spark,
-      Files.createTempDirectory("graft-gvdbspec-logfailcp").toString)
+      tempDir("graft-gvdbspec-logfailcp"))
     val s = new GvdbMicroBatchStream(spark, root,
       graft.core.VectorSchema.schema, Array.empty, None, cp)
     // the entry never became durable, so a retry must not offer batch 1

@@ -89,4 +89,16 @@ class HarnessSpec extends SparkSpec with Matchers {
       .filter((p: Path) => Files.readString(p).contains("createTempDirectory"))
     offenders shouldBe empty
   }
+
+  test("specs make temp directories and files only through SparkSpec.tempDir") {
+    val root = Paths.get("src/test/scala")
+    val helper = root.resolve("graft/SparkSpec.scala")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    files should contain(helper) // the scan saw the source tree
+    val call = "createTemp(Directory|File)\\s*\\(".r
+    val offenders = files.filterNot(_ == helper)
+      .filter((p: Path) => call.findFirstIn(Files.readString(p)).isDefined)
+    offenders shouldBe empty
+  }
 }

@@ -54,7 +54,7 @@ class HnswSpec extends SparkSpec with Matchers {
   test("persisted graph round-trips: probe(buildGraph) equals the true top-k") {
     import spark.implicits._
     val q = emb.where($"vec_id" < 5)
-    val path = java.nio.file.Files.createTempDirectory("graft-hnsw-spec").toString
+    val path = tempDir("graft-hnsw-spec")
     ops.Hnsw.buildGraph(emb, numSegments = 4).write.mode("overwrite").parquet(path)
     val probed = ops.Hnsw.probeGraph(spark.read.parquet(path), q, k = 10)
     val exact = Similarity.bruteTopK(q, emb, k = 10)
@@ -74,7 +74,7 @@ class HnswSpec extends SparkSpec with Matchers {
 
   test("probe distances are the exact brute-force distances, pair for pair") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-hnsw-dist").toString
+    val path = tempDir("graft-hnsw-dist")
     ops.Hnsw.buildGraph(emb, numSegments = 4).write.mode("overwrite").parquet(path)
     val g = Hnsw.readGraph(spark, path)
     g.select("seg").distinct().count() should be >= 3L
@@ -94,7 +94,7 @@ class HnswSpec extends SparkSpec with Matchers {
     Hnsw.autoSegments(8000L) shouldBe 1
     Hnsw.autoSegments(8001L) shouldBe 2
     Hnsw.autoSegments(800000L) shouldBe 100
-    val path = java.nio.file.Files.createTempDirectory("graft-hnsw-bulk").toString
+    val path = tempDir("graft-hnsw-bulk")
     ops.Hnsw.buildGraph(emb, numSegments = 4).write.mode("overwrite").parquet(path)
     val g = spark.read.parquet(path)
     // a batch far beyond serving size for this fixture: every corpus row
@@ -116,7 +116,7 @@ class HnswSpec extends SparkSpec with Matchers {
     val base = emb.where($"vec_id" % 5 =!= 0)
     val delta = emb.where($"vec_id" % 5 === 0)
     val q = emb.where($"vec_id" < 5)
-    val path = java.nio.file.Files.createTempDirectory("graft-hnsw-app").toString
+    val path = tempDir("graft-hnsw-app")
     ops.Hnsw.buildGraph(base, numSegments = 4).write.mode("overwrite").parquet(path)
     val baseRows = spark.read.parquet(path).orderBy($"seg", $"id").collect().toSeq
     ops.Hnsw.buildGraph(delta, numSegments = 2, segOffset = 4)
@@ -136,7 +136,7 @@ class HnswSpec extends SparkSpec with Matchers {
   test("compaction: small segments rebuild into fewer, survivors untouched, nodes conserved") {
     import spark.implicits._
     val base = emb.where($"vec_id" % 5 > 1)
-    val path = java.nio.file.Files.createTempDirectory("graft-hnsw-c").toString
+    val path = tempDir("graft-hnsw-c")
     ops.Hnsw.buildGraph(base, numSegments = 4).write.mode("overwrite").parquet(path)
     (0 to 1).foreach { b =>
       ops.Hnsw.buildGraph(emb.where($"vec_id" % 5 === b), numSegments = 2,
@@ -193,7 +193,7 @@ class HnswSpec extends SparkSpec with Matchers {
 
   test("merge-policy trigger bounds segment count under a long append sequence") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-hnsw-merge").toString + "/graph"
+    val path = tempDir("graft-hnsw-merge") + "/graph"
     // healthy base segment (375 rows, > maxRows — must never be rebuilt)
     Hnsw.buildGraph(emb.where($"vec_id" % 4 =!= 0)).write.mode("overwrite").parquet(path)
     val baseRows = spark.read.parquet(path).where($"seg" === 0)
@@ -234,7 +234,7 @@ class HnswSpec extends SparkSpec with Matchers {
 
   test("a failed graph-swap rename throws instead of silently dropping the graph") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-hnsw-swap").toString
+    val dir = tempDir("graft-hnsw-swap")
     (0 until 4).foreach { b =>
       Hnsw.buildGraph(emb.where($"vec_id" % 4 === b), numSegments = 1, segOffset = b)
         .write.mode("append").parquet(s"$dir/graph")

@@ -52,7 +52,7 @@ class IdBloomsSpec extends SparkSpec with Matchers {
   }
 
   test("lazy bootstrap blooms the non-victim candidates; second lookup is pruned and sound") {
-    val root = Files.createTempDirectory("graft-blooms").toString + "/t"
+    val root = tempDir("graft-blooms") + "/t"
     val table = new VectorTable(spark, root, 1).create()
     (0 until 4).foreach(s => table.insert(batch(s, 200)))
     val hfs = fs(root)
@@ -96,7 +96,7 @@ class IdBloomsSpec extends SparkSpec with Matchers {
   }
 
   test("files written between lookups converge lazily; whole-table rewrite invalidates") {
-    val root = Files.createTempDirectory("graft-blooms2").toString + "/t"
+    val root = tempDir("graft-blooms2") + "/t"
     val table = new VectorTable(spark, root, 1).create()
     (0 until 3).foreach(s => table.insert(batch(s, 150)))
     GvdbRowLevel.victimLookup(spark, root, touchedOf(1, 150, 10)) // bootstrap
@@ -129,8 +129,42 @@ class IdBloomsSpec extends SparkSpec with Matchers {
     v1.map(f => new Path(f).getName).toSet shouldBe groundTruthVictims(root, t1)
   }
 
+  /** Jobs run by `body` whose call site passes through IdBlooms (a
+    * manifest probe, build or GC). */
+  private def bloomJobsOf(body: => Unit): Int =
+    jobsOf(body, _.stageInfos.exists(_.details.contains("sources.IdBlooms$")))
+
+  test("a manifest left with no valid entry is dropped, and the next lookup probes nothing") {
+    import spark.implicits._
+    val root = tempDir("graft-blooms-drop") + "/t"
+    val table = new VectorTable(spark, root, 1).create()
+    (0 until 2).foreach(s => table.insert(batch(s, 100)))
+    val hfs = fs(root)
+    def upsert(ids: Seq[String]): Unit = graft.sources.GvdbUpsert(spark, root,
+      ids.map(id => (id, "{}", Seq(-1f))).toDF("id", "metadata", "embedding"), Some(1))
+    /** One id from every live file: every file becomes a victim. */
+    def oneIdPerFile() = spark.read.parquet(root)
+      .groupBy(input_file_name()).agg(min($"id")).collect().map(_.getString(1)).toSeq
+    // a commit touching batch 0 blooms every file it does not replace
+    upsert(batch(0, 100).select($"id").limit(5).collect().map(_.getString(0)).toSeq)
+    IdBlooms.enabled(hfs, root) shouldBe true
+    IdBlooms.validNames(spark, hfs, root) should not be empty
+    // a commit replacing every bloomed file leaves the manifest nothing
+    // valid and blooms nothing new (every candidate is a victim): it
+    // is dropped; its lookup still probed it
+    bloomJobsOf(upsert(oneIdPerFile())) should be > 0
+    IdBlooms.enabled(hfs, root) shouldBe false
+    // the next lookup runs no manifest job and names the true victims
+    val touched = oneIdPerFile().toDF("id").localCheckpoint(true)
+    val truth = groundTruthVictims(root, touched)
+    var victims = Array.empty[String]
+    bloomJobsOf { victims = GvdbRowLevel.victimLookup(spark, root, touched)._1 } shouldBe 0
+    victims.map(f => new Path(f).getName).toSet shouldBe truth
+    IdBlooms.enabled(hfs, root) shouldBe false
+  }
+
   test("a failed bloom-manifest GC rename throws") {
-    val root = Files.createTempDirectory("graft-blooms-gc").toString + "/t"
+    val root = tempDir("graft-blooms-gc") + "/t"
     val table = new VectorTable(spark, root, 1).create()
     (0 until 2).foreach(s => table.insert(batch(s, 50)))
     GvdbRowLevel.victimLookup(spark, root, touchedOf(1, 50, 5)) // builds the manifest

@@ -22,7 +22,7 @@ class IncrementalAnalyticsSpec extends SparkSpec with Matchers {
   // EXACTLY on the 2-day boundary (inclusive — converts stage 2).
   private lazy val funnelDir: String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-funnel").toString
+    val dir = tempDir("graft-funnel")
     val rows = Seq(
       (1L, ts(0.0), 1L, "signup"), (2L, ts(1.0), 1L, "view"),
       (3L, ts(1.5), 1L, "click"), (4L, ts(2.0), 1L, "purchase"),
@@ -75,7 +75,7 @@ class IncrementalAnalyticsSpec extends SparkSpec with Matchers {
 
   test("pipeline_er_incremental: batch bridges two base components == full rerun") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-er").toString
+    val dir = tempDir("graft-er")
     val P = "PPPPPPPPPPPP" // 12-char prefix so substr(13,3) is the block
     // base components {1,2} and {3,4} (lev 1 inside, lev 2 across);
     // batch id 10 is lev-1 from BOTH — the delta must merge them.

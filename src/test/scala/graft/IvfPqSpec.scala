@@ -16,7 +16,7 @@ class IvfPqSpec extends SparkSpec with Matchers {
 
   private def buildPersisted() = {
     val (ix, c0) = ops.IvfPq.build(emb, dim = 64, nCells = 8, m = 8, k = 16)
-    val path = Files.createTempDirectory("graft-ivfpq-spec").toString
+    val path = tempDir("graft-ivfpq-spec")
     ops.IvfPq.persistCodes(c0, path)
     (ix, c0, ops.IvfPq.loadCodes(spark, path))
   }
@@ -48,7 +48,7 @@ class IvfPqSpec extends SparkSpec with Matchers {
     val base = emb.where(col("vec_id") % 5 =!= 0)
     val delta = emb.where(col("vec_id") % 5 === 0)
     val (ix, c0) = ops.IvfPq.build(base, dim = 64, nCells = 8, m = 8, k = 16)
-    val path = Files.createTempDirectory("graft-ivfpq-app").toString
+    val path = tempDir("graft-ivfpq-app")
     ops.IvfPq.persistCodes(c0, path)
     val dirsBefore = new java.io.File(path).listFiles.filter(_.isDirectory).map(_.getName).toSet
     val filesBefore = new java.io.File(path).listFiles.filter(_.isDirectory)
@@ -67,7 +67,7 @@ class IvfPqSpec extends SparkSpec with Matchers {
 
   test("full index artifact round-trips: loadIndex search == in-memory search") {
     val (ix, c0) = ops.IvfPq.build(emb, dim = 64, nCells = 8, m = 8, k = 16)
-    val root = Files.createTempDirectory("graft-ivfpq-art").toString
+    val root = tempDir("graft-ivfpq-art")
     ops.IvfPq.persistIndex(ix, c0, root)
     val (ix2, codes2) = ops.IvfPq.loadIndex(spark, root)
     ix2.nCells shouldBe ix.nCells

@@ -82,7 +82,7 @@ class LexicalSearchSpec extends SparkSpec {
   test("bm25 keeps the arrays_overlap prune ahead of the explode on a file source") {
     // a LocalRelation input would be constant-folded at optimization time,
     // so prove the plan shape against a real parquet scan
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25").toString
+    val dir = tempDir("graft-bm25")
     docs.write.mode("overwrite").parquet(s"$dir/docs")
     val fromFile = spark.read.parquet(s"$dir/docs")
     val plan = LexicalSearch.bm25(fromFile, "doc_id", "text", Seq("rare"))

@@ -516,7 +516,7 @@ class PlanShapeSpec extends SparkSpec with Matchers {
   test("gvdb reads are a V2 BatchScan: handled pushdown + pruning visible in the plan") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-planshape-gvdb").toString + "/t"
+    val root = tempDir("graft-planshape-gvdb") + "/t"
     (0 until 50).map(i => (i.toString, "{}", Seq(i.toFloat)))
       .toDF("id", "metadata", "embedding")
       .write.format("gvdb").option("dim", "1").mode("overwrite").save(root)
@@ -536,7 +536,7 @@ class PlanShapeSpec extends SparkSpec with Matchers {
   test("gvdb COUNT(*) is answered from footers + tombstones, never a data scan") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-planshape-cnt").toString + "/t"
+    val root = tempDir("graft-planshape-cnt") + "/t"
     (0 until 60).map(i => (i.toString, "{}", Seq(i.toFloat)))
       .toDF("id", "metadata", "embedding")
       .write.format("gvdb").option("dim", "1").mode("overwrite").save(root)

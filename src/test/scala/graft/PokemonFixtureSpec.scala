@@ -103,7 +103,7 @@ class PokemonFixtureSpec extends SparkSpec with Matchers {
   }
 
   test("full lifecycle over the pokemon fixture: insert → dedup → filtered kNN") {
-    val wh = Files.createTempDirectory("graft-pokemon").toString
+    val wh = tempDir("graft-pokemon")
     val db = new VectorDB(spark, "pokemon", wh, "hashing", Map("dim" -> "32"),
       dim = 32, newTable = true)
     db.insert(docs.as[String], embedField = Some("species"))

@@ -17,7 +17,7 @@ import graft.table.VectorTable
   * the commit's key steps on the cluster. */
 class RowLevelFastPathSpec extends SparkSpec with Matchers {
 
-  private lazy val warehouse = Files.createTempDirectory("graft-fastpath").toString
+  private lazy val warehouse = tempDir("graft-fastpath")
 
   private def init(): Unit = {
     spark.conf.set("spark.sql.catalog.fpc", "graft.sources.GvdbCatalog")
@@ -162,32 +162,17 @@ class RowLevelFastPathSpec extends SparkSpec with Matchers {
 
   // Spark jobs per touched-first commit on the fixture below: the key
   // steps (gate, range and Bloom probes, victim scan, ride-along
-  // anti-join) run from one driver-side key collect, and the MERGE
-  // target prune, the victim scan and the ride-along each broadcast a
-  // local relation of those keys (one small job each). Measured 17 /
-  // 12 / 14 that way and 30 / 21 / 23 when each step ran its own Spark
-  // action over the pinned frame; the bounds leave two jobs of slack
-  // for adaptive-execution stage splits.
-  private val MergeJobs = 19
-  private val UpdateJobs = 14
-  private val UpsertJobs = 16
-
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.ListenerBusDrain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
+  // filter) run from one driver-side key collect, and the MERGE target
+  // prune, the victim scan and the ride-along filter by a broadcast
+  // variable of those keys, which ships with no job. Measured 12 / 9 /
+  // 11 that way; 17 / 12 / 14 when each of those three joined a
+  // broadcast local relation (one job each) and the commit read the
+  // embedding dimension with a head job; 30 / 21 / 23 when each key
+  // step ran its own Spark action over the pinned frame. The bounds
+  // leave two jobs of slack for adaptive-execution stage splits.
+  private val MergeJobs = 14
+  private val UpdateJobs = 11
+  private val UpsertJobs = 13
 
   private def rows(ids: Seq[Int], v: Int => Float) = {
     import spark.implicits._
@@ -207,14 +192,26 @@ class RowLevelFastPathSpec extends SparkSpec with Matchers {
     new VectorTable(spark, root, 1).delete(col("id") === "r003") // the fold runs too
     rows((5 until 9) ++ (60 until 62), i => (i + 100).toFloat)
       .createOrReplaceTempView("fpj_chg")
-    val merge = jobsOf(spark.sql("""MERGE INTO fpc.j1.t t USING fpj_chg c ON t.id = c.id
+    // each commit also writes at most one part file per file it
+    // retires (one when it retires none)
+    def parts() = new java.io.File(root).list().filter(_.startsWith("part-")).toSet
+    def commit(op: String)(body: => Unit): Int = {
+      val before = parts()
+      val jobs = jobsOf(body)
+      val after = parts()
+      withClue(s"$op files: ") {
+        (after -- before).size should be <= math.max(1, (before -- after).size)
+      }
+      jobs
+    }
+    val merge = commit("MERGE")(spark.sql("""MERGE INTO fpc.j1.t t USING fpj_chg c ON t.id = c.id
       WHEN MATCHED THEN UPDATE SET embedding = c.embedding
       WHEN NOT MATCHED THEN INSERT (id, metadata, embedding)
         VALUES (c.id, c.metadata, c.embedding)"""))
-    val update = jobsOf(spark.sql(
+    val update = commit("UPDATE")(spark.sql(
       "UPDATE fpc.j1.t SET embedding = array(CAST(embedding[0] + 1000 AS float)) " +
         "WHERE id IN ('r025', 'r026')"))
-    val upsert = jobsOf(graft.sources.GvdbUpsert(spark, root,
+    val upsert = commit("upsert")(graft.sources.GvdbUpsert(spark, root,
       rows((45 until 48) ++ (70 until 72), i => (i + 2000).toFloat), Some(1)))
     val want = ((0 until 62) ++ (70 until 72)).filter(_ != 3).map { i =>
       f"r$i%03d" -> (i match {
@@ -230,6 +227,35 @@ class RowLevelFastPathSpec extends SparkSpec with Matchers {
     update should be <= UpdateJobs
     upsert should be <= UpsertJobs
     spark.sql("DROP TABLE fpc.j1.t")
+  }
+
+  test("a collected-key MERGE loop keeps the table's file count down") {
+    // four insert batches, then 16 CDC-sized MERGEs (two updates and
+    // one insert each): every commit writes one file per victim, so the
+    // table keeps its four files (writing one file per input partition
+    // of the replacement rows ended this loop with 36)
+    init()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS fpc.loop")
+    spark.sql("""CREATE TABLE fpc.loop.t
+                 (id string, metadata string, embedding array<float>) USING gvdb""")
+    Seq(0 until 25, 25 until 50, 50 until 75, 75 until 100).foreach { r =>
+      rows(r, _.toFloat).createOrReplaceTempView("fpl_b")
+      spark.sql("INSERT INTO fpc.loop.t SELECT * FROM fpl_b")
+    }
+    val root = s"$warehouse/loop/t"
+    def liveFiles = graft.sources.GvdbFooters.idStats(spark, root).size
+    liveFiles shouldBe 4
+    for (i <- 0 until 16) {
+      rows(Seq((i * 7) % 100, (i * 7 + 31) % 100, 200 + i), x => (x + 1000 * (i + 1)).toFloat)
+        .createOrReplaceTempView("fpl_chg")
+      spark.sql("""MERGE INTO fpc.loop.t t USING fpl_chg c ON t.id = c.id
+        WHEN MATCHED THEN UPDATE SET embedding = c.embedding
+        WHEN NOT MATCHED THEN INSERT (id, metadata, embedding)
+          VALUES (c.id, c.metadata, c.embedding)""")
+    }
+    spark.sql("SELECT count(*) FROM fpc.loop.t").head.getLong(0) shouldBe 116L
+    liveFiles shouldBe 4
+    spark.sql("DROP TABLE fpc.loop.t")
   }
 
   test("fast-path MERGE cardinality violation throws from the collected keys") {
@@ -341,7 +367,7 @@ class RowLevelFastPathSpec extends SparkSpec with Matchers {
     val hi = "\uD83D\uDE00"
     (lo.compareTo(hi) > 0) shouldBe true
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-fastpath-utf8").toString + "/t"
+    val root = tempDir("graft-fastpath-utf8") + "/t"
     val table = new VectorTable(spark, root, 1).create()
     table.insert((0 until 40).map(i => (s"${if (i % 2 == 0) lo else hi}$i", "{}", Seq(i.toFloat)))
       .toDF("id", "metadata", "embedding"))

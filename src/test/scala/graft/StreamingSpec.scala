@@ -93,7 +93,7 @@ class StreamingSpec extends SparkSpec with Matchers {
 
   test("checkpointed dedup stream survives restart: no duplicates, no loss") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("ckpt-restart").toString
+    val base = tempDir("ckpt-restart")
     val (in, out, cp) = (s"$base/in", s"$base/out", s"$base/cp")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
@@ -132,7 +132,7 @@ class StreamingSpec extends SparkSpec with Matchers {
     // users complete across the boundary. Runs on the RocksDB state
     // store (bundled rocksdbjni) — the production store for large
     // state; the registry runners use the default HDFS-backed one.
-    val base = java.nio.file.Files.createTempDirectory("funnel-restart").toString
+    val base = tempDir("funnel-restart")
     val (in, out, cp) = (s"$base/in", s"$base/out", s"$base/cp")
     val stages = Seq("signup", "view", "click")
     def writeEvents(tag: String, rows: Seq[(Long, Long, Long, String)]): Unit =
@@ -195,7 +195,7 @@ class StreamingSpec extends SparkSpec with Matchers {
 
   test("funnel rejects cross-batch out-of-order delivery loudly, not silently") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("funnel-ooo").toString
+    val base = tempDir("funnel-ooo")
     val (in, cp) = (s"$base/in", s"$base/cp")
     def writeEvents(rows: Seq[(Long, Long, Long, String)]): Unit =
       rows.map { case (id, sec, user, tpe) =>
@@ -277,7 +277,7 @@ class StreamingSpec extends SparkSpec with Matchers {
     // tombstone merge must still equal the single-batch (= batch MERGE
     // oracle) census.
     val src = "/root/testdata/sf0.01"
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-multi").toString
+    val tmp = tempDir("graft-cdc-multi")
     spark.read.parquet(s"$src/documents.parquet")
       .repartition(4)
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -325,7 +325,7 @@ class StreamingSpec extends SparkSpec with Matchers {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val root = java.nio.file.Files.createTempDirectory("graft-ledger").toString
+    val root = tempDir("graft-ledger")
     graft.ops.Hnsw.buildGraph(emb.where(col("vec_id") % 5 =!= 0), numSegments = 2)
       .write.mode("overwrite").parquet(s"$root/graph")
     val batch = emb.where(col("vec_id") % 5 === 0)

@@ -45,7 +45,7 @@ class VectorDBSpec extends SparkSpec with Matchers {
   }
 
   private def newDb(name: String) = {
-    val wh = Files.createTempDirectory("graft-test").toString
+    val wh = tempDir("graft-test")
     new VectorDB(spark, name, wh, "hashing", Map("dim" -> "16"), dim = 16, newTable = true)
   }
 

@@ -17,7 +17,7 @@ import graft.table.VectorTable
 class WriterLockSpec extends SparkSpec with Matchers {
 
   private def freshRoot(tag: String): String =
-    Files.createTempDirectory(s"graft-lockspec-$tag").toString + "/tbl"
+    tempDir(s"graft-lockspec-$tag") + "/tbl"
 
   private def rows(pfx: String, ids: Range) = {
     import spark.implicits._
@@ -93,7 +93,7 @@ class WriterLockSpec extends SparkSpec with Matchers {
     // (A's rewrite of a row from before B's update). Reading inside the
     // turn, A sees B's rows.
     val warehouse = LockHookFs.on(spark,
-      Files.createTempDirectory("graft-lockspec-turn").toString)
+      tempDir("graft-lockspec-turn"))
     spark.conf.set("spark.sql.catalog.lkc", "graft.sources.GvdbCatalog")
     spark.conf.set("spark.sql.catalog.lkc.warehouse", warehouse)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS lkc.w")

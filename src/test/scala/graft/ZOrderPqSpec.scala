@@ -21,7 +21,7 @@ class ZOrderPqSpec extends SparkSpec with Matchers {
       (rand(7) * 1024).cast("int").as("x"),
       (rand(13) * 1024).cast("int").as("y"),
       col("id").as("payload"))
-    val base = java.nio.file.Files.createTempDirectory("zspec").toString
+    val base = tempDir("zspec")
     // natural (insertion-order) layout: same file count
     df.repartition(16).write.parquet(s"$base/plain")
     ZOrder.writeZOrdered(df, "x", "y", bits = 10, s"$base/z", numFiles = 16)
@@ -68,7 +68,7 @@ class ZOrderPqSpec extends SparkSpec with Matchers {
 
   test("compaction collapses a fragmented directory without a shuffle, content preserved") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("compact-spec").toString
+    val base = tempDir("compact-spec")
     val df = spark.range(10000).select(col("id"), (col("id") * 17 % 997).as("v"))
     df.repartition(50).write.parquet(s"$base/small")
     new java.io.File(s"$base/small").listFiles.count(_.getName.endsWith(".parquet")) shouldBe 50
