@@ -1177,7 +1177,8 @@ object ScaleStress {
     probe(graph, "before/warm")
     probe(graph, "before")
     val t2 = System.nanoTime()
-    val merged = ops.Hnsw.compactSegments(graph, maxRows = 4000,
+    val small = ops.Hnsw.segmentSizes(spark, path).collect { case (seg, n) if n <= 4000 => seg }
+    val merged = ops.Hnsw.compactSegments(graph, small.toSet,
       numSegments = ops.Hnsw.autoSegments(smallRows), segOffset = 1000000)
     val cmpPath = s"$target/__hnsw_compacted"
     merged.write.mode("overwrite").parquet(cmpPath)

@@ -263,7 +263,7 @@ object Hnsw {
     }
   }
 
-  private type GraphRow = (Int, Long, Array[Array[Long]], Array[Float])
+  private[graft] type GraphRow = (Int, Long, Array[Array[Long]], Array[Float])
 
   private val byDistance: Ordering[(Double, Long)] =
     Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
@@ -358,7 +358,12 @@ object Hnsw {
     * an append NEVER rewrites built graphs — the Lucene segment
     * lifecycle. `m` is part of the on-disk contract (levels derive
     * from it); probe with the same value. `numSegments = 0` (the
-    * default) auto-sizes to ~[[RowsPerSegment]] rows per graph. */
+    * default) auto-sizes to ~[[RowsPerSegment]] rows per graph.
+    *
+    * Partition `i` holds exactly segment `i` (the segment number is the
+    * shuffle partition id, not a hash of it), so a write of these rows
+    * lands one segment per part file and [[segmentSizes]] reads the
+    * segment sizes from the files' footers. */
   def buildGraph(
       vectors: DataFrame, numSegments: Int = 0, segOffset: Int = 0,
       m: Int = 16, efConstruction: Int = 128,
@@ -368,20 +373,28 @@ object Hnsw {
     val nSegs = if (numSegments > 0) numSegments else autoSegments(vectors.count())
     vectors.select(pmod(hash(col(idCol)), lit(nSegs)).cast("int").as("_1"),
         col(idCol).as("_2"), col(embCol).as("_3"))
-      .repartition(nSegs, col("_1"))
+      .repartitionById(nSegs, col("_1"))
       .as[(Int, Long, Array[Float])]
       .mapPartitions { it =>
-        // a partition may hold several segments (hash collisions of the
-        // seg key) — build one independent graph per segment
-        it.toArray.groupBy(_._1).iterator.flatMap { case (seg, rows) =>
-          val sorted = rows.sortBy(_._2)
-          val idx = new SegmentIndex(sorted.map(_._2), sorted.map(_._3), m, efConstruction)
-          var i = 0
-          while (i < sorted.length) { idx.insert(i); i += 1 }
-          sorted.indices.iterator.map(i =>
-            (seg + segOffset, sorted(i)._2, idx.adjacencyIds(i), sorted(i)._3))
-        }
+        val rows = it.toArray
+        if (rows.isEmpty) Iterator.empty
+        else buildSegment(rows.head._1 + segOffset, rows.map(r => (r._2, r._3)),
+          m, efConstruction).iterator
       }.toDF("seg", "id", "adj", "emb")
+  }
+
+  /** One segment's graph rows (seg, id, adj, emb) over `rows`
+    * (vec_id, vector): inserted in ascending id order into one
+    * [[SegmentIndex]] — the graph [[buildGraph]] gives the same rows as
+    * a segment. The indexed insert builds its delta segment with it on
+    * the driver. */
+  private[graft] def buildSegment(seg: Int, rows: Array[(Long, Array[Float])],
+      m: Int, efConstruction: Int): Array[GraphRow] = {
+    val sorted = rows.sortBy(_._1)
+    val idx = new SegmentIndex(sorted.map(_._1), sorted.map(_._2), m, efConstruction)
+    var i = 0
+    while (i < sorted.length) { idx.insert(i); i += 1 }
+    Array.tabulate(sorted.length)(i => (seg, sorted(i)._1, idx.adjacencyIds(i), sorted(i)._2))
   }
 
   /** Probe a persisted graph: [[probeSegments]]'s map-only pass plus
@@ -525,62 +538,129 @@ object Hnsw {
   }
 
   /** Lucene-style segment merge policy: HNSW graphs don't merge
-    * structurally, so compaction REBUILDS the vectors of every segment
-    * at or below `maxRows` into `numSegments` fresh graphs (named from
-    * `segOffset`, disjoint from survivors), passing larger segments
+    * structurally, so compaction REBUILDS the vectors of the segments
+    * in `small` into `numSegments` fresh graphs (named from
+    * `segOffset`, disjoint from survivors), passing every other segment
     * through untouched — the amortized maintenance that keeps probe
     * cost bounded while streaming appends accumulate small
     * batchId-keyed segments. Rebuild cost is proportional to the SMALL
-    * segments only; a caller runs this when the small-segment count
-    * crosses its merge threshold, exactly like a Lucene merge policy. */
+    * segments only; a caller picks them from [[segmentSizes]] when
+    * their count crosses its merge threshold, exactly like a Lucene
+    * merge policy. */
   def compactSegments(
-      graph: DataFrame, maxRows: Long, numSegments: Int, segOffset: Int,
+      graph: DataFrame, small: Set[Int], numSegments: Int, segOffset: Int,
       m: Int = 16, efConstruction: Int = 128): DataFrame = {
-    val sizes = graph.groupBy(col("seg")).agg(count(lit(1)).as("n"))
-    val small = broadcast(sizes.where(col("n") <= maxRows).select(col("seg")))
-    val keep = graph.join(small, Seq("seg"), "left_anti")
+    val isSmall = col("seg").isin(small.toSeq: _*)
     val rebuilt = buildGraph(
-      graph.join(small, Seq("seg"))
-        .select(col("id").as("vec_id"), col("emb").as("embedding")),
+      graph.where(isSmall).select(col("id").as("vec_id"), col("emb").as("embedding")),
       numSegments, segOffset, m, efConstruction)
-    keep.unionByName(rebuilt)
+    graph.where(!isSmall).unionByName(rebuilt)
+  }
+
+  /** Rows per segment of the persisted graph at `graphPath`, read on the
+    * driver from its part files' parquet footers — no Spark job. A file
+    * whose `seg` statistics have min = max holds one segment (every
+    * [[buildGraph]] file does) and answers from its row count; any
+    * other file (a compaction's pass-through rows, a graph written
+    * before one segment per file) has its `seg` column read. Each file
+    * is read at most once per JVM: memoized per (path, length, mtime),
+    * as graph files are immutable once written. Every merge-policy
+    * trigger sizes segments through this. */
+  def segmentSizes(spark: SparkSession, graphPath: String): Map[Int, Long] = {
+    val p = new org.apache.hadoop.fs.Path(graphPath)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) Map.empty
+    else fs.listStatus(p).iterator.filter(_.getPath.getName.startsWith("part-"))
+      .flatMap(st => segmentSizesOf(st, conf))
+      .foldLeft(Map.empty[Int, Long]) { case (acc, (seg, n)) =>
+        acc.updated(seg, acc.getOrElse(seg, 0L) + n)
+      }
+  }
+
+  private val segmentSizesMemo =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Seq[(Int, Long)]]
+
+  private def segmentSizesOf(st: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration): Seq[(Int, Long)] =
+    segmentSizesMemo.computeIfAbsent(
+      (st.getPath.toString, st.getLen, st.getModificationTime),
+      _ => {
+        import scala.jdk.CollectionConverters._
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try {
+          val blocks = r.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
+          val ranges = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == "seg")
+            .map(_.getStatistics).collect {
+              case s: org.apache.parquet.column.statistics.IntStatistics if s.hasNonNullValue =>
+                (s.getMin, s.getMax)
+            })
+          if (blocks.isEmpty) Nil
+          else ranges.distinct match {
+            case Seq(Some((lo, hi))) if lo == hi => Seq(lo -> blocks.map(_.getRowCount).sum)
+            case _ => readSegColumn(r).groupBy(identity).view.mapValues(_.size.toLong).toSeq
+          }
+        } finally r.close()
+      })
+
+  /** Every `seg` value of one open graph file, read with parquet-mr. */
+  private def readSegColumn(r: org.apache.parquet.hadoop.ParquetFileReader): Seq[Int] = {
+    val fileSchema = r.getFooter.getFileMetaData.getSchema
+    val proj = new org.apache.parquet.schema.MessageType(
+      fileSchema.getName, fileSchema.getType(fileSchema.getFieldIndex("seg")))
+    r.setRequestedSchema(proj)
+    val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(proj, fileSchema)
+    Iterator.continually(r.readNextRowGroup()).takeWhile(_ != null).flatMap { pages =>
+      val rows = io.getRecordReader(pages,
+        new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(proj))
+      Iterator.fill(pages.getRowCount.toInt)(rows.read().getInteger(0, 0))
+    }.toSeq
+  }
+
+  /** Rewrites the graph at `graphPath` with the segments `small` rebuilt
+    * by [[compactSegments]]. The swap is delete-then-rename — the
+    * single-writer contract of the table layer (SURVEY.md §7.4);
+    * readers mid-swap belong to the same job. A failed delete or rename
+    * throws: a kept old directory would swallow the rename (the new
+    * graph nested inside the old one), and a failed rename leaves the
+    * graph deleted — either way the caller must not advance its
+    * sidecar over a graph that is not there. */
+  private[graft] def compactGraph(spark: SparkSession, graphPath: String, small: Set[Int],
+      numSegments: Int, segOffset: Int, m: Int, efConstruction: Int): Unit = {
+    val p = new org.apache.hadoop.fs.Path(graphPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(graphPath + "__compacting")
+    compactSegments(readGraph(spark, graphPath), small, numSegments, segOffset, m, efConstruction)
+      .write.mode("overwrite").parquet(tmp.toString)
+    if (!fs.delete(p, true))
+      throw new java.io.IOException(
+        s"HNSW compaction: delete $p failed; the compacted graph is in $tmp")
+    if (!fs.rename(tmp, p))
+      throw new java.io.IOException(s"HNSW compaction: rename $tmp -> $p failed")
   }
 
   /** The Lucene merge-policy TRIGGER for a parquet-persisted graph:
     * when at least `mergeAt` segments have accumulated at or below
     * `maxRows` (the streaming-append regime — every micro-batch lands
-    * a small segment), rebuild exactly those via [[compactSegments]]
-    * and swap the graph directory; otherwise do nothing but one tiny
-    * per-segment count. Rebuilt segments take NEGATIVE ids growing
-    * downward from min(existing, 0) — append paths hand out
-    * non-negative (batchId-keyed) ids, so repeated compactions and
-    * future appends can never collide (a seg-id collision would
-    * silently merge two graphs at restore time and degrade recall).
-    * Swap is delete-then-rename — the single-writer contract of the
-    * table layer (SURVEY.md §7.4); readers mid-swap belong to the same
-    * job. A failed rename throws rather than leave the graph deleted
-    * behind a live sidecar. Returns whether a compaction ran. */
+    * a small segment), rebuild exactly those ([[compactGraph]]);
+    * otherwise do nothing but read the footers ([[segmentSizes]]).
+    * Rebuilt segments take NEGATIVE ids growing downward from
+    * min(existing, 0) — append paths hand out non-negative
+    * (batchId-keyed) ids, so repeated compactions and future appends
+    * can never collide (a seg-id collision would silently merge two
+    * graphs at restore time and degrade recall). Returns whether a
+    * compaction ran. */
   def compactIfNeeded(spark: org.apache.spark.sql.SparkSession, graphPath: String,
       maxRows: Long, mergeAt: Int,
       m: Int = 16, efConstruction: Int = 128): Boolean = {
-    val graph = readGraph(spark, graphPath)
-    val sizes = graph.groupBy(col("seg")).agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getInt(0), r.getLong(1)))
+    val sizes = segmentSizes(spark, graphPath)
     val small = sizes.filter(_._2 <= maxRows)
-    if (small.length < mergeAt) false
+    if (small.size < mergeAt) false
     else {
-      val nRebuilt = autoSegments(small.map(_._2).sum)
-      val nextSeg = math.min(sizes.map(_._1).min, 0) - nRebuilt
-      val merged = compactSegments(graph, maxRows,
-        numSegments = nRebuilt,
-        segOffset = nextSeg, m = m, efConstruction = efConstruction)
-      val p = new org.apache.hadoop.fs.Path(graphPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(graphPath + "__compacting")
-      merged.write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(p, true)
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"HNSW compaction: rename $tmp -> $p failed")
+      val nRebuilt = autoSegments(small.values.sum)
+      val nextSeg = math.min(sizes.keys.min, 0) - nRebuilt
+      compactGraph(spark, graphPath, small.keySet, nRebuilt, nextSeg, m, efConstruction)
       true
     }
   }

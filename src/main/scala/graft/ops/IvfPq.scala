@@ -179,12 +179,16 @@ object IvfPq {
   }
 
   /** Loads a [[persistIndex]] artifact: (driver index, lazy code table). */
-  def loadIndex(spark: org.apache.spark.sql.SparkSession, root: String): (Index, DataFrame) = {
+  def loadIndex(spark: org.apache.spark.sql.SparkSession, root: String): (Index, DataFrame) =
+    (readIndex(spark, root), loadCodes(spark, s"$root/codes"))
+
+  /** The driver artifact of a [[persistIndex]] root alone — no code
+    * table, so no parquet schema read. */
+  def readIndex(spark: org.apache.spark.sql.SparkSession, root: String): Index = {
     val p = new org.apache.hadoop.fs.Path(s"$root/index.bin")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = new java.io.ObjectInputStream(fs.open(p))
-    val index = try in.readObject().asInstanceOf[Index] finally in.close()
-    (index, loadCodes(spark, s"$root/codes"))
+    try in.readObject().asInstanceOf[Index] finally in.close()
   }
 
   /** IVF-ADC search with exact rerank — fully distributed in BOTH

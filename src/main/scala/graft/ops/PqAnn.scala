@@ -88,15 +88,21 @@ object PqAnn {
     }
     val centroids = Array.tabulate(m) { s =>
       val sub = sample.map(v => java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim))
-      // k-means++ seeding
+      // k-means++ seeding; minD(i) is sample i's squared distance to
+      // its nearest centre so far, updated against each new centre only
+      // (O(k·n) per subspace, not O(k²·n))
       val cents = scala.collection.mutable.ArrayBuffer(sub(rnd.nextInt(sub.length)))
+      val minD = Array.fill(sub.length)(Float.PositiveInfinity)
       while (cents.size < k) {
-        val d2 = sub.map(v => cents.map(c => sq(v, c)).min.toDouble)
+        val newest = cents.last
+        var i = 0
+        while (i < sub.length) { minD(i) = math.min(minD(i), sq(sub(i), newest)); i += 1 }
+        val d2 = minD.map(_.toDouble)
         val total = d2.sum
         if (total == 0) cents += sub(rnd.nextInt(sub.length))
         else {
           var r = rnd.nextDouble() * total
-          var i = 0
+          i = 0
           while (i < sub.length - 1 && r > d2(i)) { r -= d2(i); i += 1 }
           cents += sub(i)
         }

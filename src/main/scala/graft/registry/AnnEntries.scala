@@ -132,8 +132,10 @@ object AnnEntries {
         }
         p
       }
+      val maxRows = emb.count() / 8
+      val small = ops.Hnsw.segmentSizes(s, path).collect { case (seg, n) if n <= maxRows => seg }
       val merged = ops.Hnsw.compactSegments(ops.Hnsw.readGraph(s, path),
-        maxRows = emb.count() / 8, numSegments = 2, segOffset = 100)
+        small.toSet, numSegments = 2, segOffset = 100)
       val cmpPath = core.Scratch.dir(s, "graft-hnsw-cmp2")
       merged.write.mode("overwrite").parquet(cmpPath)
       // insert-path auto-trigger leg (VectorTable.autoCompactHnsw):

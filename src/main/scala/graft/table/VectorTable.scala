@@ -194,27 +194,22 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     * ([[graft.ops.Hnsw.compactSegments]]): segments at or below
     * `maxRows` rebuild into fresh auto-sized graphs, larger survivors
     * pass through untouched. Run when inserts have accumulated enough
-    * delta segments to bloat the probe fan-out. The graph swap is
-    * delete-then-rename; a failed rename throws before the sidecar
-    * advances — the graph is gone, and the caller must hear it rather
-    * than have queries fall back to the exact path in silence. */
+    * delta segments to bloat the probe fan-out. Segment sizes come from
+    * the graph files' footers ([[graft.ops.Hnsw.segmentSizes]]). The
+    * graph swap ([[graft.ops.Hnsw.compactGraph]]) throws on a failed
+    * delete or rename before the sidecar advances — the caller must
+    * hear it rather than have queries fall back to the exact path in
+    * silence. */
   def compactHnswIndex(maxRows: Long = graft.ops.Hnsw.RowsPerSegment / 2): this.type = {
     hnswIndexMeta.foreach { meta =>
-      val graph = graft.ops.Hnsw.readGraph(spark, hnswGraphPath.toString)
-      val smallRows = graph.groupBy(col("seg")).agg(count(lit(1)).as("n"))
-        .where(col("n") <= maxRows).agg(sum(col("n"))).head.get(0)
-      val nRebuild = Option(smallRows).map(_.asInstanceOf[Long]).getOrElse(0L)
+      val small = graft.ops.Hnsw.segmentSizes(spark, hnswGraphPath.toString)
+        .filter(_._2 <= maxRows)
+      val nRebuild = small.values.sum
       if (nRebuild > 0L) {
-        val merged = graft.ops.Hnsw.compactSegments(graph, maxRows,
-          numSegments = graft.ops.Hnsw.autoSegments(nRebuild),
-          segOffset = meta.segments, m = meta.m, efConstruction = meta.efConstruction)
-        val tmp = new Path(root + ".hnsw__compacting")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(hnswGraphPath, true)
-        if (!fs.rename(tmp, hnswGraphPath))
-          throw new java.io.IOException(s"HNSW compaction: rename $tmp -> $hnswGraphPath failed")
-        writeHnswMeta(meta.copy(
-          segments = meta.segments + graft.ops.Hnsw.autoSegments(nRebuild)))
+        val nSegs = graft.ops.Hnsw.autoSegments(nRebuild)
+        graft.ops.Hnsw.compactGraph(spark, hnswGraphPath.toString, small.keySet,
+          nSegs, meta.segments, meta.m, meta.efConstruction)
+        writeHnswMeta(meta.copy(segments = meta.segments + nSegs))
       }
     }
     this
@@ -233,13 +228,13 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     * segments pass through untouched, so the rebuild cost is
     * proportional to the accumulated SMALL deltas, amortized O(1) per
     * inserted row — the tiered-merge argument). Cost when nothing
-    * triggers: one per-segment count over the graph table. */
+    * triggers: a listing of the graph directory and one footer read per
+    * new graph file — no Spark job. */
   private def autoCompactHnsw(): Unit = hnswIndexMeta.foreach { _ =>
     val mergeAt = spark.conf.get("spark.graft.hnsw.mergeAt", "8").toInt
     val maxRows = graft.ops.Hnsw.RowsPerSegment / 2
-    val nSmall = graft.ops.Hnsw.readGraph(spark, hnswGraphPath.toString)
-      .groupBy(col("seg")).agg(count(lit(1)).as("n"))
-      .where(col("n") <= maxRows).count()
+    val nSmall = graft.ops.Hnsw.segmentSizes(spark, hnswGraphPath.toString)
+      .count(_._2 <= maxRows)
     if (nSmall >= mergeAt) compactHnswIndex(maxRows)
   }
 
@@ -857,15 +852,35 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
 
   /** Dedup insert — the reference's `INSERT … ON CONFLICT (id) DO NOTHING`
     * (duckvdb.py:56-61) as a left-anti join + append (SURVEY.md §2.3 J1):
-    * first-wins within the batch, skip ids already present.
+    * first-wins within the batch, skip ids already present. The
+    * anti-join reads RAW ids (tombstones included): a deleted id stays
+    * occupied until vacuum — see [[delete]]. Embedding dim is validated
+    * inline via `raise_error` (the reference errors on dim mismatch at
+    * cast time, duckvdb.py:104).
     *
-    * Scale notes: the anti-join is the only wide operation; the existing
-    * side is projected to `id` only (column-pruned parquet scan), so at
-    * 100 TB the shuffle carries just the key column. Embedding dim is
-    * validated inline via `raise_error` — a streaming one-pass check, no
-    * extra action (the reference errors on dim mismatch at cast time,
-    * duckvdb.py:104).
-    */
+    * An un-indexed table appends the fresh rows in one distributed
+    * write; the anti-join is the only wide operation, and its existing
+    * side is the column-pruned `id` scan.
+    *
+    * A table with an HNSW / IVF-PQ / BQ tier keeps the index complete
+    * across inserts: the fresh rows become a NEW graph segment or
+    * appended code rows, and built artifacts are never rewritten (the
+    * Lucene append contract; the reference's insert path never indexes,
+    * duckvdb.py:47-61 vs 43-45). The index delta is written before the
+    * data. Two routes:
+    *  - up to [[VectorTable.driverInsertCap]] fresh rows (one HNSW
+    *    segment): ONE bounded collect evaluates the batch (embedding,
+    *    id, `xxhash64` surrogate, dim gate, dedupe, anti-join), and the
+    *    commit runs from the collected rows — the delta segment is built
+    *    in-process ([[graft.ops.Hnsw.buildSegment]], the segment
+    *    [[graft.ops.Hnsw.buildGraph]] would give them), the IVF-PQ and
+    *    BQ codes are encoded from the same rows, and the graph delta and
+    *    the data land as one file each; a batch with no fresh row
+    *    writes nothing;
+    *  - a larger batch persists the fresh rows, counts them and builds
+    *    its delta segments with [[graft.ops.Hnsw.buildGraph]].
+    * Either way the merge-policy check ([[autoCompactHnsw]]) then reads
+    * graph footers and runs no Spark job unless it folds. */
   def insert(batch: DataFrame): Unit = WriterLock.withLock(fs, root) {
     val checked = batch
       .select(VectorSchema.ID, VectorSchema.METADATA, VectorSchema.EMBEDDING)
@@ -876,64 +891,90 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
     // anti-join unconditionally: against an empty table it is an
     // identity with a near-zero build side, and skipping it would cost
     // a driver-side existence job (df.isEmpty) on EVERY insert — at
-    // scale the constant join beats the extra action. Joins RAW ids
-    // (tombstones included): a deleted id stays occupied until vacuum —
-    // see [[delete]].
+    // scale the constant join beats the extra action
     val fresh = deduped.join(rawDf.select(VectorSchema.ID), Seq(VectorSchema.ID), "left_anti")
     if (hnswIndexMeta.isEmpty && ivfPqIndexMeta.isEmpty && bqIndexMeta.isEmpty) {
       onDiskColumns(fresh, dim).write.mode("append").parquet(root)
     } else {
-      // keep the persisted index complete across inserts: the fresh
-      // rows become NEW index segments / appended code rows; built
-      // artifacts are never rewritten (the Lucene append contract,
-      // strictly better than the reference, whose insert path never
-      // indexes — duckvdb.py:47-61 vs 43-45). The INDEX delta is
-      // written FIRST: appending to `root` invalidates every cached
-      // plan reading it (including `fresh` itself), so an index build
-      // after the data append would anti-join the batch against its
-      // own appended rows and see nothing. The count() materializes
-      // the cache, so the later data append reuses it.
-      fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val vecs = surrogates(fresh)
-        val nNew = vecs.count()
-        if (nNew > 0L) {
-          hnswIndexMeta.foreach { meta =>
-            val deltaSegs = graft.ops.Hnsw.autoSegments(nNew)
-            graft.ops.Hnsw.buildGraph(vecs, numSegments = deltaSegs,
-                segOffset = meta.segments, m = meta.m, efConstruction = meta.efConstruction)
-              .write.mode("append").parquet(hnswGraphPath.toString)
-            // an unknown stat (-1: pre-stat sidecar) stays unknown —
-            // -1 + nNew would fabricate a tiny "index size" and skew
-            // every selectivity-priced probe
-            writeHnswMeta(meta.copy(segments = meta.segments + deltaSegs,
-              rows = if (meta.rows < 0L) -1L else meta.rows + nNew))
-          }
-          // IVF-PQ: map-only encode against the FROZEN codebooks —
-          // the delta lands inside the existing cell directories
-          // (quantizer staleness is the probe's recall gate's problem,
-          // not a rewrite's). BQ: sign-encode and append — no trained
-          // state at all, so the appended codes are exact peers of the
-          // built ones.
-          ivfPqIndexMeta.foreach { _ =>
-            val (ix, _) = graft.ops.IvfPq.loadIndex(spark, ivfpqRoot)
-            graft.ops.IvfPq.appendCodes(ix, vecs, s"$ivfpqRoot/codes")
-          }
-          bqIndexMeta.foreach { meta =>
-            // encode against the FROZEN build-time mean (the PQ-codebook
-            // freezing contract) so appended codes are exact peers of
-            // the built ones
-            vecs.select(col("vec_id").as("neighbor_id"),
-                graft.functions.BqEncodeExpr
-                  .col(centerCol(col("embedding"), meta.mean)).as("code"))
-              .write.mode("append").parquet(bqCodesPath.toString)
-          }
-        }
-        onDiskColumns(fresh, dim).write.mode("append").parquet(root)
-        // merge policy AFTER the append is durable: accumulated small
-        // delta segments fold once they cross the mergeAt threshold
-        autoCompactHnsw()
-      } finally fresh.unpersist(blocking = false)
+      val cap = VectorTable.driverInsertCap.value
+      val withVecId = fresh.withColumn("vec_id", xxhash64(col(VectorSchema.ID)))
+      // coalesce(1): ONE task pulls rows until the limit (the
+      // GvdbRowLevel.collectKeys pattern)
+      val collected =
+        if (cap <= 0) None
+        else Some(withVecId.coalesce(1).limit(cap + 1).collect()).filter(_.length <= cap)
+      collected match {
+        case Some(rows) => insertCollected(rows, withVecId.schema)
+        case None => insertDistributed(fresh)
+      }
+      // merge policy AFTER the append is durable: accumulated small
+      // delta segments fold once they cross the mergeAt threshold
+      autoCompactHnsw()
+    }
+  }
+
+  /** The driver route of an indexed [[insert]]: `rows` (id, metadata,
+    * embedding, vec_id) are the batch's fresh rows, at most one
+    * segment's worth. */
+  private def insertCollected(rows: Array[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType): Unit = if (rows.nonEmpty) {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val local = spark.createDataFrame(rows.toSeq.asJava, schema).coalesce(1)
+    appendIndexDelta(local.select(col("vec_id"), col(VectorSchema.EMBEDDING).as("embedding")),
+        rows.length, meta =>
+      (graft.ops.Hnsw.buildSegment(meta.segments,
+          rows.map(r => (r.getLong(3), r.getSeq[Float](2).toArray)), meta.m, meta.efConstruction)
+        .toSeq.toDF("seg", "id", "adj", "emb").coalesce(1), 1))
+    onDiskColumns(local.drop("vec_id"), dim).write.mode("append").parquet(root)
+  }
+
+  /** The distributed route of an indexed [[insert]], for batches above
+    * [[VectorTable.driverInsertCap]]. `fresh` is persisted: appending
+    * to `root` invalidates every cached plan reading it, so it is
+    * materialized (the count) before the index delta and reused by the
+    * data append. */
+  private def insertDistributed(fresh: DataFrame): Unit = {
+    fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val vecs = surrogates(fresh)
+      val nNew = vecs.count()
+      if (nNew > 0L) appendIndexDelta(vecs, nNew, meta => {
+        val deltaSegs = graft.ops.Hnsw.autoSegments(nNew)
+        (graft.ops.Hnsw.buildGraph(vecs, numSegments = deltaSegs,
+          segOffset = meta.segments, m = meta.m, efConstruction = meta.efConstruction), deltaSegs)
+      })
+      onDiskColumns(fresh, dim).write.mode("append").parquet(root)
+    } finally fresh.unpersist(blocking = false)
+  }
+
+  /** Appends `nNew` fresh rows to the active index tier: `vecs` are
+    * their (vec_id, embedding) surrogates, and `graphDelta` gives their
+    * HNSW segment rows and segment count for the current sidecar.
+    * IVF-PQ: map-only encode against the FROZEN codebooks — the delta
+    * lands inside the existing cell directories (quantizer staleness is
+    * the probe's recall gate's problem, not a rewrite's). BQ: encode
+    * against the FROZEN build-time mean, so appended codes are exact
+    * peers of the built ones. */
+  private def appendIndexDelta(vecs: DataFrame, nNew: Long,
+      graphDelta: HnswIndexMeta => (DataFrame, Int)): Unit = {
+    hnswIndexMeta.foreach { meta =>
+      val (delta, deltaSegs) = graphDelta(meta)
+      delta.write.mode("append").parquet(hnswGraphPath.toString)
+      // an unknown stat (-1: pre-stat sidecar) stays unknown — -1 + nNew
+      // would fabricate a tiny "index size" and skew every
+      // selectivity-priced probe
+      writeHnswMeta(meta.copy(segments = meta.segments + deltaSegs,
+        rows = if (meta.rows < 0L) -1L else meta.rows + nNew))
+    }
+    ivfPqIndexMeta.foreach { _ =>
+      graft.ops.IvfPq.appendCodes(graft.ops.IvfPq.readIndex(spark, ivfpqRoot), vecs,
+        s"$ivfpqRoot/codes")
+    }
+    bqIndexMeta.foreach { meta =>
+      vecs.select(col("vec_id").as("neighbor_id"),
+          graft.functions.BqEncodeExpr.col(centerCol(col("embedding"), meta.mean)).as("code"))
+        .write.mode("append").parquet(bqCodesPath.toString)
     }
   }
 
@@ -961,6 +1002,14 @@ class VectorTable(spark: SparkSession, val root: String, val dim: Int) {
 }
 
 object VectorTable {
+
+  /** The largest batch of fresh rows an indexed [[VectorTable.insert]]
+    * commits from the driver: one HNSW segment's worth, so the delta is
+    * exactly one segment. A dynamic scope rather than a setting, so a
+    * test can force the distributed route on a small fixture
+    * (`driverInsertCap.withValue(0) { ... }`). */
+  private[graft] val driverInsertCap =
+    new scala.util.DynamicVariable[Int](graft.ops.Hnsw.RowsPerSegment.toInt)
 
   /** The write-side dimension gate's failure: raised for a row whose
     * embedding length is not `d`. The message states the dimension

@@ -145,8 +145,10 @@ class HnswSpec extends SparkSpec with Matchers {
     }
     val g = spark.read.parquet(path)
     val baseRows = g.where($"seg" < 4).orderBy($"seg", $"id").collect().toSeq
-    val merged = ops.Hnsw.compactSegments(g, maxRows = emb.count() / 8,
-      numSegments = 2, segOffset = 100)
+    val maxRows = emb.count() / 8
+    val small = ops.Hnsw.segmentSizes(spark, path).collect { case (seg, n) if n <= maxRows => seg }
+    small.toSet shouldBe Set(4, 5, 6, 7)
+    val merged = ops.Hnsw.compactSegments(g, small.toSet, numSegments = 2, segOffset = 100)
     val segs = merged.select("seg").distinct().collect().map(_.getInt(0)).toSet
     segs shouldBe Set(0, 1, 2, 3, 100, 101)
     // survivors byte-identical, every node still present exactly once
@@ -244,6 +246,52 @@ class HnswSpec extends SparkSpec with Matchers {
     val e = intercept[java.io.IOException](Hnsw.compactIfNeeded(spark,
       SwapRenameFailingFs.on(spark, s"$dir/graph"), maxRows = 1000, mergeAt = 4))
     e.getMessage should include ("rename")
+  }
+
+  test("a refused graph-swap delete throws instead of nesting the new graph in the old") {
+    import spark.implicits._
+    val dir = tempDir("graft-hnsw-del")
+    (0 until 4).foreach { b =>
+      Hnsw.buildGraph(emb.where($"vec_id" % 4 === b), numSegments = 1, segOffset = b)
+        .write.mode("append").parquet(s"$dir/graph")
+    }
+    val before = Hnsw.segmentSizes(spark, s"$dir/graph")
+    val e = intercept[java.io.IOException](Hnsw.compactIfNeeded(spark,
+      GraphDeleteRefusingFs.on(spark, s"$dir/graph"), maxRows = 1000, mergeAt = 4))
+    e.getMessage should include ("delete")
+    // the old graph is still whole and holds nothing but its own files
+    Hnsw.segmentSizes(spark, s"$dir/graph") shouldBe before
+    new java.io.File(s"$dir/graph").listFiles().map(_.getName)
+      .filter(_.contains("compacting")) shouldBe empty
+  }
+
+  test("every buildGraph part file holds one segment, and footers size the segments") {
+    val path = tempDir("graft-hnsw-files") + "/graph"
+    Hnsw.buildGraph(emb, numSegments = 5, segOffset = 3).write.parquet(path)
+    val files = new java.io.File(path).listFiles().map(_.getPath).filter(_.endsWith(".parquet"))
+    files.length shouldBe 5
+    files.map(f => Hnsw.readGraph(spark, f).select("seg").distinct().count()).toSet shouldBe Set(1L)
+    val counted = Hnsw.readGraph(spark, path).groupBy("seg").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    counted.keySet shouldBe (3 to 7).toSet
+    Hnsw.segmentSizes(spark, path) shouldBe counted
+    // a file holding several segments (a compaction's pass-through rows)
+    // is sized from its seg column
+    val mixed = tempDir("graft-hnsw-mixed") + "/graph"
+    Hnsw.readGraph(spark, path).coalesce(1).write.parquet(mixed)
+    Hnsw.segmentSizes(spark, mixed) shouldBe counted
+  }
+
+  test("the driver-built delta segment equals buildGraph(numSegments = 1, segOffset)") {
+    import spark.implicits._
+    val batch = emb.where($"vec_id" % 7 === 2)
+    val rows = batch.select($"vec_id", $"embedding").as[(Long, Array[Float])].collect()
+    def show(r: (Int, Long, Array[Array[Long]], Array[Float])) =
+      (r._1, r._2, r._3.map(_.toSeq).toSeq, r._4.toSeq)
+    val built = Hnsw.buildGraph(batch, numSegments = 1, segOffset = 9)
+      .as[(Int, Long, Array[Array[Long]], Array[Float])].collect().map(show).sortBy(_._2).toSeq
+    // input order must not matter: the segment inserts in id order
+    Hnsw.buildSegment(9, rows.reverse, m = 16, efConstruction = 128).map(show).toSeq shouldBe built
   }
 
   test("streaming append: micro-batch delta segments are searchable, recall gate green") {

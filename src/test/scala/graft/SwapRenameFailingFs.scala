@@ -30,3 +30,25 @@ object SwapRenameFailingFs {
     s"$Scheme://$path"
   }
 }
+
+/** A local filesystem under its own scheme whose delete of an HNSW
+  * graph directory (`*.hnsw`, a table's graph; `graph`, a bare one)
+  * returns false and deletes nothing. Every other call goes through,
+  * so only the delete half of a graph swap fails. */
+class GraphDeleteRefusingFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${GraphDeleteRefusingFs.Scheme}:///")
+  override def getScheme: String = GraphDeleteRefusingFs.Scheme
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    !(p.getName.endsWith(".hnsw") || p.getName == "graph") && super.delete(p, recursive)
+}
+
+object GraphDeleteRefusingFs {
+  val Scheme = "refusedelete"
+
+  /** `path` (an absolute local path) through the refusing filesystem. */
+  def on(spark: SparkSession, path: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.$Scheme.impl", classOf[GraphDeleteRefusingFs].getName)
+    s"$Scheme://$path"
+  }
+}

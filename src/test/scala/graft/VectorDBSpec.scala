@@ -49,9 +49,9 @@ class VectorDBSpec extends SparkSpec with Matchers {
     new VectorDB(spark, name, wh, "hashing", Map("dim" -> "16"), dim = 16, newTable = true)
   }
 
-  private def docs(n: Int) = {
+  private def docs(n: Int, from: Int = 0) = {
     import spark.implicits._
-    (0 until n).map(i =>
+    (from until n).map(i =>
       s"""{"id": $i, "text": "doc number $i about ${if (i % 2 == 0) "spark joins" else "duck ponds"}", "group": ${i % 3}}""")
       .toDS()
   }
@@ -189,6 +189,94 @@ class VectorDBSpec extends SparkSpec with Matchers {
     e.getMessage should include ("rename")
     db.table.hnswIndexMeta.get shouldBe before
     db.table.drop()
+  }
+
+  test("a refused HNSW graph-swap delete throws and leaves the sidecar unadvanced") {
+    val db = newDb("t6del")
+    db.insert(docs(40), embedField = Some("text"))
+    db.table.buildHnswIndex()
+    db.insert(docs(50), embedField = Some("text")) // one small delta segment
+    val before = db.table.hnswIndexMeta.get
+    val failing = new graft.table.VectorTable(spark,
+      GraphDeleteRefusingFs.on(spark, db.table.root), db.dim)
+    val e = intercept[java.io.IOException](failing.compactHnswIndex(maxRows = 100))
+    e.getMessage should include ("delete")
+    db.table.hnswIndexMeta.get shouldBe before
+    db.table.hnswGraph.get.count() shouldBe 50
+    db.table.drop()
+  }
+
+  test("a 20-doc insert into an HNSW table runs at most 5 jobs and writes one file each") {
+    val db = newDb("t6ins")
+    db.insert(docs(40), embedField = Some("text"))
+    db.table.buildHnswIndex()
+    def parts(dir: String) =
+      new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+    val (data0, graph0) = (parts(db.table.root), parts(db.table.root + ".hnsw"))
+    // the bounded collect (its shuffle and broadcast stages included),
+    // the graph delta write and the data write
+    jobsOf(db.insert(docs(60, from = 40), embedField = Some("text"))) should be <= 5
+    parts(db.table.root) shouldBe data0 + 1
+    parts(db.table.root + ".hnsw") shouldBe graph0 + 1
+    // the merge-policy check sizes segments from the graph footers on
+    // the driver: with no fold due it adds no job
+    jobsOf { graft.ops.Hnsw.segmentSizes(spark, db.table.root + ".hnsw"); () } shouldBe 0
+    db.table.hnswIndexMeta.get.segments shouldBe 2
+    db.table.hnswGraph.get.count() shouldBe 60
+    db.query("spark joins", k = 60).collect().map(_.id).toSet.size shouldBe 60
+    db.table.drop()
+  }
+
+  // the driver route (≤ driverInsertCap fresh rows) and the distributed
+  // route (forced with the cap at 0) must commit the same table, index
+  // and sidecars; with mergeAt = 3 the HNSW sequence folds twice
+  for (tier <- Seq("hnsw", "ivfpq", "bq")) {
+    test(s"indexed insert: driver and distributed routes leave equal $tier tables") {
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*))).collect()
+          .map(_.getString(0)).sorted.toSeq
+      def commit(name: String) = {
+        val db = newDb(name)
+        db.insert(docs(40), embedField = Some("text"))
+        tier match {
+          case "hnsw" => db.table.buildHnswIndex()
+          case "ivfpq" => db.table.buildIvfPqIndex(nCells = 4)
+          case _ => db.table.buildBqIndex()
+        }
+        db.insert(docs(50), embedField = Some("text"))
+        db.insert(docs(50), embedField = Some("text")) // nothing fresh
+        db.insert(docs(56, from = 50).union(docs(56, from = 50)), embedField = Some("text"))
+        db.insert(docs(70), embedField = Some("text"))
+        db.insert(docs(75, from = 65), embedField = Some("text"))
+        val root = db.table.root
+        val sidecars = Seq(".hnsw_index.json", ".ivfpq_index.json", ".ivfpq/index.bin",
+            ".bq_index.json")
+          .map(s => s -> new java.io.File(root + s)).filter(_._2.exists)
+          .map { case (s, f) => s -> java.nio.file.Files.readAllBytes(f.toPath).toSeq }
+        val index = tier match {
+          case "hnsw" => rows(db.table.hnswGraph.get)
+          case "ivfpq" => rows(db.table.ivfPqIndex.get._2)
+          case _ => rows(db.table.bqCodes.get)
+        }
+        val answers = Seq("spark joins", "duck ponds").map(t =>
+          db.query(t, k = 10).collect().toSeq)
+        val out = (rows(db.table.df), index, sidecars, answers)
+        db.table.drop()
+        out
+      }
+      spark.conf.set("spark.graft.hnsw.mergeAt", "3")
+      try {
+        val driver = commit(s"tp-$tier-d")
+        val distributed =
+          graft.table.VectorTable.driverInsertCap.withValue(0)(commit(s"tp-$tier-x"))
+        driver._1.length shouldBe 75
+        driver._3 should not be empty
+        driver._1 shouldBe distributed._1
+        driver._2 shouldBe distributed._2
+        driver._3 shouldBe distributed._3
+        driver._4 shouldBe distributed._4
+      } finally spark.conf.unset("spark.graft.hnsw.mergeAt")
+    }
   }
 
   test("indexed query under merge-on-read deletes still returns k live rows") {

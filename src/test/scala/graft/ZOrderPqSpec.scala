@@ -89,6 +89,66 @@ class ZOrderPqSpec extends SparkSpec with Matchers {
     a.centroids.flatten.flatten.toSeq shouldBe b.centroids.flatten.flatten.toSeq
   }
 
+  test("PQ training's codebooks equal the quadratic k-means++ seeding's, cell for cell") {
+    // the k-means++ seeding as first written: every sample's distance to
+    // EVERY centre so far, recomputed per new centre, then Lloyd rounds
+    def quadraticTrain(sample: Array[Array[Float]], dim: Int, m: Int, k: Int,
+        iters: Int, seed: Long): Array[Array[Array[Float]]] = {
+      val subDim = dim / m
+      val rnd = new scala.util.Random(seed)
+      def sq(a: Array[Float], b: Array[Float]): Float = {
+        var d = 0f; var j = 0
+        while (j < a.length) { val t = a(j) - b(j); d += t * t; j += 1 }
+        d
+      }
+      Array.tabulate(m) { s =>
+        val sub = sample.map(v => java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim))
+        val cents = scala.collection.mutable.ArrayBuffer(sub(rnd.nextInt(sub.length)))
+        while (cents.size < k) {
+          val d2 = sub.map(v => cents.map(c => sq(v, c)).min.toDouble)
+          val total = d2.sum
+          if (total == 0) cents += sub(rnd.nextInt(sub.length))
+          else {
+            var r = rnd.nextDouble() * total
+            var i = 0
+            while (i < sub.length - 1 && r > d2(i)) { r -= d2(i); i += 1 }
+            cents += sub(i)
+          }
+        }
+        var cur = cents.toArray
+        (0 until iters).foreach { _ =>
+          val sums = Array.fill(k)(new Array[Double](subDim))
+          val counts = new Array[Int](k)
+          sub.foreach { v =>
+            var best = 0; var bestD = Float.MaxValue; var c = 0
+            while (c < k) { val d = sq(v, cur(c)); if (d < bestD) { bestD = d; best = c }; c += 1 }
+            counts(best) += 1
+            (0 until subDim).foreach(j => sums(best)(j) += v(j))
+          }
+          cur = Array.tabulate(k) { c =>
+            if (counts(c) == 0) cur(c)
+            else Array.tabulate(subDim)(j => (sums(c)(j) / counts(c)).toFloat)
+          }
+        }
+        cur
+      }
+    }
+    val rnd = new scala.util.Random(11)
+    val spread = Array.fill(600)(Array.fill(16)(rnd.nextFloat() * 2f - 1f))
+    // 3 distinct vectors for 8 centres: the seeding runs out of mass and
+    // takes its uniform-draw branch
+    val few = Array.tabulate(60)(i => spread(i % 3).clone())
+    for ((sample, k) <- Seq((spread, 32), (few, 8))) {
+      val got = PqAnn.train(sample, dim = 16, m = 4, k = k, iters = 3, seed = 5L).centroids
+      val want = quadraticTrain(sample, dim = 16, m = 4, k = k, iters = 3, seed = 5L)
+      got.length shouldBe want.length
+      for (s <- want.indices; c <- want(s).indices)
+        withClue(s"subspace $s centre $c:") {
+          java.util.Arrays.equals(got(s)(c), want(s)(c)) shouldBe true
+        }
+    }
+  }
+
   test("SQ8: per-component round-trip error bounded by half a quantization step") {
     import spark.implicits._
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(50)
